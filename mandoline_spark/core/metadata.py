@@ -15,7 +15,6 @@ import math
 import time
 from typing import Any, Mapping
 
-from . import chunk as ck
 from . import slice as sl
 from .slab import DTYPES
 from .slice import Slice
@@ -171,15 +170,6 @@ def get_chunk_grid_slice(token: Mapping[str, Any], var: str) -> Slice:
     stop = tuple(token["dimensions"][d] for d in dims)
     step = tuple(token["chunk-dimensions"][d] for d in dims)
     return sl.mk_slice(tuple(0 for _ in dims), stop, step)
-
-
-def get_chunk_slice(
-    token: Mapping[str, Any], var: str, coord: tuple[int, ...]
-) -> Slice:
-    """Data-space slice of the chunk at ``coord`` — NOT cropped to the
-    dataset extent (variable.clj:58-74)."""
-    grid = get_chunk_grid_slice(token, var)
-    return ck.from_chunk_coordinate(grid, tuple(coord))
 
 
 # -- JSON round-trip with bare NaN (utils.clj:106-122) -----------------------

@@ -470,26 +470,6 @@ def cosine_topk_lsh(
     )
 
 
-def with_unit(df: DataFrame, vec_col: str, out_col: str = "_unit") -> DataFrame:
-    """Add a unit-normalized double vector column (zero vectors stay
-    zero).  The norm is materialized as its OWN column first and the
-    normalize lambda references that attribute: inlining the norm
-    aggregate into the lambda would re-evaluate it per element —
-    O(dim²) interpreted work per row (higher-order functions are
-    CodegenFallback), measured ~15s instead of ~1s to cell-assign a 2k
-    x 64-dim corpus.  The norm alias is referenced twice, so Catalyst's
-    CollapseProject keeps it un-collapsed."""
-    nn = df.selectExpr(
-        "*", f"{_norm_sql(_as_double_sql(vec_col))} AS _nrm"
-    )
-    return nn.selectExpr(
-        "*",
-        f"transform({_as_double_sql(vec_col)},"
-        f" x -> CASE WHEN _nrm > 0 THEN x / _nrm ELSE 0.0D END)"
-        f" AS `{out_col}`",
-    ).drop("_nrm")
-
-
 def train_ivf_centroids(
     corpus: DataFrame,
     n_cells: int = 16,

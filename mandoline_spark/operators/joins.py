@@ -43,10 +43,13 @@ def asof_join(
     q45 rewrite; results identical by the window order argument below:
     the carried ``last()`` at equal ``on`` is the max-``tie_col`` row).
     Rows that tie on BOTH the key and ``tie_col`` break by a unique
-    row id (``_seq2``), so which row's OTHER value columns are carried
-    is a fixed function of the input rather than partition order
-    (ADVICE r15 — without it, callers with value columns beyond
-    ``tie_col`` got a nondeterministic carry on full ties).
+    row id (``_seq2``), so one execution carries ONE well-defined row's
+    OTHER value columns (ADVICE r15 — without it, callers with value
+    columns beyond ``tie_col`` got an arbitrary carry on full ties).
+    The id is ``monotonically_increasing_id``, which encodes the
+    partition layout: the winner is fixed within an execution, not a
+    function of the input alone, and may differ when the right side is
+    partitioned differently (another plan, AQE setting or recompute).
     """
     lcols = left.columns
     rvals = [c for c in right.columns if c not in {on, by}]

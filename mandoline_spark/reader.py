@@ -11,6 +11,17 @@ Chunk coordinates absent from the index read as fill
 (impl.clj:221-223): ``get_slice`` allocates a fill-initialized result
 and merges the returned pieces into it.
 
+Reads whose touched chunks fit the driver anyway (small reads, full
+scans, the box recursion of small strided reads) skip the decode stage
+and paste raw blobs into the result on the driver.  On a local store
+within the driver caps (``Connection.index_map_max_entries`` index
+rows, ``Connection.blob_local_fetch_max_bytes`` of chunk table) those
+reads resolve the index and fetch the blobs with pyarrow and launch no
+Spark job at all — the default, read cache on or off.
+``Connection.cache_reads`` only adds memoization on top (blob LRU,
+index map, cached table DataFrames).  Other backends and over-cap
+tables read the blobs through Spark.
+
 Scale notes: the index is pruned before any IO (predicate on plain int
 columns → Parquet row-group pruning); the chunks join is hash-equi and
 AQE-broadcastable when the pruned slice is small; decode/clip runs in
@@ -338,8 +349,10 @@ def _small_read_blobs_df(
     request: Slice,
     touched_bytes: int,
 ) -> DataFrame | None:
-    """(coords…, blob) plan for the driver-side small-read path, or
-    None when the variable has no stored chunks.
+    """(coords…, blob) Spark plan for the driver-side small-read path
+    when the blobs cannot be read on the driver directly (non-local
+    backend, over-cap index or chunk table), or None when the variable
+    has no stored chunks.
 
     Rebalances DECOMPRESSED bytes before the Arrow conversion — the
     same guard :func:`_pieces_df` applies to its decode stage.  Scan
@@ -354,8 +367,10 @@ def _small_read_blobs_df(
     chunks) satisfies target >= cores yet gains nothing from an
     exchange."""
     idx = pruned_index_df(conn, token, var, request)
+    if idx is None:
+        return None
     chunks = conn.chunks_df()
-    if idx is None or chunks is None:
+    if chunks is None:
         return None
     ccols = [f"c{i}" for i in range(request.ndim)]
     blobs_df = _join_blobs(conn, token, var, request, idx, chunks).select(
@@ -514,10 +529,15 @@ def get_slice(
             view = np.frombuffer(buf, dtype=le_dtype).reshape(cdims)
             result.data[tuple(dst)] = view[tuple(src)]
 
-        # cached path: coord→hash map + blob LRU ⇒ repeated reads of
-        # warm chunks run ZERO Spark jobs (the reference's read-wrapper
-        # stack: CachingChunkStore + read-only index cache)
-        imap = conn.index_map(token["version-id"], var)
+        # driver tier: on a local store within the driver caps the
+        # index and blobs are read with pyarrow — ZERO Spark jobs, cache
+        # on or off; cache_reads adds the reference's read-wrapper
+        # stack (CachingChunkStore + read-only index cache), so warm
+        # chunks skip even the file reads.  None from either call sends
+        # the read to the Spark plan below.
+        imap = conn.index_map(
+            token["version-id"], var, [(lo, hi) for lo, hi, _ in csets]
+        )
         if imap is not None:
             import itertools
 

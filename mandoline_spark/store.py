@@ -64,7 +64,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import fs as fsmod
 from .core import metadata as md
-from .core import slab as sb
 
 # dots allowed INSIDE names, but a name may not BE dots: "." / ".."
 # resolve to the root itself / its parent on path-based backends —
@@ -202,12 +201,20 @@ class Store:
 class Connection:
     """Per-dataset handle (Connection protocol, protocol.clj:44-103).
 
-    ``cache_reads`` is the Spark shape of the reference's read-through
-    chunk/index caches (CachingChunkStore / CachingIndex, cache.clj:
-    9-14, 87-113 — "most queries are dominated by requests for the same
-    chunk"): table DataFrames are memoized and ``.cache()``d, so
-    repeated slice reads hit the block manager instead of re-reading
-    Parquet.  Safe for readers; writers invalidate on append (the
+    On a LOCAL store, small-route reads resolve the index and fetch the
+    chunk blobs with pyarrow on the driver — zero Spark jobs — whenever
+    the index and the chunk table fit the driver caps below, whatever
+    ``cache_reads`` says; other backends and over-cap tables read
+    through Spark.
+
+    ``cache_reads`` adds memoization only — the Spark shape of the
+    reference's read-through chunk/index caches (CachingChunkStore /
+    CachingIndex, cache.clj:9-14, 87-113 — "most queries are dominated
+    by requests for the same chunk"): a blob LRU, a coord→hash map per
+    (version, var), and memoized ``.cache()``d table DataFrames, so
+    repeated slice reads skip the fetch altogether.  A cache-off
+    connection memoizes nothing and sees every commit on its next
+    read.  Safe for readers; writers invalidate on append (the
     reference's write-back index cache is deliberately NOT reproduced —
     it was disabled for its lost-update bug, impl.clj:144-156)."""
 
@@ -226,17 +233,15 @@ class Connection:
     _blob_lru: dict = field(default_factory=dict, repr=False)
     _index_map_cache: dict = field(default_factory=dict, repr=False)
     blob_lru_size: int = 1000
+    # Driver-side index cap: a resolved index above this many entries
+    # stays on the distributed path.
     index_map_max_entries: int = 2_000_000
-    # Driver-side blob point-fetch eligibility: when the LOCAL chunk
-    # table's on-disk footprint is under this bound, LRU misses are
-    # read with pyarrow on the driver (statistics-pruned, zero Spark
-    # jobs — the interactive point-read path); above it, misses go
-    # through the filtered Spark scan.  The measured size is memoized
-    # and cleared with the table caches, so it can go stale against a
-    # CONCURRENT writer — the consequence is bounded extra driver
-    # bytes on one fetch, never wrong data (content addressing).
+    # Driver-side blob fetch eligibility: when the LOCAL chunk table's
+    # on-disk footprint is under this bound, blobs are read with
+    # pyarrow on the driver (zero Spark jobs); above it they go through
+    # the Spark scan.  Measured per fetch, never memoized, so a table
+    # that grew past the bound is never fetched on a stale size.
     blob_local_fetch_max_bytes: int = 256 << 20
-    _chunks_disk_bytes: int | None = field(default=None, repr=False)
     # Serializes the driver-side cache mutations (blob LRU eviction,
     # index-map memo): one Connection is routinely shared by
     # concurrent reader threads (the bench's concurrent8 run, any
@@ -658,7 +663,6 @@ class Connection:
             self._df_cache.clear()
             self._blob_lru.clear()
             self._index_map_cache.clear()
-            self._chunks_disk_bytes = None
             self._cache_epoch += 1
         for df in dropped:  # Spark call outside the lock
             df.unpersist()
@@ -693,7 +697,13 @@ class Connection:
                 break
         return base + [(version, g) for g in gens]
 
-    def _local_index_map(self, version: int, var: str, cap: int):
+    def _local_index_map(
+        self,
+        version: int,
+        var: str,
+        cap: int,
+        box: list[tuple[int, int]] | None = None,
+    ):
         """Driver-side index resolution for LOCAL stores: read the
         generation parquet files with pyarrow and fold the overlay into
         a dict — ZERO Spark jobs, no overlay-plan construction (the
@@ -704,7 +714,12 @@ class Connection:
         index size, so if it exceeds ``cap`` the answer is delegated to
         the Spark limit-collect (returns ``_SPARK_RESOLVE``), which
         decides exactly.  Bytes read stay ≤ the index generations a
-        Spark resolution would scan anyway."""
+        Spark resolution would scan anyway.  ``box`` (inclusive chunk-
+        coordinate bounds per dimension) drops every row outside it
+        before the fold, so a small read builds an O(request) map; the
+        overlay is per coordinate, so filtering each generation first
+        resolves the same winners."""
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         plan = self._local_index_plan(version, var)
@@ -734,20 +749,45 @@ class Connection:
                 key=lambda c: int(c[1:]),
             )
             tbl = pf.read(columns=ccols + ["chunk_hash"])
+            if box is not None:
+                for c, (lo, hi) in zip(ccols, box):
+                    col = tbl.column(c)
+                    tbl = tbl.filter(
+                        pc.and_(
+                            pc.greater_equal(col, lo), pc.less_equal(col, hi)
+                        )
+                    )
             cols = [tbl.column(c).to_pylist() for c in ccols]
-            hashes = tbl.column("chunk_hash").to_pylist()
-            for i, h in enumerate(hashes):
-                m[tuple(int(c[i]) for c in cols)] = h
+            keys = zip(*cols) if cols else [()] * tbl.num_rows
+            m.update(zip(keys, tbl.column("chunk_hash").to_pylist()))
         return m
 
-    def index_map(self, version: int, var: str) -> dict | None:
+    def index_map(
+        self,
+        version: int,
+        var: str,
+        box: list[tuple[int, int]] | None = None,
+    ) -> dict | None:
         """coord-tuple → chunk hash for the RESOLVED (version, var)
-        index, collected to the driver once and memoized.  Returns None
-        (and caches the refusal) when the index exceeds
-        ``index_map_max_entries`` — huge datasets stay on the
-        distributed path."""
+        index, or None when the read should take the Spark path (the
+        index exceeds ``index_map_max_entries``, or no version wrote
+        the variable).
+
+        Without ``cache_reads`` the map is built job-free on LOCAL
+        stores only, restricted to ``box`` (see
+        :meth:`_local_index_map`), and only when the blobs can follow it
+        job-free (:meth:`_local_chunk_files`) — otherwise the Spark read
+        resolves the index inside its own plan and a driver map would
+        be wasted work.  With ``cache_reads`` the WHOLE map is memoized
+        per (version, var), built locally or by one Spark
+        limit-collect."""
         if not self.cache_reads:
-            return None
+            if self._local_chunk_files() is None:
+                return None
+            m = self._local_index_map(
+                version, var, self.index_map_max_entries, box
+            )
+            return None if m is _SPARK_RESOLVE else m
         key = (version, var)
         with self._cache_lock:
             if key in self._index_map_cache:
@@ -791,45 +831,87 @@ class Connection:
             for row in rows
         }
 
-    def _local_blobs(self, hashes: list[str]) -> dict[str, bytes] | None:
-        """Driver-side point fetch of chunk blobs for LOCAL stores whose
-        chunk table fits ``blob_local_fetch_max_bytes`` on disk: a
-        pyarrow dataset scan filtered on the content hash — zero Spark
-        jobs (the Spark path's filtered scan costs a scheduling
-        round-trip per cold read, the dominant cost of interactive
-        point reads).  Returns None when not eligible (remote fs, big
-        table, no chunks yet) — the caller falls back to the Spark
-        scan.  pyarrow prunes row groups on hash statistics where they
-        help; worst case it reads a table already bounded by the byte
-        cap."""
+    def _local_chunk_files(self) -> list[str] | None:
+        """The committed chunk files when blobs may be read on the
+        driver: a LOCAL store whose chunk table is non-empty and within
+        ``blob_local_fetch_max_bytes`` on disk.  None sends the read to
+        the Spark scan (remote or in-memory catalog, big table, no
+        chunks yet)."""
         if not isinstance(self.fs, fsmod.LocalFS):
             return None
-        path = self.chunks_path()
-        if not _has_parquet(self.fs, path):
+        files = _local_parquet_files(self.chunks_path())
+        if not files or (
+            sum(map(os.path.getsize, files)) > self.blob_local_fetch_max_bytes
+        ):
             return None
-        if self._chunks_disk_bytes is None:
-            self._chunks_disk_bytes = self.fs.tree_size(path)
-        if self._chunks_disk_bytes > self.blob_local_fetch_max_bytes:
-            return None
-        import pyarrow.dataset as pads
+        return files
 
-        want = set(hashes)
-        tbl = pads.dataset(path, format="parquet").to_table(
-            columns=["hash", "blob"],
-            filter=pads.field("hash").isin(list(want)),
-        )
-        h = tbl.column("hash").to_pylist()
-        b = tbl.column("blob")
-        out = {h[i]: b[i].as_py() for i in range(len(h))}
-        if set(out) != want:
-            return None  # store inconsistency; let the caller decide
-        return out
+    @staticmethod
+    def _local_blobs(
+        files: list[str], hashes: list[str], copy: bool
+    ) -> dict | None:
+        """Driver-side blob fetch from local chunk files, hash-first:
+        each row group's ``hash`` column is read on its own, and its
+        ``blob`` column only when it holds a wanted hash.  pyarrow does
+        not consult the Parquet bloom filter and SHA-1 min/max
+        statistics prune nothing, so a filtered scan would decompress
+        every blob of the table for a one-chunk read.  A hash stored
+        twice is the same bytes twice (content addressing), so either
+        copy serves.
 
-    def blobs_for(self, hashes: list[str]) -> dict[str, bytes] | None:
-        """hash → raw blob bytes through the LRU (read-through: misses
-        are fetched in one filtered job, hits cost nothing)."""
+        ``copy`` returns ``bytes`` — what the LRU stores, so no cached
+        entry pins a decompressed row group; otherwise the values are
+        zero-copy Arrow buffers for an immediate paste.  None when a
+        hash is missing (store inconsistency; the caller falls back to
+        the Spark scan)."""
+        from concurrent.futures import ThreadPoolExecutor
+
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        want = pa.array(list(set(hashes)), pa.string())
+
+        def fetch(fp: str) -> list:
+            found = []
+            with pq.ParquetFile(fp) as pf:
+                for rg in range(pf.num_row_groups):
+                    h = pf.read_row_group(rg, columns=["hash"]).column("hash")
+                    hit = np.flatnonzero(
+                        pc.is_in(h, value_set=want).to_numpy()
+                    ).tolist()
+                    if hit:
+                        b = pf.read_row_group(rg, columns=["blob"])["blob"]
+                        found += [(h[i], b[i]) for i in hit]
+            return found
+
+        out: dict = {}
+        if not len(want):
+            return out
+        # files decode in parallel: pyarrow releases the GIL while it
+        # reads and decompresses
+        workers = max(1, min(len(files), pa.cpu_count()))
+        with ThreadPoolExecutor(workers) as pool:
+            for found in pool.map(fetch, files):
+                for h, b in found:
+                    out[h.as_py()] = b.as_py() if copy else b.as_buffer()
+        return out if len(out) == len(want) else None
+
+    def blobs_for(self, hashes: list[str]) -> dict | None:
+        """hash → chunk blob fetched on the driver, or None when the
+        read should take the Spark path.
+
+        Without ``cache_reads``: an eligible local chunk table
+        (:meth:`_local_chunk_files`) is read job-free and the values
+        are zero-copy Arrow buffers; anything else returns None.  With
+        ``cache_reads``: read-through the blob LRU (``bytes``) — hits
+        cost nothing, misses are fetched locally when eligible and
+        otherwise in one filtered Spark job."""
         if not self.cache_reads:
-            return None
+            files = self._local_chunk_files()
+            if files is None:
+                return None
+            return self._local_blobs(files, hashes, copy=False)
         out: dict[str, bytes] = {}
         missing = []
         # DISTINCT misses: content addressing dedups identical chunks,
@@ -847,7 +929,12 @@ class Connection:
                 else:
                     missing.append(h)
         if missing:
-            got = self._local_blobs(missing)
+            files = self._local_chunk_files()
+            got = (
+                self._local_blobs(files, missing, copy=True)
+                if files is not None
+                else None
+            )
             if got is None:
                 chunks = self.chunks_df()
                 if chunks is None:
@@ -1045,10 +1132,6 @@ class Connection:
                 return self.index_df(vid, var)
         return None
 
-    def existing_hashes_df(self) -> DataFrame | None:
-        c = self.chunks_df()
-        return c.select("hash") if c is not None else None
-
     # -- stats (protocol.clj get-stats) ---------------------------------------
 
     def get_stats(self) -> dict:
@@ -1082,7 +1165,21 @@ def _has_parquet(fs, path: str) -> bool:
     return False
 
 
-def fill_scalar(token: Mapping[str, Any], var: str):
-    """Variable fill value coerced to its numpy dtype."""
-    dtype = sb.as_dtype(md.get_type(token, var))
-    return np.array(md.get_fill(token, var)).astype(dtype)[()]
+def _local_parquet_files(path: str) -> list[str]:
+    """Committed parquet files under a LOCAL directory, recursively and
+    in name order, skipping underscore/dot-prefixed entries by the rule
+    of :func:`_has_parquet`."""
+    out: list[str] = []
+    try:
+        with os.scandir(path) as it:
+            entries = sorted(it, key=lambda e: e.name)
+    except FileNotFoundError:
+        return out
+    for e in entries:
+        if e.name.startswith(("_", ".")):
+            continue
+        if e.is_dir():
+            out.extend(_local_parquet_files(e.path))
+        elif e.name.endswith(".parquet"):
+            out.append(e.path)
+    return out

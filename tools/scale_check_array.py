@@ -30,7 +30,10 @@ reads measure 0.15 s on a local store — driver-side footer-bounded
 index + point blob fetch, zero Spark jobs (bench.py
 ``arr_read_slices_x10``).  Sublinear-in-bytes bulk paths +
 corpus-independent point reads are exactly the two properties a
-1000-executor deployment needs.
+1000-executor deployment needs.  Since then the driver-side tier no
+longer needs ``cache_reads``: on a local store the cache-off slice
+reads are job-free too, so the distributed-path figure above now needs
+a remote root or ``blob_local_fetch_max_bytes=0`` to reproduce.
 
 Usage: PYTHONPATH=<repo> python tools/scale_check_array.py
 """
