@@ -237,8 +237,14 @@ def bench_array(spark) -> dict[str, float]:
         )
         from mandoline_spark.core import slab as _sb
 
-        writer.write_variable(
-            wconn, wtok, "v", [_sb.empty("short", sl.mk_slice((0,), (2 * C,)), 1)]
+        # through ingest_aligned, the timed ingest's Spark path: a
+        # write_variable here would take the job-free driver write tier
+        wrows = writer.slabs_to_piece_rows(
+            wtok, "v", [_sb.empty("short", sl.mk_slice((0,), (2 * C,)), 1)]
+        )
+        writer.ingest_aligned(
+            wconn, wtok, "v",
+            spark.createDataFrame(wrows, schema=writer.piece_schema(1)),
         )
         wconn.finish_version(wtok)
         reader.get_slice(

@@ -234,7 +234,8 @@ class Connection:
     _index_map_cache: dict = field(default_factory=dict, repr=False)
     blob_lru_size: int = 1000
     # Driver-side index cap: a resolved index above this many entries
-    # stays on the distributed path.
+    # stays on the distributed path.  This cap and the next one also
+    # gate writer.write_variable's job-free driver write tier.
     index_map_max_entries: int = 2_000_000
     # Driver-side blob fetch eligibility: when the LOCAL chunk table's
     # on-disk footprint is under this bound, blobs are read with
@@ -847,23 +848,18 @@ class Connection:
         return files
 
     @staticmethod
-    def _local_blobs(
-        files: list[str], hashes: list[str], copy: bool
-    ) -> dict | None:
-        """Driver-side blob fetch from local chunk files, hash-first:
-        each row group's ``hash`` column is read on its own, and its
-        ``blob`` column only when it holds a wanted hash.  pyarrow does
-        not consult the Parquet bloom filter and SHA-1 min/max
+    def _local_hash_scan(
+        files: list[str], hashes: list[str], blobs: bool = True
+    ) -> dict:
+        """Hash-first scan of local chunk files: each row group's
+        ``hash`` column is read on its own, and its ``blob`` column only
+        when it holds a wanted hash (and ``blobs`` is set).  pyarrow
+        does not consult the Parquet bloom filter and SHA-1 min/max
         statistics prune nothing, so a filtered scan would decompress
-        every blob of the table for a one-chunk read.  A hash stored
-        twice is the same bytes twice (content addressing), so either
-        copy serves.
-
-        ``copy`` returns ``bytes`` — what the LRU stores, so no cached
-        entry pins a decompressed row group; otherwise the values are
-        zero-copy Arrow buffers for an immediate paste.  None when a
-        hash is missing (store inconsistency; the caller falls back to
-        the Spark scan)."""
+        every blob of the table for a one-chunk read.  Returns hash →
+        blob (an Arrow binary scalar, or None without ``blobs``) for
+        every wanted hash found.  A hash stored twice is the same bytes
+        twice (content addressing), so either copy serves."""
         from concurrent.futures import ThreadPoolExecutor
 
         import pyarrow as pa
@@ -880,9 +876,11 @@ class Connection:
                     hit = np.flatnonzero(
                         pc.is_in(h, value_set=want).to_numpy()
                     ).tolist()
-                    if hit:
+                    if hit and blobs:
                         b = pf.read_row_group(rg, columns=["blob"])["blob"]
                         found += [(h[i], b[i]) for i in hit]
+                    else:
+                        found += [(h[i], None) for i in hit]
             return found
 
         out: dict = {}
@@ -894,8 +892,25 @@ class Connection:
         with ThreadPoolExecutor(workers) as pool:
             for found in pool.map(fetch, files):
                 for h, b in found:
-                    out[h.as_py()] = b.as_py() if copy else b.as_buffer()
-        return out if len(out) == len(want) else None
+                    out[h.as_py()] = b
+        return out
+
+    @staticmethod
+    def _local_blobs(
+        files: list[str], hashes: list[str], copy: bool
+    ) -> dict | None:
+        """Driver-side blob fetch from local chunk files
+        (:meth:`_local_hash_scan`).  ``copy`` returns ``bytes`` — what
+        the LRU stores, so no cached entry pins a decompressed row
+        group; otherwise the values are zero-copy Arrow buffers for an
+        immediate paste.  None when a hash is missing (store
+        inconsistency; the caller falls back to the Spark scan)."""
+        found = Connection._local_hash_scan(files, hashes)
+        if len(found) < len(set(hashes)):
+            return None
+        return {
+            h: b.as_py() if copy else b.as_buffer() for h, b in found.items()
+        }
 
     def blobs_for(self, hashes: list[str]) -> dict | None:
         """hash → chunk blob fetched on the driver, or None when the

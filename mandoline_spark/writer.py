@@ -1,26 +1,38 @@
-"""Write path: slabs → committed chunks + copy-forward index, one Spark job.
+"""Write path: slabs → committed chunks + an index generation.
 
 The reference writes each slab by exploding it into per-chunk pieces and
 running a CAS retry loop per chunk coordinate
-(/root/reference/src/io/mandoline/impl.clj:246-308).  The Spark-native
-shape eliminates the CAS loop entirely: all pieces for one chunk
-coordinate land in one ``groupBy(coord)`` task, which merges them in
-slab order onto the base chunk (current version's, else parent's, else a
-fill-valued blank — impl.clj:232-244 semantics), content-addresses the
-result with SHA-1, and appends only previously-unseen blobs.
+(impl.clj:246-308).  Both write tiers
+here drop the CAS loop: all pieces for one chunk coordinate are merged
+together in slab order onto the base chunk (current version's, else
+parent's, else a fill-valued blank — impl.clj:232-244 semantics) by one
+per-chunk kernel (:func:`_merge_chunk`), the result is content-addressed
+with SHA-1, and only previously-unseen blobs are appended.
+
+- **Driver tier** (:func:`_driver_write`): delta commits (and full
+  commits with no base) of driver-resident slabs on a LOCAL store whose
+  index and chunk table fit the read tier's driver caps are merged,
+  deduplicated and appended with numpy + pyarrow on the driver — zero
+  Spark jobs, like the reference's client-side write.
+- **Spark tier** (:func:`write_pieces`, :func:`ingest_aligned`): pieces
+  from any Spark computation, full commits onto a base (the carry of
+  untouched entries), remote/in-memory stores, over-cap tables and
+  masked bases.  One ``groupBy(coord)`` task merges each chunk.
+
+Both tiers commit the index generation through one claim → markers →
+rows → seal protocol (:func:`_commit_generation`).
 
 Scale notes:
-- The shuffle key is the chunk coordinate, so write parallelism is
-  O(chunks touched) and each task holds exactly one chunk (~50 KiB at
-  the reference's perf shape) plus its pieces.
-- Chunk dedup is a broadcast-able anti-join of the (small) batch of new
-  hashes against the store's hash column; duplicate appends would be
-  harmless anyway (identical content under the same hash), so a lost
-  race between concurrent jobs costs storage, not correctness.
-- The copy-forward index write is O(chunk-count) rows of
-  (coord, 40-byte hash) per generation — at 1e9 chunks that is a
-  shuffle-free ~50 GB Parquet job; delta-index + compaction is the
-  documented follow-up if commits ever dominate.
+- The Spark tier's shuffle key is the chunk coordinate, so write
+  parallelism is O(chunks touched) and each task holds exactly one
+  chunk (~50 KiB at the reference's perf shape) plus its pieces.
+- Chunk dedup is an anti-join of the (small) batch of new hashes
+  against the store's hash column; duplicate appends would be harmless
+  anyway (identical content under the same hash), so a lost race
+  between concurrent jobs costs storage, not correctness.
+- A ``full`` index generation is O(chunk-count) rows of
+  (coord, 40-byte hash); ``index_mode="delta"`` writes only the touched
+  coordinates and compaction bounds the overlay chain.
 """
 
 from __future__ import annotations
@@ -40,7 +52,7 @@ from .core import slice as sl
 from .core.slab import Slab
 from .core.slice import Slice
 from . import fs as fsmod
-from .store import Connection
+from .store import _SPARK_RESOLVE, Connection, _local_parquet_files
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -128,6 +140,28 @@ def _apply_layers(layers, type_name: str, chunk_slice: Slice, fill) -> Slab:
     return slab
 
 
+def _merge_chunk(
+    type_name: str, fill, chunk_slice: Slice, layers, pieces
+) -> tuple[str, bytes]:
+    """One chunk's read-modify-write, the kernel of every write path:
+    fold the base ``layers`` (:func:`_apply_layers`; None or empty = a
+    fill-valued blank), then paste the ord-sorted ``pieces`` —
+    (pstart, pstop, data) each — over it.  Returns the chunk's
+    (SHA-1 content id, canonical bytes)."""
+    if isinstance(layers, (list, np.ndarray)) and len(layers):
+        slab = _apply_layers(layers, type_name, chunk_slice, fill)
+    else:
+        slab = sb.empty(type_name, chunk_slice, fill)
+    for pstart, pstop, data in pieces:
+        pslice = Slice(
+            tuple(int(x) for x in pstart),
+            tuple(int(x) for x in pstop),
+            tuple(1 for _ in pstart),
+        )
+        sb.copy_into(sb.from_bytes(data, type_name, pslice, copy=False), slab)
+    return ck.generate_id(slab), sb.to_bytes(slab)
+
+
 def _coord_cols(ndim: int) -> list[str]:
     return [f"c{i}" for i in range(ndim)]
 
@@ -150,6 +184,15 @@ def index_schema(ndim: int) -> T.StructType:
     fields += [T.StructField(c, T.IntegerType(), False) for c in _coord_cols(ndim)]
     fields.append(T.StructField("chunk_hash", T.StringType(), False))
     return T.StructType(fields)
+
+
+def _index_gen_schema(ndim: int) -> T.StructType:
+    """Columns of a committed index generation: :func:`index_schema`
+    plus the ``wb`` mask column (``_WB_TYPE``)."""
+    return T.StructType(
+        list(index_schema(ndim).fields)
+        + [T.StructField("wb", T.ArrayType(T.IntegerType()), True)]
+    )
 
 
 CHUNK_SCHEMA = T.StructType(
@@ -344,10 +387,12 @@ def write_variable(
     compact_every: int | None = None,
 ) -> None:
     """Write a sequence of slabs to ``var`` under the in-flight version
-    ``token`` as one Spark job (mandoline.clj:280-290 / impl.clj:280-308
-    semantics, Spark shape).  Chunk-aligned, non-overlapping slab sets —
-    the bulk-load shape — are routed to the zero-shuffle
-    :func:`ingest_aligned` path automatically.
+    ``token`` (mandoline.clj:280-290 / impl.clj:280-308 semantics).  On
+    a local store within the driver caps a delta write, or a full write
+    with no base, runs on the driver with no Spark job
+    (:func:`_driver_write`); otherwise it is one Spark write, where
+    chunk-aligned, non-overlapping slab sets — the bulk-load shape —
+    take the zero-shuffle :func:`ingest_aligned` path.
 
     ``compact_every``: with ``index_mode="delta"``, auto-collapse the
     overlay chain into a fresh full generation once a read of
@@ -355,14 +400,19 @@ def write_variable(
     (``None`` = session conf ``spark.mandoline.compactEvery``, default
     16; 0 disables).  Keeps delta-commit read latency flat at any
     commit count without a separate maintenance schedule."""
+    if index_mode not in ("full", "delta"):
+        raise ValueError(f"index_mode must be 'full' or 'delta': {index_mode!r}")
     slabs = list(slabs)
     if not slabs:
         return
-    spark = conn.spark
+    rows = slabs_to_piece_rows(token, var, slabs)
+    if _driver_write(conn, token, var, rows, index_mode):
+        if index_mode == "delta":
+            _maybe_autocompact(conn, token, var, compact_every)
+        return
     ndim = len(md.get_variable_dimensions(token, var))
     aligned = _slabs_are_aligned(token, var, slabs)
-    rows = slabs_to_piece_rows(token, var, slabs)
-    pieces = spark.createDataFrame(rows, schema=piece_schema(ndim))
+    pieces = conn.spark.createDataFrame(rows, schema=piece_schema(ndim))
     if aligned:
         ingest_aligned(
             conn, token, var, pieces,
@@ -373,6 +423,163 @@ def write_variable(
             conn, token, var, pieces,
             index_mode=index_mode, compact_every=compact_every,
         )
+
+
+# Row-group target of driver-written chunk files: Spark's default
+# parquet.block.size, so a point read decompresses at most one bounded
+# row group of blobs, as on Spark-written files.  Module-level so tests
+# can shrink it.
+CHUNK_ROW_GROUP_BYTES = 128 << 20
+
+
+def _write_local_parquet(
+    schema: T.StructType, cols: dict, directory: str,
+    row_group_size: int | None = None,
+) -> None:
+    """Write ``cols`` as ``<directory>/part-0.parquet`` (zstd, row
+    groups of ``row_group_size`` rows, pyarrow's default when None) with
+    ``schema``'s types.  The file is written under an underscore name
+    and renamed into place, so readers — Spark's and
+    :func:`~mandoline_spark.store._has_parquet` alike skip underscore
+    names — never see a partial file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    os.makedirs(directory, exist_ok=True)
+    tmp = os.path.join(directory, "_part-0.parquet")
+    pq.write_table(
+        pa.table(cols, schema=to_arrow_schema(schema)), tmp,
+        compression="zstd", row_group_size=row_group_size,
+    )
+    os.replace(tmp, os.path.join(directory, "part-0.parquet"))
+
+
+def _driver_write(
+    conn: Connection,
+    token: Mapping[str, Any],
+    var: str,
+    rows: list[Row],
+    index_mode: str,
+) -> bool:
+    """Driver write tier: commit the piece ``rows`` of driver-resident
+    slabs (:func:`slabs_to_piece_rows`) with numpy + pyarrow and no
+    Spark job — the reference's client-side ``write-variable``
+    (impl.clj:246-308).  Returns False, having written nothing, unless
+    the store is LOCAL, the commit is a delta or a full commit with no
+    base, the touched base entries resolve within
+    ``index_map_max_entries``, the chunk table is within
+    ``blob_local_fetch_max_bytes`` (or empty), no generation of the
+    base carries cross-writer masks, and every base blob is found;
+    the caller then takes the Spark tier.  (A full commit onto a base
+    must carry every untouched entry: the Spark tier's anti-join does
+    that in parallel, where the driver would fold and rewrite the whole
+    base map serially.)
+
+    Same semantics as :func:`write_pieces`: each touched chunk's pieces
+    merge in ``ord`` order onto its resolved base blob, new content is
+    appended once as one zstd Parquet file under ``chunks/job-<id>/``
+    (no bloom filter — see :func:`chunk_table_writer`), and the index
+    generation commits through :func:`_commit_generation` against the
+    generation snapshot taken before the base read."""
+    if not isinstance(conn.fs, fsmod.LocalFS):
+        return False
+    vid = token["version-id"]
+    base_gens = conn.index_gens(vid, var)
+    expected_gen = (base_gens[-1] + 1) if base_gens else 0
+    plan = conn._local_index_plan(vid, var) or []
+    if plan and index_mode == "full":
+        return False
+    if any(_gen_masked(conn, v, var, g) for v, g in plan):
+        return False
+    files = conn._local_chunk_files()
+    if files is None:
+        if _local_parquet_files(conn.chunks_path()):
+            return False  # chunk table over the driver byte cap
+        files = []
+    ndim = len(md.get_variable_dimensions(token, var))
+    pieces: dict[tuple, list] = {}  # coord → [(pstart, pstop, data)], ord order
+    for r in rows:
+        pieces.setdefault(tuple(r[1 : 1 + ndim]), []).append(
+            tuple(r[2 + ndim : 5 + ndim])
+        )
+    base = {}
+    if plan and pieces:
+        box = [
+            (min(c[i] for c in pieces), max(c[i] for c in pieces))
+            for i in range(ndim)
+        ]
+        base = conn._local_index_map(
+            vid, var, conn.index_map_max_entries, box
+        )
+        if base is _SPARK_RESOLVE:
+            return False
+        base = base or {}
+    blobs = Connection._local_blobs(
+        files, [base[c] for c in pieces if c in base], copy=False
+    )
+    if blobs is None:
+        return False
+
+    grid = md.get_chunk_grid_slice(token, var)
+    type_name = md.get_type(token, var)
+    fill = md.get_fill(token, var)
+    merged = {
+        c: _merge_chunk(
+            type_name,
+            fill,
+            ck.from_chunk_coordinate(grid, c),
+            [{"lyr": 0, "wb": None, "blob": blobs[base[c]]}]
+            if c in base
+            else None,
+            ps,
+        )
+        for c, ps in pieces.items()
+    }
+    try:
+        new = dict(merged.values())
+        for h in Connection._local_hash_scan(files, list(new), blobs=False):
+            del new[h]
+        if new:
+            import uuid
+
+            nbytes = [len(b) for b in new.values()]
+            _write_local_parquet(
+                CHUNK_SCHEMA,
+                {"hash": list(new), "blob": list(new.values()), "nbytes": nbytes},
+                os.path.join(
+                    conn.chunks_path(), f"job-{uuid.uuid4().hex[:12]}"
+                ),
+                row_group_size=max(
+                    1, CHUNK_ROW_GROUP_BYTES * len(nbytes) // sum(nbytes)
+                ),
+            )
+
+        def write_rows(gen_path: str, is_delta: bool, record_masks: bool) -> int:
+            # no carry: a full commit here has no base (see above)
+            coords = list(merged)
+            if not coords:
+                return 0
+            cols = {"ckey": [_ckey(c) for c in coords]}
+            for i, name in enumerate(_coord_cols(ndim)):
+                cols[name] = [c[i] for c in coords]
+            cols["chunk_hash"] = [merged[c][0] for c in coords]
+            cols["wb"] = [
+                [x for p in pieces[c] for x in (*p[0], *p[1])]
+                if record_masks
+                else None
+                for c in coords
+            ]
+            _write_local_parquet(_index_gen_schema(ndim), cols, gen_path)
+            return len(coords)
+
+        _commit_generation(
+            conn, vid, var, index_mode, expected_gen,
+            has_base=bool(plan), can_mask=True, write_rows=write_rows,
+        )
+    finally:
+        conn.invalidate_cache()
+    return True
 
 
 def write_pieces(
@@ -580,30 +787,19 @@ def write_pieces(
             out = []
             for i in range(len(pdf)):
                 coord = tuple(int(pdf[c].iloc[i]) for c in ccols)
-                chunk_slice = ck.from_chunk_coordinate(grid_s, coord)
-                layers = pdf["_layers"].iloc[i]
-                if isinstance(layers, (list, np.ndarray)) and len(layers):
-                    slab = _apply_layers(
-                        layers, type_name, chunk_slice, fill
-                    )
-                else:
-                    slab = sb.empty(type_name, chunk_slice, fill)
-                for p in pdf["_ps"].iloc[i]:  # already ord-sorted
-                    pslice = Slice(
-                        tuple(int(x) for x in p["pstart"]),
-                        tuple(int(x) for x in p["pstop"]),
-                        tuple(1 for _ in p["pstart"]),
-                    )
-                    piece = sb.from_bytes(
-                        bytes(p["data"]), type_name, pslice
-                    )
-                    sb.copy_into(piece, slab)
-                blob = sb.to_bytes(slab)
+                h, blob = _merge_chunk(
+                    type_name,
+                    fill,
+                    ck.from_chunk_coordinate(grid_s, coord),
+                    pdf["_layers"].iloc[i],
+                    # already ord-sorted
+                    ((p["pstart"], p["pstop"], p["data"]) for p in pdf["_ps"].iloc[i]),
+                )
                 out.append(
                     {
                         "ckey": _ckey(coord),
                         **{c: coord[i] for i, c in enumerate(ccols)},
-                        "chunk_hash": ck.generate_id(slab),
+                        "chunk_hash": h,
                         "blob": blob,
                         "nbytes": len(blob),
                     }
@@ -697,21 +893,26 @@ def _layered_base_grouped(
 
 
 def _dedup_by_hash(new_chunks: DataFrame) -> DataFrame:
-    """One representative (hash, blob, nbytes) row per distinct hash,
-    WITHOUT shuffling blob bytes: the shuffle carries only (hash, row-id)
-    pairs to elect a winner per hash, and the winners broadcast back onto
-    the (persisted) input as a broadcast-hash join — the blobs stay in
-    their partitions.  ``dropDuplicates(["hash"])`` would ship every
-    unique blob through the exchange instead.
+    """One representative (hash, blob, nbytes) row per distinct hash of
+    ``new_chunks`` (hash, blob, nbytes, ckey), WITHOUT shuffling blob
+    bytes: the shuffle carries only (hash, 8-byte key) pairs to elect a
+    winner per hash, and the winners broadcast back onto the input as a
+    broadcast-hash join — the blobs stay in their partitions.
+    ``dropDuplicates(["hash"])`` would ship every unique blob through
+    the exchange instead.
 
-    Requires a persisted (or otherwise re-evaluation-stable) input:
-    ``monotonically_increasing_id`` is evaluated twice and must agree.
+    The winner key is ``xxhash64(ckey)``, a pure function of the row's
+    chunk coordinate — unique per commit — so a recomputed input (an
+    evicted cache block, a lost executor) elects the same winner on
+    both sides of the join, whatever its partitioning or row order.  A
+    key collision between two coordinates holding the same content
+    keeps both rows: an identical duplicate blob, never a missing one.
     The winner set is one 48-byte row per distinct hash in the batch —
     broadcastable up to ~10M new chunks per job (~0.5 GB); split larger
     ingests into multiple jobs."""
-    tagged = new_chunks.withColumn("_rid", F.monotonically_increasing_id())
-    winners = tagged.groupBy("hash").agg(F.min("_rid").alias("_rid"))
-    return tagged.join(F.broadcast(winners), ["hash", "_rid"]).drop("_rid")
+    tagged = new_chunks.withColumn("_k", F.xxhash64("ckey")).drop("ckey")
+    winners = tagged.groupBy("hash").agg(F.min("_k").alias("_k"))
+    return tagged.join(F.broadcast(winners), ["hash", "_k"]).drop("_k")
 
 
 # Index-generation file-size target (guide §6): ~4M skinny index rows
@@ -722,7 +923,12 @@ INDEX_ROWS_PER_FILE = 4_000_000
 
 
 def chunk_table_writer(df: DataFrame):
-    """Chunk-table parquet writer: bloom filter on the content hash.
+    """Chunk-table parquet writer of the Spark tier: bloom filter on the
+    content hash.  (Files appended by the driver write tier carry none —
+    pyarrow 16.1 cannot write one — and each holds one commit's new
+    chunks in row groups of ~``CHUNK_ROW_GROUP_BYTES``; the driver's own
+    blob fetch reads the hash column first and never consults a bloom
+    filter.)
 
     Point fetches filter the chunk table by hash, and SHA-1 hashes are
     uniformly random, so per-row-group min/max statistics never prune —
@@ -754,27 +960,17 @@ def _commit_merged(
 ) -> str | None:
     """Append chunks + write the next index generation from a merged
     (ckey, coords…, chunk_hash, blob, nbytes) DataFrame.  ``merged``
-    MUST be persisted by the caller — it is consumed by two actions and
-    the dedup semi-join needs stable row ids.  Returns the path of the
-    index generation this call wrote (NOT necessarily the newest one —
-    a concurrent shard writer may have claimed a later number).
+    MUST be persisted by the caller — it is consumed by two actions.
+    Returns the path of the index generation this call wrote (NOT
+    necessarily the newest one — a concurrent shard writer may have
+    claimed a later number), or None when nothing reached the index.
 
     Concurrency: safe for multiple simultaneous driver processes
     writing the same in-flight version (the writer_token flow) —
     chunk batches land in per-job subdirectories (a shared append
     would let one job's FileOutputCommitter cleanup delete the
-    other's ``_temporary`` staging), and index generation numbers are
-    claimed with an exclusive marker before writing (a list-then-write
-    would let two writers overwrite the same ``g=N``).  Concurrent
-    shard writers to the SAME variable must use
-    ``index_mode="delta"``: full mode's copy-forward carries the base
-    snapshot each writer saw, so whichever full generation ends up
-    newer silently drops the other's rows; deltas overlay.  That
-    contract is ENFORCED, not just documented: a full-mode commit
-    whose claimed generation is not exactly its base snapshot + 1
-    raises :class:`ConcurrentWriteError` before any index row lands
-    (the chunk blobs already appended are content-addressed and
-    harmless — a retry or delta re-commit reuses them)."""
+    other's ``_temporary`` staging), and the index generation commits
+    through :func:`_commit_generation`'s claim protocol."""
     import uuid
 
     vid = token["version-id"]
@@ -785,8 +981,8 @@ def _commit_merged(
     #    dedup: chunk.clj:35-45 / impl.clj:256-269).  Duplicate
     #    appends lost to a concurrent job are harmless — same bytes
     #    under the same hash; readers merge them idempotently.
-    new_chunks = merged.select("chunk_hash", "blob", "nbytes").withColumnRenamed(
-        "chunk_hash", "hash"
+    new_chunks = merged.select(
+        F.col("chunk_hash").alias("hash"), "blob", "nbytes", "ckey"
     )
     new_chunks = _dedup_by_hash(new_chunks)
     existing = conn.chunks_df()
@@ -802,7 +998,6 @@ def _commit_merged(
     # 2. Write the next index generation: written coords take the
     #    new hash.  Full mode also carries every untouched base
     #    entry; delta mode leaves them to read-time overlay.
-    new_index = merged.select("ckey", *ccols, "chunk_hash")
     # The expected generation is snapshot where the caller read its
     # base (write_pieces passes it in — snapshotting here leaves a
     # TOCTOU window where a concurrent generation committed during the
@@ -817,7 +1012,7 @@ def _commit_merged(
         has_base = base_index is not None
     else:
         # delta commits consult only base EXISTENCE (the delta-vs-
-        # promoted-full decision below); answering it from fs metadata
+        # promoted-full decision); answering it from fs metadata
         # skips the full overlay-chain relation construction
         # (~0.3-0.5s of parquet listing/footer setup per generation)
         # on exactly the frequent-small-commit path delta mode exists
@@ -828,6 +1023,94 @@ def _commit_merged(
             parent is not None
             and bool(conn._local_index_plan(parent, var))
         )
+    # Index-generation file sizing: the write otherwise
+    # inherits the piece pipeline's task count — 32 part files for a
+    # few thousand skinny rows at fixture scale — paying commit fan-in
+    # per file on every ingest AND a footer read per file on every
+    # later index scan (resolve_index_df, delta overlays, the array
+    # queries).  The CHUNK GRID bounds this generation's possible row
+    # count driver-side with no job (an index row exists per touched
+    # chunk; full-mode carry is also grid-bounded), so the file count
+    # derives from data, not from task-count accidents: ~4M rows/file
+    # (~200 MB at ~50 B/row, inside the 128 MB-1 GB band).  coalesce
+    # never widens, so at 100 TB (billions of chunks) the write keeps
+    # its parallelism; locally the skinny projection collapses to one
+    # right-sized file.
+    grid = md.get_chunk_grid_slice(token, var)
+    grid_chunks = 1
+    for lo, hi, st in zip(grid.start, grid.stop, grid.step):
+        grid_chunks *= -(-(hi - lo) // st)
+    n_files = max(1, -(-grid_chunks // INDEX_ROWS_PER_FILE))
+
+    def write_rows(gen_path: str, is_delta: bool, record_masks: bool) -> int:
+        from pyspark.sql import Observation
+
+        new_index = merged.select("ckey", *ccols, "chunk_hash")
+        if record_masks:
+            new_index = new_index.join(
+                wb_df.withColumnRenamed("_wb", "wb"), "ckey", "left"
+            )
+        else:
+            new_index = new_index.withColumn(
+                "wb", F.lit(None).cast(_WB_TYPE)
+            )
+        if base_index is not None and not is_delta:
+            carried = base_index.join(
+                new_index.select("ckey"), "ckey", "left_anti"
+            )
+            new_index = new_index.unionByName(
+                carried, allowMissingColumns=True
+            )
+        # Emptiness is decided from the DATA side — an Observation
+        # piggybacked on the append (zero extra jobs) — never from a
+        # post-append listing: on a list-after-write-lagged store a
+        # NON-empty generation whose keys are not listable yet would
+        # read as empty and be dropped, turning a successful ingest
+        # into silent data loss.  An empty append leaves
+        # only _SUCCESS.
+        written = Observation()
+        new_index.coalesce(n_files).observe(
+            written, F.count(F.lit(1)).alias("rows")
+        ).write.mode("append").parquet(gen_path)
+        return written.get["rows"]
+
+    return _commit_generation(
+        conn, vid, var, index_mode, expected_gen,
+        has_base=has_base, can_mask=wb_df is not None,
+        write_rows=write_rows,
+    )
+
+
+def _commit_generation(
+    conn: Connection,
+    vid: int,
+    var: str,
+    index_mode: str,
+    expected_gen: int,
+    has_base: bool,
+    can_mask: bool,
+    write_rows: Callable[[str, bool, bool], int],
+) -> str | None:
+    """The index-generation commit protocol shared by both write tiers:
+    claim the next generation (:func:`claim_index_gen`), check the
+    claim against ``expected_gen`` (the generation snapshot taken where
+    the writer read its base), write the ``_DELTA`` / ``_MASKED``
+    markers, let ``write_rows(gen_path, is_delta, record_masks)`` write
+    the generation's parquet (returning its row count; a full
+    generation carries the untouched base entries, a masked one records
+    each row's written boxes in ``wb``), then ``_SEALED`` — or
+    tombstone the claim when no row was written.  Returns the
+    generation's path, or None.
+
+    Concurrent shard writers to the SAME variable must use
+    ``index_mode="delta"``: full mode's copy-forward carries the base
+    snapshot each writer saw, so whichever full generation ends up
+    newer silently drops the other's rows; deltas overlay.  That
+    contract is ENFORCED, not just documented: a full-mode commit
+    whose claimed generation is not exactly its base snapshot + 1
+    raises :class:`ConcurrentWriteError` before any index row lands
+    (the chunk blobs already appended are content-addressed and
+    harmless — a retry or delta re-commit reuses them)."""
     gen_path, gen = claim_index_gen(conn, vid, var)
     if index_mode == "full" and gen != expected_gen:
         # Another writer claimed/committed a generation after our base
@@ -871,24 +1154,7 @@ def _commit_merged(
     # layers cell-correct (the reference's update-chunk! CAS semantics,
     # impl.clj:246-278, without per-chunk retry loops).  Unmasked rows
     # write wb = null for a uniform generation schema.
-    record_masks = (
-        is_delta and wb_df is not None and gen != expected_gen
-    )
-    if record_masks:
-        new_index = new_index.join(
-            wb_df.withColumnRenamed("_wb", "wb"), "ckey", "left"
-        )
-    else:
-        new_index = new_index.withColumn(
-            "wb", F.lit(None).cast(_WB_TYPE)
-        )
-    if base_index is not None and not is_delta:
-        carried = base_index.join(
-            new_index.select("ckey"), "ckey", "left_anti"
-        )
-        new_index = new_index.unionByName(
-            carried, allowMissingColumns=True
-        )
+    record_masks = is_delta and can_mask and gen != expected_gen
     if is_delta:
         # the marker goes in BEFORE the parquet append: the generation
         # becomes visible to index_gens the moment part files commit,
@@ -900,48 +1166,17 @@ def _commit_merged(
         # same visibility rule as _DELTA: the mask marker must exist
         # whenever the generation's rows are readable
         conn.fs.write_text(os.path.join(gen_path, "_MASKED"), "")
-    # Index-generation file sizing (guide §6, r16): the write otherwise
-    # inherits the piece pipeline's task count — 32 part files for a
-    # few thousand skinny rows at fixture scale — paying commit fan-in
-    # per file on every ingest AND a footer read per file on every
-    # later index scan (resolve_index_df, delta overlays, the array
-    # queries).  The CHUNK GRID bounds this generation's possible row
-    # count driver-side with no job (an index row exists per touched
-    # chunk; full-mode carry is also grid-bounded), so the file count
-    # derives from data, not from task-count accidents: ~4M rows/file
-    # (~200 MB at ~50 B/row, inside the 128 MB-1 GB band).  coalesce
-    # never widens, so at 100 TB (billions of chunks) the write keeps
-    # its parallelism; locally the skinny projection collapses to one
-    # right-sized file.
-    grid = md.get_chunk_grid_slice(token, var)
-    grid_chunks = 1
-    for lo, hi, st in zip(grid.start, grid.stop, grid.step):
-        grid_chunks *= -(-(hi - lo) // st)
-    n_files = max(1, -(-grid_chunks // INDEX_ROWS_PER_FILE))
-    from pyspark.sql import Observation
-
-    written = Observation()
-    new_index.coalesce(n_files).observe(
-        written, F.count(F.lit(1)).alias("rows")
-    ).write.mode("append").parquet(gen_path)
-    if not written.get["rows"]:
+    if not write_rows(gen_path, is_delta, record_masks):
         # empty write (zero pieces reached the index — e.g. an
-        # externally-built pieces frame that filtered to nothing):
-        # Spark's append leaves only _SUCCESS.  Sealing it would read
-        # as a lag-hidden COMMITTED generation to the completeness
-        # check — an unreleasable commit wedge — and leaving it
-        # unsealed leaves a husk for the operator.  It is OUR OWN
-        # claim with nothing in it: drop it and report no generation.
-        # Emptiness is decided from the DATA side — an Observation
-        # piggybacked on the append (zero extra jobs) — never from a
-        # post-append listing: on a list-after-write-lagged store a
-        # NON-empty generation whose keys are not listable yet would
-        # read as empty and be deleted here, turning a successful
-        # ingest into silent data loss (r12 advice).  The drop is a
-        # tombstone, not an rmtree, so the abandoned claim remains a
-        # counted position for the completeness walk (r13 advice);
-        # claim_index_gen reclaims tombstoned slots, so the number is
-        # not burned.
+        # externally-built pieces frame that filtered to nothing).
+        # Sealing it would read as a lag-hidden COMMITTED generation to
+        # the completeness check — an unreleasable commit wedge — and
+        # leaving it unsealed leaves a husk for the operator.  It is
+        # OUR OWN claim with nothing in it: drop it and report no
+        # generation.  The drop is a tombstone, not an rmtree, so the
+        # abandoned claim remains a counted position for the
+        # completeness walk; claim_index_gen reclaims
+        # tombstoned slots, so the number is not burned.
         tombstone_claim(conn.fs, gen_path)
         return None
     # seal AFTER the append commits: a strong per-key marker proving
@@ -1214,16 +1449,18 @@ def _reconcile_var(
             out = []
             for i in range(len(pdf)):
                 coord = tuple(int(pdf[c].iloc[i]) for c in ccols)
-                chunk_slice = ck.from_chunk_coordinate(grid_s, coord)
-                slab = _apply_layers(
-                    pdf["_layers"].iloc[i], type_name, chunk_slice, fill
+                h, blob = _merge_chunk(
+                    type_name,
+                    fill,
+                    ck.from_chunk_coordinate(grid_s, coord),
+                    pdf["_layers"].iloc[i],
+                    (),
                 )
-                blob = sb.to_bytes(slab)
                 out.append(
                     {
                         "ckey": _ckey(coord),
                         **{c: coord[k] for k, c in enumerate(ccols)},
-                        "chunk_hash": ck.generate_id(slab),
+                        "chunk_hash": h,
                         "blob": blob,
                         "nbytes": len(blob),
                     }
@@ -1462,7 +1699,7 @@ def ingest_aligned(
     two data shuffles (groupBy(coord) piece-merge and dropDuplicates
     batch-dedup) disappear: one projection hashes each blob with
     ``sha1()`` inside whole-stage codegen and the job goes straight to
-    the dedup semi-join (which shuffles only (hash, row-id) pairs — see
+    the dedup semi-join (which shuffles only (hash, 8-byte key) pairs — see
     :func:`_dedup_by_hash`) and the Parquet appends.
 
     Both preconditions are verified without extra jobs: alignment by an

@@ -422,10 +422,15 @@ def test_chunk_table_carries_hash_bloom_filter(store, spark):
     """Chunk-table part files must carry a bloom filter on `hash`
     (r8: SHA-1 hashes defeat min/max pruning, so point fetches would
     otherwise scan every row group; verified through the parquet-mr
-    footer, which records a bloom offset per column chunk)."""
+    footer, which records a bloom offset per column chunk).  Written
+    through the Spark tier's executor entry: the driver write tier's
+    pyarrow files carry no bloom filter."""
     conn = store.create_dataset("bloomed")
     t = conn.add_version(DDS)
-    writer.write_variable(conn, t, "foo", [_slab(FULL, 9)])
+    rows = writer.slabs_to_piece_rows(t, "foo", [_slab(FULL, 9)])
+    writer.write_pieces(
+        conn, t, "foo", spark.createDataFrame(rows, writer.piece_schema(2))
+    )
     conn.finish_version(t)
 
     jvm = spark._jvm

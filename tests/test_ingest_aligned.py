@@ -98,6 +98,9 @@ def test_duplicate_chunk_rejected(store):
 def test_write_variable_autoroutes(store, monkeypatch):
     conn = store.create_dataset("ds")
     token = conn.add_version(SPEC)
+    # the routing below is the Spark tier's: keep this local store off
+    # the driver write tier, which would otherwise take both writes
+    monkeypatch.setattr(writer, "_driver_write", lambda *a, **k: False)
     calls = {"aligned": 0, "general": 0}
     real_aligned, real_general = writer.ingest_aligned, writer.write_pieces
     monkeypatch.setattr(

@@ -122,8 +122,14 @@ def main() -> None:
             "variables": {"v": {"type": "short", "shape": ["x"], "fill-value": 0}},
         }
     )
-    writer.write_variable(
-        wconn, wtok, "v", [_sb.empty("short", sl.mk_slice((0,), (2 * C,)), 1)]
+    # through ingest_aligned, the Spark path this probe breaks down: a
+    # write_variable here would take the job-free driver write tier
+    wrows = writer.slabs_to_piece_rows(
+        wtok, "v", [_sb.empty("short", sl.mk_slice((0,), (2 * C,)), 1)]
+    )
+    writer.ingest_aligned(
+        wconn, wtok, "v",
+        spark.createDataFrame(wrows, schema=writer.piece_schema(1)),
     )
     wconn.finish_version(wtok)
     reader.get_slice(
