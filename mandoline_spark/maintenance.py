@@ -10,8 +10,9 @@ its hash.  That collects failed-ingest leftovers (uncommitted versions
 are invisible to readers and to liveness) and overwritten chunks whose
 last referencing version was itself vacuumed away — while time travel
 to every committed version keeps working, because each committed
-version's RESOLVED index (full gen + delta overlays + ancestor base)
-is scanned.
+version's own index generations (newest full gen + later delta
+overlays) are scanned; a delta-only version's ancestor base is itself
+a committed version, counted under its own row.
 
 Single-maintainer assumption: like the reference's ``destroy-dataset``,
 vacuum must not race concurrent writers to the same dataset.
@@ -79,6 +80,20 @@ def vacuum(
     appending its parquet leaves a ``_CLAIM``-only directory that
     would otherwise pin the number forever).  Returns counts of what
     was kept/removed.
+
+    Phase (a) runs in one of two tiers with the same result.  On a
+    LOCAL store whose chunk table is within
+    ``blob_local_fetch_max_bytes`` and whose committed versions' own
+    index generations hold at most ``index_map_max_entries`` rows in
+    all (footer counts), it runs on the driver with pyarrow and
+    launches no Spark job (:func:`_local_chunk_pass`): survivors are
+    written as one zstd Parquet file in row groups of
+    ~``writer.CHUNK_ROW_GROUP_BYTES`` and, like the driver write tier's
+    files, carry no hash bloom filter.  Anything else — hdfs/s3a, the
+    in-memory catalog, an over-cap table or index — takes the Spark
+    pass (:func:`_spark_chunk_pass`), whose survivors keep the bloom
+    filter.  Eligibility is settled before either tier changes
+    anything.
 
     ``retain_seconds`` keeps superseded chunk/index generations on disk
     (marked ``_SUPERSEDED``) for a grace period before deletion, so
@@ -333,29 +348,221 @@ def vacuum(
         # pointer flip already happened; only grace-window readers
         # ever touch them, never an in-flight writer, whose dedup
         # semi-join resolves through the CHUNKS pointer).
-        current = os.path.basename(conn.chunks_path().rstrip("/"))
-        for d in conn.fs.listdir(conn.path):
-            if (
-                (d == "chunks" or d.startswith("chunks.g"))
-                and d != current
-            ):
-                if _retire(
-                    conn.fs, os.path.join(conn.path, d),
-                    retain_seconds, now,
-                ):
-                    stats["chunk_gens_removed"] += 1
-                else:
-                    stats["chunk_gens_retained"] += 1
+        _retire_chunk_gens(conn, retain_seconds, now, stats)
         conn.invalidate_cache()
         return stats
     conn.invalidate_cache()
+    if not _local_chunk_pass(conn, versions, retain_seconds, now, stats):
+        _spark_chunk_pass(conn, versions, retain_seconds, now, stats)
+    return stats
+
+
+def _retire_chunk_gens(
+    conn: Connection, retain_seconds: float, now: float, stats: dict
+) -> None:
+    """Retire every chunk generation but the one ``CHUNKS`` names."""
+    current = os.path.basename(conn.chunks_path().rstrip("/"))
+    for d in conn.fs.listdir(conn.path):
+        if (d == "chunks" or d.startswith("chunks.g")) and d != current:
+            if _retire(
+                conn.fs, os.path.join(conn.path, d), retain_seconds, now
+            ):
+                stats["chunk_gens_removed"] += 1
+            else:
+                stats["chunk_gens_retained"] += 1
+
+
+def _next_chunk_gen(conn: Connection) -> str:
+    """Name of the chunk generation a dirty pass writes its survivors
+    to, emptied of any leftover from an earlier failed pass."""
+    old_name = os.path.basename(conn.chunks_path().rstrip("/"))
+    gen = int(old_name.rsplit(".g", 1)[1]) + 1 if ".g" in old_name else 0
+    conn.fs.rmtree(os.path.join(conn.path, f"chunks.g{gen}"))
+    return f"chunks.g{gen}"
+
+
+def _finish_chunk_pass(
+    conn: Connection,
+    new_gen: str | None,
+    total: int,
+    n_dead: int,
+    retain_seconds: float,
+    now: float,
+    stats: dict,
+) -> None:
+    """Flip ``CHUNKS`` to the survivors' generation ``new_gen`` (None:
+    the store was clean and nothing was rewritten), retire the other
+    generations and record the counts.
+
+    Generation flip instead of rename-swap: the survivors are written
+    BESIDE the live directory, the CHUNKS pointer file is atomically
+    replaced to name the new generation, and only then is the old
+    directory deleted — a concurrent reader resolves either the old or
+    the new generation, never a missing directory (the r2 swap left a
+    window with no chunks dir at all).  With ``retain_seconds`` > 0 the
+    old generation is merely marked superseded and outlives the flip by
+    the grace period, so a reader that resolved it just before the flip
+    cannot lose the rmtree race; with the default 0 the delete is
+    immediate (readers retry, matching the reference's destroy
+    semantics).  A clean pass still retires: superseded generations
+    from EARLIER vacuums age out here, otherwise a store that went
+    clean would keep its grace-window directories forever."""
+    if new_gen is not None:
+        conn.fs.replace_text(os.path.join(conn.path, "CHUNKS"), f"{new_gen}\n")
+    _retire_chunk_gens(conn, retain_seconds, now, stats)
+    if new_gen is not None:
+        conn.invalidate_cache()
+    stats["chunks_kept"] = total - n_dead
+    stats["chunks_removed"] = n_dead
+
+
+def _local_live_hashes(conn: Connection, versions: list):
+    """Distinct chunk hashes referenced by the committed ``versions``,
+    computed on a LOCAL store with pyarrow, or None when the
+    generations to read hold more than ``index_map_max_entries`` rows
+    by their footers, summed over every (version, variable) — the cap
+    bounds the driver's work as it bounds a read's index map.
+
+    Each (version, variable) contributes its own generations (newest
+    full plus later deltas, no ancestor base), as the Spark tier's
+    ``index_df(..., ancestors=False)`` does: walking them newest first,
+    a row counts only if no newer generation of the same plan wrote
+    its ``ckey`` (last writer wins per coordinate)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from .store import _local_parquet_files
+
+    plans = []  # per (version, variable): file lists, newest gen first
+    rows = 0
+    for vid, token in versions:
+        for var in token.get("variables", {}):
+            plan = conn._local_index_plan(vid, var, ancestors=False) or []
+            gens = [
+                _local_parquet_files(conn.index_path(v, var, g))
+                for v, g in reversed(plan)
+            ]
+            rows += sum(
+                pq.read_metadata(f).num_rows for files in gens for f in files
+            )
+            plans.append(gens)
+    if rows > conn.index_map_max_entries:
+        return None
+    hashes = []
+    for gens in plans:
+        newer = None  # ckeys written by the newer generations
+        for i, files in enumerate(gens):
+            if not files:
+                continue
+            t = pa.concat_tables(
+                [
+                    pq.ParquetFile(f).read(columns=["ckey", "chunk_hash"])
+                    for f in files
+                ]
+            )
+            if newer is not None:
+                t = t.filter(pc.invert(pc.is_in(t["ckey"], value_set=newer)))
+            hashes.append(t["chunk_hash"].combine_chunks())
+            if i + 1 < len(gens):
+                keys = t["ckey"].combine_chunks()
+                newer = (
+                    keys if newer is None else pa.concat_arrays([newer, keys])
+                )
+    return pc.unique(pa.chunked_array(hashes, pa.string()))
+
+
+def _local_chunk_pass(
+    conn: Connection,
+    versions: list,
+    retain_seconds: float,
+    now: float,
+    stats: dict,
+) -> bool:
+    """Phase (a) on the driver, with pyarrow and no Spark job.  Returns
+    False, having changed nothing, unless the store is LOCAL, its chunk
+    table is within ``blob_local_fetch_max_bytes`` (or empty) and the
+    live set fits :func:`_local_live_hashes`' cap; the caller then
+    takes the Spark pass.
+
+    The chunk table's ``hash`` column is read one row group at a time
+    to count total and dead ROWS, as the Spark anti-join does.
+    Survivors stream through :func:`writer._write_local_parquet` into
+    one zstd Parquet file of the new generation, in row groups of
+    ~``writer.CHUNK_ROW_GROUP_BYTES``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from . import fs as fsmod
+    from . import writer
+    from .store import _local_parquet_files, _row_group_hashes
+
+    if not isinstance(conn.fs, fsmod.LocalFS):
+        return False
+    files = conn._local_chunk_files()
+    if files is None:
+        # over the driver byte cap, or no chunks yet: nothing to collect
+        return not _local_parquet_files(conn.chunks_path())
+    live = _local_live_hashes(conn, versions)
+    if live is None:
+        return False
+    # survivor mask of every row group, per file
+    masks = {
+        fp: [
+            pc.is_in(h, value_set=live).to_numpy()
+            for _, _, h in _row_group_hashes(fp)
+        ]
+        for fp in files
+    }
+    total = sum(len(m) for ms in masks.values() for m in ms)
+    n_dead = total - sum(int(m.sum()) for ms in masks.values() for m in ms)
+    new_gen = None
+    if n_dead:
+        new_gen = _next_chunk_gen(conn)
+        names = writer.CHUNK_SCHEMA.names
+
+        def survivors():
+            for fp, ms in masks.items():
+                with pq.ParquetFile(fp) as pf:
+                    for rg, mask in enumerate(ms):
+                        if mask.any():
+                            t = pf.read_row_group(rg, columns=names)
+                            yield t.filter(pa.array(mask))
+
+        writer._write_local_parquet(
+            writer.CHUNK_SCHEMA,
+            survivors(),
+            os.path.join(conn.path, new_gen),
+            row_group_bytes=writer.CHUNK_ROW_GROUP_BYTES,
+        )
+    _finish_chunk_pass(
+        conn, new_gen, total, n_dead, retain_seconds, now, stats
+    )
+    return True
+
+
+def _spark_chunk_pass(
+    conn: Connection,
+    versions: list,
+    retain_seconds: float,
+    now: float,
+    stats: dict,
+) -> None:
+    """Phase (a) through Spark: remote and in-memory stores and
+    over-cap tables or indexes.  The ref-hash set is the union of
+    each committed version's OWN resolved generations (``index_df``
+    with ``ancestors=False``): every ancestor is itself a committed
+    version of the same snapshot, so its entries are counted under its
+    own row, and pulling them again per descendant made the union
+    O(versions²) generation scans."""
     chunks = conn.chunks_df()
     if chunks is None:
-        return stats
+        return
     refs = None
     for vid, token in versions:
         for var in token.get("variables", {}):
-            idx = conn.index_df(vid, var)
+            idx = conn.index_df(vid, var, ancestors=False)
             if idx is not None:
                 h = idx.select(F.col("chunk_hash").alias("hash"))
                 refs = h if refs is None else refs.unionByName(h)
@@ -379,84 +586,37 @@ def vacuum(
             if refs is not None
             else total
         )
-        if n_dead == 0:
-            # Nothing unreferenced: skip the generation rewrite entirely.
-            # Without this, every vacuum call on an already-clean store
-            # rewrote a full new chunks generation and (with
-            # ``retain_seconds`` > 0) retained the superseded one for the
-            # whole grace window — frequent retention-mode vacuums
-            # multiplied live-chunk disk usage linearly in calls-per-window
-            # (ADVICE r5).  Clean store → vacuum is a read-only no-op on
-            # the chunk data.
-            stats["chunks_kept"] = total
-            # The skip must not wedge retention cleanup: superseded chunk
-            # generations from EARLIER vacuums still age out and get
-            # collected here, otherwise a store that went clean would keep
-            # its grace-window directories forever.
-            current = os.path.basename(conn.chunks_path().rstrip("/"))
-            for d in conn.fs.listdir(conn.path):
-                if (
-                    (d == "chunks" or d.startswith("chunks.g"))
-                    and d != current
-                ):
-                    if _retire(
-                        conn.fs,
-                        os.path.join(conn.path, d),
-                        retain_seconds,
-                        now,
-                    ):
-                        stats["chunk_gens_removed"] += 1
-                    else:
-                        stats["chunk_gens_retained"] += 1
-            return stats
+        # Nothing unreferenced: skip the generation rewrite entirely.
+        # Without this, every vacuum call on an already-clean store
+        # rewrote a full new chunks generation and (with
+        # ``retain_seconds`` > 0) retained the superseded one for the
+        # whole grace window — frequent retention-mode vacuums
+        # multiplied live-chunk disk usage linearly in calls-per-window
+        # (ADVICE r5).  Clean store → vacuum is a read-only no-op on
+        # the chunk data.
+        new_gen = None
+        if n_dead:
+            new_gen = _next_chunk_gen(conn)
+            # Single blob-bearing job: the survivors' write reuses the
+            # persisted ref-hash set; kept is total - n_dead (the
+            # anti-join already counted the complement), no read-back
+            # count.
+            live = (
+                chunks.join(refs, "hash", "left_semi")
+                if refs is not None
+                else chunks.limit(0)
+            )
+            from .writer import chunk_table_writer
 
-        # Generation flip instead of rename-swap: the survivors are written
-        # BESIDE the live directory as chunks.g<N>, the CHUNKS pointer file
-        # is atomically replaced to name the new generation, and only then
-        # is the old directory deleted — a concurrent reader resolves
-        # either the old or the new generation, never a missing directory
-        # (the r2 swap left a window with no chunks dir at all).  With
-        # ``retain_seconds`` > 0 the old generation is merely marked
-        # superseded and outlives the flip by the grace period, so a reader
-        # that resolved it just before the flip cannot lose the rmtree
-        # race; with the default 0 the delete is immediate (readers retry,
-        # matching the reference's destroy semantics).
-        old_path = conn.chunks_path()
-        old_name = os.path.basename(old_path.rstrip("/"))
-        gen = int(old_name.rsplit(".g", 1)[1]) + 1 if ".g" in old_name else 0
-        new_path = os.path.join(conn.path, f"chunks.g{gen}")
-        conn.fs.rmtree(new_path)
-        # Single blob-bearing job: the survivors' write reuses the
-        # persisted ref-hash set; kept is total - n_dead (the anti-join
-        # already counted the complement), no read-back count.
-        live = (
-            chunks.join(refs, "hash", "left_semi")
-            if refs is not None
-            else chunks.limit(0)
+            # same write options as the ingest path (hash bloom
+            # filter): a vacuum rewrite must not silently degrade
+            # point-fetch pruning
+            chunk_table_writer(live).mode("overwrite").parquet(
+                os.path.join(conn.path, new_gen)
+            )
+        _finish_chunk_pass(
+            conn, new_gen, total, n_dead, retain_seconds, now, stats
         )
-        from .writer import chunk_table_writer
-
-        # same write options as the ingest path (hash bloom filter): a
-        # vacuum rewrite must not silently degrade point-fetch pruning
-        chunk_table_writer(live).mode("overwrite").parquet(new_path)
-        kept = total - n_dead
-        conn.fs.replace_text(
-            os.path.join(conn.path, "CHUNKS"), f"chunks.g{gen}\n"
-        )
-        current = f"chunks.g{gen}"
-        for d in conn.fs.listdir(conn.path):
-            if (d == "chunks" or d.startswith("chunks.g")) and d != current:
-                if _retire(
-                    conn.fs, os.path.join(conn.path, d), retain_seconds, now
-                ):
-                    stats["chunk_gens_removed"] += 1
-                else:
-                    stats["chunk_gens_retained"] += 1
-        conn.invalidate_cache()
-
-        stats["chunks_kept"] = kept
-        stats["chunks_removed"] = n_dead
-        return stats
     finally:
         if refs is not None:
             refs.unpersist()

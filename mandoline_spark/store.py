@@ -235,7 +235,9 @@ class Connection:
     blob_lru_size: int = 1000
     # Driver-side index cap: a resolved index above this many entries
     # stays on the distributed path.  This cap and the next one also
-    # gate writer.write_variable's job-free driver write tier.
+    # gate writer.write_variable's job-free driver write tier and
+    # maintenance.vacuum's job-free chunk pass (there summed over every
+    # committed version's generations).
     index_map_max_entries: int = 2_000_000
     # Driver-side blob fetch eligibility: when the LOCAL chunk table's
     # on-disk footprint is under this bound, blobs are read with
@@ -671,16 +673,20 @@ class Connection:
     # -- driver-side read-through caches -------------------------------------
 
     def _local_index_plan(
-        self, version: int, var: str
+        self, version: int, var: str, ancestors: bool = True
     ) -> list[tuple[int, int]] | None:
         """Generation application order for the resolved (version, var)
         index — the driver-side mirror of :meth:`resolve_index_df` /
         :meth:`index_df` (version fallback, newest full + later deltas,
         delta-only base pulled from the nearest ancestor, recursively).
-        Pure fs metadata: no Spark involvement.  None ⇔ no version has
-        written the variable."""
+        ``ancestors=False`` keeps only the version's own generations (no
+        fallback, no ancestor base), as ``index_df`` does with the same
+        flag.  Pure fs metadata: no Spark involvement.  None ⇔ no
+        version has written the variable."""
         gens = self.index_gens(version, var)
         if not gens:
+            if not ancestors:
+                return None
             for vid in self.version_ids():  # newest first
                 if vid < version and self.index_gens(vid, var):
                     return self._local_index_plan(vid, var)
@@ -691,6 +697,8 @@ class Connection:
                 last_full = g
         if last_full is not None:
             return [(version, g) for g in gens if g >= last_full]
+        if not ancestors:
+            return [(version, g) for g in gens]
         base: list[tuple[int, int]] = []
         for vid in self.version_ids():  # newest first
             if vid < version and self.index_gens(vid, var):
@@ -864,23 +872,20 @@ class Connection:
 
         import pyarrow as pa
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
         want = pa.array(list(set(hashes)), pa.string())
 
         def fetch(fp: str) -> list:
             found = []
-            with pq.ParquetFile(fp) as pf:
-                for rg in range(pf.num_row_groups):
-                    h = pf.read_row_group(rg, columns=["hash"]).column("hash")
-                    hit = np.flatnonzero(
-                        pc.is_in(h, value_set=want).to_numpy()
-                    ).tolist()
-                    if hit and blobs:
-                        b = pf.read_row_group(rg, columns=["blob"])["blob"]
-                        found += [(h[i], b[i]) for i in hit]
-                    else:
-                        found += [(h[i], None) for i in hit]
+            for pf, rg, h in _row_group_hashes(fp):
+                hit = np.flatnonzero(
+                    pc.is_in(h, value_set=want).to_numpy()
+                ).tolist()
+                if hit and blobs:
+                    b = pf.read_row_group(rg, columns=["blob"])["blob"]
+                    found += [(h[i], b[i]) for i in hit]
+                else:
+                    found += [(h[i], None) for i in hit]
             return found
 
         out: dict = {}
@@ -1038,13 +1043,18 @@ class Connection:
             .select("ckey", *[F.col(f"_w.{c}").alias(c) for c in payload])
         )
 
-    def index_df(self, version: int, var: str) -> DataFrame | None:
+    def index_df(
+        self, version: int, var: str, ancestors: bool = True
+    ) -> DataFrame | None:
         """Resolved index from this version's own generations: the
         newest full generation overlaid with every later delta.  When
         the version has only delta generations, the base is pulled from
         the nearest ancestor version with an index (its own resolution,
-        recursively — compaction keeps these chains short).  None when
-        the version never wrote the variable."""
+        recursively — compaction keeps these chains short), unless
+        ``ancestors`` is False: the frame then holds only the entries
+        this version's own generations resolve (vacuum's liveness
+        union, where every ancestor is counted under its own row).  None
+        when the version never wrote the variable."""
         gens = self.index_gens(version, var)
         if not gens:
             return None
@@ -1110,7 +1120,7 @@ class Connection:
             df = self._overlay_stack(
                 base, [(g, self._gen_df(version, var, g)) for g in deltas]
             )
-        if last_full is None:
+        if last_full is None and ancestors:
             for vid in self.version_ids():  # newest first
                 if vid < version and self.index_gens(vid, var):
                     anc = self.index_df(vid, var)
@@ -1178,6 +1188,18 @@ def _has_parquet(fs, path: str) -> bool:
         if fs.isdir(sub) and _has_parquet(fs, sub):
             return True
     return False
+
+
+def _row_group_hashes(fp: str):
+    """Yield (file handle, row-group index, ``hash`` column) for each
+    row group of one local chunk file, reading the hash column alone —
+    the hash-first scan shared by the driver blob fetch and vacuum's
+    driver tier."""
+    import pyarrow.parquet as pq
+
+    with pq.ParquetFile(fp) as pf:
+        for rg in range(pf.num_row_groups):
+            yield pf, rg, pf.read_row_group(rg, columns=["hash"]).column("hash")
 
 
 def _local_parquet_files(path: str) -> list[str]:

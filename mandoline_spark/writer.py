@@ -433,25 +433,49 @@ CHUNK_ROW_GROUP_BYTES = 128 << 20
 
 
 def _write_local_parquet(
-    schema: T.StructType, cols: dict, directory: str,
-    row_group_size: int | None = None,
+    schema: T.StructType, tables, directory: str,
+    row_group_bytes: int | None = None,
 ) -> None:
-    """Write ``cols`` as ``<directory>/part-0.parquet`` (zstd, row
-    groups of ``row_group_size`` rows, pyarrow's default when None) with
-    ``schema``'s types.  The file is written under an underscore name
-    and renamed into place, so readers — Spark's and
+    """Stream ``tables`` — Arrow tables or dicts of columns — with
+    ``schema``'s types into ``<directory>/part-0.parquet`` (zstd).  With
+    ``row_group_bytes``, tables are gathered into row groups of about
+    that many Arrow bytes (chunk files: a point read then decompresses
+    one bounded row group); without it each table is written with
+    pyarrow's default row groups.  The file is written under an
+    underscore name and renamed into place, so readers — Spark's and
     :func:`~mandoline_spark.store._has_parquet` alike skip underscore
     names — never see a partial file."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
+    arrow = to_arrow_schema(schema)
     os.makedirs(directory, exist_ok=True)
     tmp = os.path.join(directory, "_part-0.parquet")
-    pq.write_table(
-        pa.table(cols, schema=to_arrow_schema(schema)), tmp,
-        compression="zstd", row_group_size=row_group_size,
-    )
+    with pq.ParquetWriter(tmp, arrow, compression="zstd") as out:
+        buf: list = []
+
+        def flush():
+            t = pa.concat_tables(buf)
+            buf.clear()
+            out.write_table(
+                t, max(1, row_group_bytes * t.num_rows // max(1, t.nbytes))
+            )
+
+        for t in tables:
+            t = (
+                pa.Table.from_pydict(t, schema=arrow)
+                if isinstance(t, dict)
+                else t.cast(arrow)
+            )
+            if row_group_bytes is None:
+                out.write_table(t)
+                continue
+            buf.append(t)
+            if sum(b.nbytes for b in buf) >= row_group_bytes:
+                flush()
+        if buf:
+            flush()
     os.replace(tmp, os.path.join(directory, "part-0.parquet"))
 
 
@@ -543,16 +567,17 @@ def _driver_write(
         if new:
             import uuid
 
-            nbytes = [len(b) for b in new.values()]
             _write_local_parquet(
                 CHUNK_SCHEMA,
-                {"hash": list(new), "blob": list(new.values()), "nbytes": nbytes},
+                [{
+                    "hash": list(new),
+                    "blob": list(new.values()),
+                    "nbytes": [len(b) for b in new.values()],
+                }],
                 os.path.join(
                     conn.chunks_path(), f"job-{uuid.uuid4().hex[:12]}"
                 ),
-                row_group_size=max(
-                    1, CHUNK_ROW_GROUP_BYTES * len(nbytes) // sum(nbytes)
-                ),
+                row_group_bytes=CHUNK_ROW_GROUP_BYTES,
             )
 
         def write_rows(gen_path: str, is_delta: bool, record_masks: bool) -> int:
@@ -570,7 +595,7 @@ def _driver_write(
                 else None
                 for c in coords
             ]
-            _write_local_parquet(_index_gen_schema(ndim), cols, gen_path)
+            _write_local_parquet(_index_gen_schema(ndim), [cols], gen_path)
             return len(coords)
 
         _commit_generation(

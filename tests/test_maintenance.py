@@ -48,7 +48,8 @@ def test_vacuum_unpersists_refs_on_failure(store, spark):
     """A vacuum that raises mid-rewrite must not leak the persisted
     ref-hash frame for the session's lifetime (ADVICE r8): the
     unpersist sits in a finally block, so an injected pointer-flip
-    failure leaves the persistent-RDD census unchanged."""
+    failure leaves the persistent-RDD census unchanged.  The byte cap
+    0 keeps this local store on the Spark tier, which persists."""
     import pytest
 
     conn = store.create_dataset("ds")
@@ -56,6 +57,7 @@ def test_vacuum_unpersists_refs_on_failure(store, spark):
     # dead chunks: an uncommitted ingest makes the dirty path run
     t2 = conn.add_version(DDS)
     writer.write_variable(conn, t2, "foo", [sb.empty("int", FULL, 2)])
+    conn.blob_local_fetch_max_bytes = 0
 
     orig = conn.fs.replace_text
 
@@ -71,6 +73,42 @@ def test_vacuum_unpersists_refs_on_failure(store, spark):
         conn.fs.replace_text = orig
     after = len(spark.sparkContext._jsc.getPersistentRDDs())
     assert after == before, "vacuum leaked a persisted refs frame"
+
+
+def test_local_vacuum_flip_failure_keeps_old_generation(store):
+    """The driver tier's twin of the test above: a pointer-flip failure
+    after the survivors are written leaves ``CHUNKS`` naming the old
+    generation and every committed version readable."""
+    import os
+
+    import pytest
+
+    conn = store.create_dataset("ds")
+    v1 = _write_version(conn, 1)
+    t2 = conn.add_version(DDS)
+    writer.write_variable(conn, t2, "foo", [sb.empty("int", FULL, 2)])
+    vacuum(conn)  # first collection: CHUNKS names chunks.g0
+    v3 = _write_version(conn, 3)
+    t4 = conn.add_version(DDS)
+    writer.write_variable(conn, t4, "foo", [sb.empty("int", FULL, 4)])
+    ptr = os.path.join(conn.path, "CHUNKS")
+    assert conn.fs.read_text(ptr).strip() == "chunks.g0"
+
+    def boom(*a, **k):
+        raise OSError("injected pointer-flip failure")
+
+    conn.fs.replace_text = boom
+    try:
+        with pytest.raises(OSError, match="injected"):
+            vacuum(conn)
+    finally:
+        del conn.fs.replace_text
+    assert conn.fs.read_text(ptr).strip() == "chunks.g0"
+    for v, val in [(v1, 1), (v3, 3)]:
+        got = reader.get_slice(conn, reader.on_version(conn, v), "foo", FULL)
+        np.testing.assert_array_equal(
+            got.data, np.full((8, 8), val, np.int32)
+        )
 
 
 def test_vacuum_keeps_time_travel(store):
