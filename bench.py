@@ -504,7 +504,7 @@ def main() -> None:
     # Size the shuffle to the benchmark scale (sf0.1 ≈ 30 MB of parquet):
     # 8 post-shuffle partitions keep every core busy without paying
     # 32-task scheduling overhead per tiny stage.  On a real cluster the
-    # session default (cores-proportional + AQE coalescing) applies.
+    # session default (cores-proportional) applies.
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     spark.conf.set("spark.sql.files.maxPartitionBytes", "512m")
 
@@ -573,20 +573,6 @@ def main() -> None:
         or k.endswith("_spread")
         or k == "arr_scan_strided_s2"
     }
-
-    # AQE exists to re-plan multi-GB shuffles at runtime (coalesce,
-    # skew-split); at sf0.1 every query-surface exchange is sub-MB, so
-    # its per-stage re-optimization cycle is pure job-submission
-    # overhead — measured 25-50ms per query on this surface with zero
-    # plan benefit (nothing to coalesce that the static 8-partition
-    # setting doesn't already give).  The SESSION default (session.py)
-    # keeps AQE on — that is the cluster configuration — and the array
-    # phase above runs under it (412 MiB of real bytes: its chunk-join
-    # exchanges are exactly what AQE is for; switching it off there
-    # measured ~2x slower scan/ingest).  This override is part of
-    # sizing the query-surface run to the benchmark scale, same as the
-    # shuffle-partition line above.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     # Queries whose CONSTRUCTION already executes Spark jobs — the
     # iterative label propagation (its rounds run eagerly), the IVF
@@ -741,32 +727,6 @@ def main() -> None:
         conc8_runs.append(round(time.perf_counter() - t0, 4))
     concurrent8_sec = min(conc8_runs)
 
-    # AQE A/B (VERDICT r7 #5): the bench's AQE-off override for the
-    # query-surface loop gets a committed, same-session measurement —
-    # every 5th query (21 of 105, all shapes represented), best-of-2
-    # per mode, both modes interleaved into the same JVM state.
-    aqe_sample = [n for i, n in enumerate(sorted(QUERIES)) if i % 5 == 0]
-    aqe_ab: dict = {"n_queries": len(aqe_sample)}
-    aqe_per: dict[str, dict] = {}
-    for mode, label in (("false", "off_sec"), ("true", "on_sec")):
-        spark.conf.set("spark.sql.adaptive.enabled", mode)
-        per: dict[str, float] = {}
-        for _ in range(2):
-            for name in aqe_sample:
-                t0 = time.perf_counter()
-                _one_query(name)
-                dt = time.perf_counter() - t0
-                per[name] = min(per.get(name, dt), dt)
-        aqe_ab[label] = round(sum(per.values()), 4)
-        for name, dt in per.items():
-            aqe_per.setdefault(name, {})[label[:-4]] = round(dt, 4)
-    # per-query deltas ride the record (r13 verdict #7): the off/on
-    # TOTAL flipped sign between r12 and r13 records, and only the
-    # per-query view says whether that is a real plan regression or a
-    # few re-optimization-cycle constants moving in window noise
-    aqe_ab["per_query"] = aqe_per
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-
     # Same-session DuckDB pair (VERDICT r7 #5): the oracle baseline is
     # re-measured in THIS process's session window, so the reported
     # ratio is never normalized across the box's documented ±15-20%
@@ -898,7 +858,6 @@ def main() -> None:
         "jobs_per_query": jobs_per_query,
         "headline_decomposition": headline_decomposition,
         "arr_scan_meta": arr_scan_meta,
-        "aqe_ab": aqe_ab,
         "box_health": box_health,
         "fixture": "mf16 (lineitem+orders+events split into 16 part "
                    "files; other tables symlinked to the sf dir)",
@@ -951,7 +910,6 @@ def main() -> None:
                 "duckdb_concurrent8_sec": (
                     duck["concurrent8_wall_sec"] if duck else None
                 ),
-                "aqe_ab": aqe_ab,
                 "box_health": box_health,
                 "fixture": "mf16",
             }

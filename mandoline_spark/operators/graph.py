@@ -35,7 +35,6 @@ def connected_components(
     dst: str = "b",
     max_iter: int = 25,
     checkpoint_dir: str | None = None,
-    manage_aqe: bool = True,
     hops_per_job: int = 2,
 ) -> DataFrame:
     """(id, cluster) for every node in ``edges``, where ``cluster`` is
@@ -48,21 +47,11 @@ def connected_components(
     the 100 TB deployment path); when None, executor-local
     checkpoints (single-job local runs).  Results are identical.
 
-    AQE note (r14, measured): with spark.sql.adaptive.enabled the
-    engine materializes and RE-OPTIMIZES every round's exchanges — a
-    query-stage cycle per iteration that added ~40% to the q83
-    curation pipeline at sf0.1 (BASELINE.md "AQE A/B flip") while
-    changing nothing (the loop's partitioning is already fixed by the
-    pre-partitioned edge cache + ReuseExchange).  Since r15 the ENGINE
-    owns that recommendation (VERDICT r14 #6): ``manage_aqe=True``
-    (default) saves the session's ``spark.sql.adaptive.enabled``,
-    disables it around the iteration, and restores it in a finally —
-    per-round plans here are statically right by construction, so the
-    re-plan cycle buys nothing.  The toggle is a SESSION conf: a
-    concurrent thread compiling unrelated queries on the same session
-    during the loop would also compile them AQE-off (correct, just
-    un-adaptive) — pass ``manage_aqe=False`` to leave the conf alone
-    in that regime (the caller then eats the measured per-round tax).
+    The operator reads and writes no session conf.  Its per-round plans
+    are partitioned statically (the pre-partitioned edge cache plus
+    ReuseExchange), so on a session a user runs with AQE on, every
+    round pays AQE's re-plan cycle for no plan change and gives the
+    same labels.
 
     Block freeing is per-handle: each round unpersists the PREVIOUS
     round's checkpoint through that checkpoint's own RDD (the
@@ -189,46 +178,32 @@ def connected_components(
     # ~25 rounds the planner itself OOMs the driver (observed on a
     # 30-node chain).  Checkpointing truncates the lineage to the
     # materialized blocks — plan size stays O(1) per round.
-    # every action below (checkpoint jobs, observation gets) runs in
-    # the AQE-off window when the session default is on — see the AQE
-    # note in the docstring; restore is unconditional via finally so
-    # an exception (incl. the non-convergence raise path's unpersist)
-    # can never leak a flipped conf
-    spark = edges.sparkSession
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled", "false")
-    flip_aqe = manage_aqe and str(old_aqe).lower() == "true"
-    if flip_aqe:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        if hops_per_job < 1:
-            raise ValueError(f"hops_per_job must be >= 1: {hops_per_job}")
-        for it in range(0, max_iter, hops_per_job):
-            obs = Observation()
-            # first_hop already embodies one propagation step, so the
-            # opening round composes one fewer _step
-            cand = first_hop if it == 0 else labels
-            for _ in range(hops_per_job - (1 if it == 0 else 0)):
-                cand = _step(cand)
-            cand = cand.observe(obs, _sum)
-            new_labels, new_handle = _ckpt(cand)
-            cur_sum = obs.get["s"]
-            if it == 0:
-                prev_sum = obs0.get["ids"]  # identity-label sum
-            if label_handle is not None:
-                # the checkpoint job was the last consumer of the
-                # previous round's blocks — free them now; at most two
-                # snapshots are ever live (a localCheckpoint is
-                # unreadable once freed, so this must stay AFTER the
-                # materialization)
-                _free(label_handle)
-            labels, label_handle = new_labels, new_handle
-            if cur_sum == prev_sum:
-                converged = True
-                break
-            prev_sum = cur_sum
-    finally:
-        if flip_aqe:
-            spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
+    if hops_per_job < 1:
+        raise ValueError(f"hops_per_job must be >= 1: {hops_per_job}")
+    for it in range(0, max_iter, hops_per_job):
+        obs = Observation()
+        # first_hop already embodies one propagation step, so the
+        # opening round composes one fewer _step
+        cand = first_hop if it == 0 else labels
+        for _ in range(hops_per_job - (1 if it == 0 else 0)):
+            cand = _step(cand)
+        cand = cand.observe(obs, _sum)
+        new_labels, new_handle = _ckpt(cand)
+        cur_sum = obs.get["s"]
+        if it == 0:
+            prev_sum = obs0.get["ids"]  # identity-label sum
+        if label_handle is not None:
+            # the checkpoint job was the last consumer of the
+            # previous round's blocks — free them now; at most two
+            # snapshots are ever live (a localCheckpoint is
+            # unreadable once freed, so this must stay AFTER the
+            # materialization)
+            _free(label_handle)
+        labels, label_handle = new_labels, new_handle
+        if cur_sum == prev_sum:
+            converged = True
+            break
+        prev_sum = cur_sum
     und.unpersist()
     if not converged:
         # partial labels are silently WRONG (a path longer than
@@ -249,7 +224,6 @@ def dedup_clusters(
     size_col: str = "n_chars",
     max_iter: int = 25,
     checkpoint_dir: str | None = None,
-    manage_aqe: bool = True,
     hops_per_job: int = 2,
 ) -> DataFrame:
     """Assign every document to a duplicate cluster and pick its
@@ -263,7 +237,6 @@ def dedup_clusters(
         pairs,
         max_iter=max_iter,
         checkpoint_dir=checkpoint_dir,
-        manage_aqe=manage_aqe,
         hops_per_job=hops_per_job,
     )
     labeled = docs.select(

@@ -199,11 +199,13 @@ def salted_join(
     side is replicated once per salt value, so one hot key's rows spread
     over ``n_salt`` shuffle partitions instead of one straggler task.
 
-    AQE's skew-join split handles moderate skew automatically (it is on
-    in the engine session); explicit salting is for the pathological
-    case — a single key holding a double-digit percentage of the table —
-    where even a split partition's sort/build side is dominated by one
-    group.  Cost: right side is shuffled n_salt times its size.
+    The engine session runs with AQE off, so its skew guards are
+    explicit: this join for a hot join key, and ``max_df`` for hot
+    shingles in the dedup pair emitters.  A user can turn AQE on for
+    their own session; its skew-join split then handles moderate skew,
+    but not a single key holding a double-digit percentage of the
+    table, where even a split partition's sort/build side is dominated
+    by one group.  Cost: right side is shuffled n_salt times its size.
 
     Join types preserving unmatched RIGHT rows are rejected: the right
     side is replicated per salt, so a right/full outer join would emit

@@ -3002,7 +3002,7 @@ def q91(spark, sf):
     term once the fact side shrinks (r8 measured SMJ ahead at sf0.1
     by 0.24 s of tiny-input constants; sf1 reverses it by 25-35%);
     the per-partition hash build on the smaller input is bounded by
-    shuffle-partition sizing and AQE still re-plans around it."""
+    shuffle-partition sizing."""
     li = load(spark, sf, "lineitem")
     o = load(spark, sf, "orders")
     c = load(spark, sf, "customer")

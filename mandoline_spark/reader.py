@@ -24,7 +24,7 @@ tables read the blobs through Spark.
 
 Scale notes: the index is pruned before any IO (predicate on plain int
 columns → Parquet row-group pruning); the chunks join is hash-equi and
-AQE-broadcastable when the pruned slice is small; decode/clip runs in
+broadcastable when the pruned slice is small; decode/clip runs in
 executors so the driver only materializes the final requested
 hyper-rectangle (which is the contract of ``get_slice``).  ``stream``
 exposes the pieces as an iterator for callers that want to avoid even

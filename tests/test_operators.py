@@ -408,55 +408,65 @@ def test_text_metrics_null_vs_empty(spark):
     assert rows[3][0] > 0 and rows[3][1] == 0.5
 
 
-def test_connected_components_manages_aqe(spark):
-    """r15 (VERDICT r14 #6): the engine owns the measured AQE
-    recommendation — on an AQE-on session the iteration runs with
-    adaptive execution disabled (no per-round re-plan cycle), the
-    session conf is RESTORED afterwards (including on the
-    non-convergence raise path), results are unchanged, and
-    ``manage_aqe=False`` leaves the conf untouched throughout."""
-    import pytest
-
-    from mandoline_spark.operators.graph import connected_components
+def test_graph_operators_aqe_invariant_and_conf_untouched(spark, monkeypatch):
+    """Connected components and dedup clusters give the same labels on
+    an AQE-on session as on the shipped AQE-off one, and never write
+    session conf: the SQL conf is identical before the call, at every
+    round's checkpoint, and after it, including on the
+    non-convergence raise path."""
+    from mandoline_spark.operators.graph import (
+        connected_components,
+        dedup_clusters,
+    )
 
     key = "spark.sql.adaptive.enabled"
     old = spark.conf.get(key)
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11)], "a long, b long"
     )
-    expect = {(i, 1) for i in (1, 2, 3, 4)} | {(10, 10), (11, 10)}
+    docs = spark.createDataFrame(
+        [(1, 10), (2, 30), (3, 30), (4, 5), (10, 7), (11, 9), (12, 1)],
+        "doc_id long, n_chars long",
+    )
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(12)], "a long, b long"
+    )
 
-    seen_inside: list[str] = []
-    # observe the conf mid-iteration via the checkpoint hook: wrap
-    # localCheckpoint on the DataFrame class is invasive; instead use a
-    # 1-hop graph where the FIRST round converges and read the conf
-    # right after (the finally must already have restored it), plus a
-    # deep chain that raises — both paths restore.
+    def confs():
+        return {r.key: r.value for r in spark.sql("SET").collect()}
+
+    def run_all():
+        cc = {(r.id, r.cluster) for r in connected_components(edges).collect()}
+        dc = [
+            (r.cluster, r.keep_id, r.n_docs)
+            for r in dedup_clusters(docs, edges).collect()
+        ]
+        return cc, dc
+
+    assert old == "false"
+    off = run_all()
+    assert off[0] == {(i, 1) for i in (1, 2, 3, 4)} | {(10, 10), (11, 10)}
+    assert off[1] == [(1, 2, 4), (10, 11, 2), (12, 12, 1)]
+
+    during: list[dict] = []
+    df_cls = type(edges)  # the concrete class, not the pyspark.sql ABC
+    real = df_cls.localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        during.append(confs())
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(df_cls, "localCheckpoint", spy)
     try:
         spark.conf.set(key, "true")
-        got = {
-            (r.id, r.cluster)
-            for r in connected_components(edges).collect()
-        }
-        assert got == expect
-        assert spark.conf.get(key) == "true", "conf not restored"
-        # raise path: a 12-node chain cannot converge in 2 hops
-        chain = spark.createDataFrame(
-            [(i, i + 1) for i in range(12)], "a long, b long"
-        )
+        before = confs()
+        assert before[key] == "true"
+        assert run_all() == off
+        # a 12-node chain cannot converge in 2 hops
         with pytest.raises(RuntimeError, match="did not converge"):
             connected_components(chain, max_iter=2)
-        assert spark.conf.get(key) == "true", "raise path leaked conf"
-        # opt-out regime: conf is never touched, so mid-run state is
-        # whatever the session says; just assert correctness + no flip
-        got2 = {
-            (r.id, r.cluster)
-            for r in connected_components(
-                edges, manage_aqe=False
-            ).collect()
-        }
-        assert got2 == expect
-        assert spark.conf.get(key) == "true"
+        assert confs() == before
+        assert during and all(c == before for c in during)
     finally:
         spark.conf.set(key, old)
 

@@ -109,6 +109,23 @@ def test_query_matches_oracle(name, spark, duck):
     _assert_equal(name, got, want)
 
 
+# every 5th declared query: all query shapes are represented
+AQE_SAMPLE = QUERY_NAMES[::5]
+
+
+@pytest.mark.parametrize("name", AQE_SAMPLE)
+def test_query_matches_oracle_with_aqe_on(name, spark, duck):
+    """Results must not depend on AQE: the engine ships it off, and a
+    user's session that turns it on gets the same exact-string rows."""
+    key = "spark.sql.adaptive.enabled"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "true")
+        test_query_matches_oracle(name, spark, duck)
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0

@@ -5,6 +5,8 @@ plan regression fails loudly instead of running 10x slower."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -626,8 +628,6 @@ def test_q84_argmax_is_aggregate_not_rank_window(spark):
     and shuffle every (doc, word) score row instead of reducing to one
     row per doc map-side.  Exactly ONE Window node may remain — the df
     count, which shares the tf exchange."""
-    import re
-
     text = explain_str(QUERIES["q84_tfidf_top_term"](spark, SF))
     for fn in ("row_number", "dense_rank", "rank("):
         assert fn not in text, (fn, text)
@@ -644,8 +644,6 @@ def test_q60_exact_side_has_no_percentile_aggregate(spark):
     sketch under test) is the one allowed percentile node, and the
     3-row sketch side must broadcast into the count pass."""
     text = explain_str(QUERIES["q60_approx_percentile"](spark, SF))
-    import re
-
     bare = re.sub(r"approx_percentile", "", text)
     assert "percentile" not in bare, text
     assert "Window" not in text, text
@@ -718,8 +716,6 @@ def test_delta_stack_resolution_is_single_scan(spark, tmp_path):
     # 4-delta stack relation (the winner feeds both union branches of
     # the final anti-join overlay).  The r4 per-delta chain grew a
     # scan pair per generation (~9 nodes here).
-    import re
-
     nodes = set(re.findall(r"\((\d+)\) Scan parquet", text))
     assert len(nodes) <= 3, (sorted(nodes), text)
     assert "max_by" in text, text
@@ -737,8 +733,11 @@ def test_ranged_is_range_exchange_plus_inpartition_sort(spark):
     text = explain_str(ranged(df, "k", "id"))
     assert "rangepartitioning(k" in text.lower(), text
     # exactly one Sort node, and every Sort Arguments line is the
-    # in-partition form "...], false, 0" (a global orderBy prints true)
-    n_sorts = sum(1 for ln in text.splitlines() if ln.strip().endswith("Sort"))
+    # in-partition form "...], false, 0" (a global orderBy prints true).
+    # Nodes are counted by their numbered detail header "(4) Sort ...":
+    # the tree line reads "Sort (4)" with AQE on and "* Sort (4)" with
+    # it off, while the header has one form in both.
+    n_sorts = len(re.findall(r"^\(\d+\) Sort\b", text, re.M))
     assert n_sorts == 1, text
     assert "], false, 0" in text and "], true," not in text, text
 

@@ -1,8 +1,13 @@
 """Session factory: driver-heap sizing must respect container (cgroup)
-limits, not just host MemAvailable (VERDICT r7 #3)."""
+limits, not just host MemAvailable (VERDICT r7 #3); the shipped AQE
+setting is off, and no engine module writes it."""
 
 from __future__ import annotations
 
+import pathlib
+import re
+
+import mandoline_spark
 from mandoline_spark.sources.session import (
     _cgroup_limit_gb,
     _default_driver_mem,
@@ -48,3 +53,28 @@ def test_cgroup_uncapped_sentinels(tmp_path):
     assert _cgroup_limit_gb((str(tmp_path / "missing"),)) is None
     v2.write_text(f"{16 << 30}\n")
     assert _cgroup_limit_gb((str(v2),)) == 16
+
+
+def test_shipped_session_runs_aqe_off(spark):
+    """One AQE setting, off: the factory sets ``adaptive.enabled=false``
+    and no other ``spark.sql.adaptive.*`` key (those only act with AQE
+    on)."""
+    shipped = {
+        k: v
+        for k, v in spark.sparkContext.getConf().getAll()
+        if k.startswith("spark.sql.adaptive.")
+    }
+    assert shipped == {"spark.sql.adaptive.enabled": "false"}
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+
+
+def test_no_engine_module_sets_adaptive_conf():
+    """Operators never write the AQE conf of the caller's session."""
+    pat = re.compile(r"conf\.set\(\s*[\"']spark\.sql\.adaptive")
+    root = pathlib.Path(mandoline_spark.__file__).parent
+    hits = [
+        str(p.relative_to(root))
+        for p in root.rglob("*.py")
+        if pat.search(p.read_text())
+    ]
+    assert hits == []

@@ -69,7 +69,6 @@ def main() -> None:
     # override would under-parallelize — 32 matches local[32]
     spark.conf.set("spark.sql.shuffle.partitions", "32")
     spark.conf.set("spark.sql.files.maxPartitionBytes", "512m")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     sc = spark.sparkContext
 
     # the gate aborts (exit 3) on a persistently degraded box when

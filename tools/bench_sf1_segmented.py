@@ -99,9 +99,8 @@ def run_segment(i: int, n: int, sf1_dir: str) -> None:
         "queries": {},
     }
 
-    # the array workload rides segment 0 (synthetic, sf-independent)
-    # under the session-default AQE, exactly like bench.py's phase
-    # ordering — BEFORE the query loop's AQE-off override
+    # the array workload rides segment 0 (synthetic, sf-independent),
+    # before the query loop, exactly like bench.py's phase ordering
     if i == 0:
         arr = bench_array(spark)
         out["array"] = {
@@ -109,8 +108,6 @@ def run_segment(i: int, n: int, sf1_dir: str) -> None:
             for k, v in arr.items()
             if not (k.endswith("_runs") or k.endswith("_spread"))
         }
-
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     # build (and for the memoizing streaming entries: ingest) outside
     # the timers — build_sec reported, mirroring bench.py
@@ -324,7 +321,6 @@ def run_fixup(n: int, fix_names: list[str], sf1_dir: str) -> None:
 
     mf_dir = make_mf_fixture(sf1_dir)
     os.environ["MANDOLINE_TEST_SF"] = mf_dir
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     # warmup (codegen, footers, memoized fixtures/ingest)
     built = {

@@ -25,7 +25,6 @@ def main() -> None:
     spark = get_spark("dump_plan")
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         df = QUERIES[name](spark, sf_dir)

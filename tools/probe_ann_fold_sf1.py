@@ -41,7 +41,6 @@ def main() -> None:
     spark = get_spark("ann_fold_probe")
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     sc = spark.sparkContext
 
     e = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))

@@ -36,7 +36,6 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     spark.conf.set("spark.sql.files.maxPartitionBytes", "512m")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     sc = spark.sparkContext
 
     d = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))

@@ -101,7 +101,6 @@ def run_phase(phase: str, sf1_dir: str) -> None:
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.shuffle.partitions", "32")
     spark.conf.set("spark.sql.files.maxPartitionBytes", "512m")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     mf_dir = make_mf_fixture(sf1_dir)
 

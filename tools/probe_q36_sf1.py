@@ -33,7 +33,6 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.shuffle.partitions", "32")
     spark.conf.set("spark.sql.files.maxPartitionBytes", "512m")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     d = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     K, BANDS, T, MB = 64, 16, 0.8, 10_000  # q36's declared parameters

@@ -54,7 +54,6 @@ def run_label(label: str, sf1_dir: str) -> None:
     spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.shuffle.partitions", "32")
     spark.conf.set("spark.sql.files.maxPartitionBytes", "512m")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     def run(df) -> None:
         df.select("*")._jdf.queryExecution().toRdd().count()

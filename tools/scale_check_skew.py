@@ -13,10 +13,11 @@ their job on deliberately pathological inputs.
 2. **salted_join** — a fact table whose join key is 50 % one hot value
    against a small dim: the plain shuffle join sends half the table
    through ONE task (the classic straggler); ``salted_join`` spreads
-   the hot key over ``n_salt`` partitions.  AQE's skew-join split is
-   the first line of defense in the engine session; the explicit salt
-   exists for the pathological tail AQE's thresholds miss and is
-   measured here with AQE OFF to isolate the mechanism.
+   the hot key over ``n_salt`` partitions.  The engine session runs
+   with AQE off, so ``salted_join`` and ``max_df`` are its skew
+   guards; AQE's skew-join split is something a user can turn on for
+   their own session.  The join is measured here with AQE pinned OFF
+   (restored afterwards) to isolate the mechanism.
 
 Round-8 findings (local[32], sf0.1 docs, best-of-2): boilerplate
 corpus with max_df=20 runs in 1.9 s — the same wall as the clean

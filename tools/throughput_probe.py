@@ -45,7 +45,6 @@ def main() -> None:
     spark = get_spark("throughput_probe")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     spark.conf.set("spark.sql.files.maxPartitionBytes", "512m")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     from pyspark.sql import functions as F
 
