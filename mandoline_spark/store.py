@@ -60,7 +60,7 @@ from dataclasses import dataclass, field
 from typing import Any, Mapping
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from . import fs as fsmod
 from .core import metadata as md
@@ -77,6 +77,41 @@ _NAME_RE = re.compile(r"^(?!\.+$)[A-Za-z0-9_.-]+$")
 # bound exceeded the driver-map cap — delegate to the Spark
 # limit-collect, which decides exactly
 _SPARK_RESOLVE = object()
+
+
+# -- table schemas: declared on every Spark read of the engine's own
+# tables, so no read launches a footer-inference job --------------------
+
+
+def _coord_cols(ndim: int) -> list[str]:
+    return [f"c{i}" for i in range(ndim)]
+
+
+def index_schema(ndim: int) -> T.StructType:
+    fields = [T.StructField("ckey", T.StringType(), False)]
+    fields += [T.StructField(c, T.IntegerType(), False) for c in _coord_cols(ndim)]
+    fields.append(T.StructField("chunk_hash", T.StringType(), False))
+    return T.StructType(fields)
+
+
+def _index_gen_schema(ndim: int) -> T.StructType:
+    """Columns of a committed index generation: :func:`index_schema`
+    plus the ``wb`` mask column (``writer._WB_TYPE``).  A generation
+    written before masks existed has no ``wb``; read under this schema
+    it comes back null, the wholesale value."""
+    return T.StructType(
+        list(index_schema(ndim).fields)
+        + [T.StructField("wb", T.ArrayType(T.IntegerType()), True)]
+    )
+
+
+CHUNK_SCHEMA = T.StructType(
+    [
+        T.StructField("hash", T.StringType(), False),
+        T.StructField("blob", T.BinaryType(), False),
+        T.StructField("nbytes", T.LongType(), False),
+    ]
+)
 
 
 def parse_uri(uri: str) -> tuple[str, str, int | None]:
@@ -617,9 +652,17 @@ class Connection:
         )
 
     def _maybe_cached(
-        self, key: tuple, path: str, recursive: bool = False
+        self,
+        key: tuple,
+        path: str,
+        schema: T.StructType | None,
+        recursive: bool = False,
     ) -> DataFrame:
+        # a declared schema keeps the read job-free: without one, Spark
+        # infers it from a footer in a one-task job
         reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(schema)
         if recursive:
             # chunk batches land in per-job subdirectories (concurrent
             # writers cannot share one append's _temporary staging);
@@ -633,8 +676,8 @@ class Connection:
             epoch = self._cache_epoch
         if hit is not None:
             return hit
-        # Build the plain frame OUTSIDE the lock (schema inference
-        # lists files), but mark it cached only under the lock and only
+        # Build the plain frame OUTSIDE the lock (the relation lists
+        # files), but mark it cached only under the lock and only
         # if no invalidation landed mid-construction.  Never .cache()
         # first and unpersist on mismatch: Spark's CacheManager matches
         # by LOGICAL PLAN, so unpersisting our stale same-plan frame
@@ -979,11 +1022,32 @@ class Connection:
         path = self.chunks_path()
         if not _has_parquet(self.fs, path):
             return None
-        return self._maybe_cached(("chunks", path), path, recursive=True)
+        return self._maybe_cached(
+            ("chunks", path), path, CHUNK_SCHEMA, recursive=True
+        )
+
+    def _index_schema(self, version: int, var: str) -> T.StructType | None:
+        """Declared schema of ``var``'s index generations under
+        ``version``, from committed metadata: the version's own token,
+        or for an in-flight version the newest committed one below it
+        (its parent, whose shape it may not change — ``md.inherit``).
+        None when that token lacks ``var`` (a variable new in an
+        in-flight version): the read then infers the schema."""
+        for vid in self.version_ids():  # newest first
+            if vid <= version:
+                token = self.metadata(vid)
+                if var not in token.get("variables", {}):
+                    return None
+                return _index_gen_schema(
+                    len(md.get_variable_dimensions(token, var))
+                )
+        return None
 
     def _gen_df(self, version: int, var: str, gen: int) -> DataFrame:
         return self._maybe_cached(
-            ("index", version, var, gen), self.index_path(version, var, gen)
+            ("index", version, var, gen),
+            self.index_path(version, var, gen),
+            self._index_schema(version, var),
         )
 
     @staticmethod
@@ -1082,15 +1146,14 @@ class Connection:
                 )
                 epoch = self._cache_epoch
             if stack is None:
-                stack = (
-                    self.spark.read.option(
-                        "basePath", self.index_path(version, var)
-                    ).parquet(
-                        *[
-                            self.index_path(version, var, g)
-                            for g in deltas
-                        ]
-                    )
+                reader = self.spark.read.option(
+                    "basePath", self.index_path(version, var)
+                )
+                schema = self._index_schema(version, var)
+                if schema is not None:
+                    reader = reader.schema(schema)
+                stack = reader.parquet(
+                    *[self.index_path(version, var, g) for g in deltas]
                 )
                 # the g=N dir names must order NUMERICALLY: partition
                 # type inference normally yields int, but with

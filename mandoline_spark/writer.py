@@ -39,6 +39,7 @@ from __future__ import annotations
 
 from typing import Any, Callable, Iterable, Iterator, Mapping, Sequence
 
+import math
 import os
 
 import numpy as np
@@ -52,7 +53,15 @@ from .core import slice as sl
 from .core.slab import Slab
 from .core.slice import Slice
 from . import fs as fsmod
-from .store import _SPARK_RESOLVE, Connection, _local_parquet_files
+from .store import (
+    _SPARK_RESOLVE,
+    CHUNK_SCHEMA,
+    Connection,
+    _coord_cols,
+    _index_gen_schema,
+    _local_parquet_files,
+    index_schema,
+)
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -162,10 +171,6 @@ def _merge_chunk(
     return ck.generate_id(slab), sb.to_bytes(slab)
 
 
-def _coord_cols(ndim: int) -> list[str]:
-    return [f"c{i}" for i in range(ndim)]
-
-
 def piece_schema(ndim: int) -> T.StructType:
     """Schema of the exploded per-chunk piece rows."""
     fields = [T.StructField("ckey", T.StringType(), False)]
@@ -177,31 +182,6 @@ def piece_schema(ndim: int) -> T.StructType:
         T.StructField("data", T.BinaryType(), False),
     ]
     return T.StructType(fields)
-
-
-def index_schema(ndim: int) -> T.StructType:
-    fields = [T.StructField("ckey", T.StringType(), False)]
-    fields += [T.StructField(c, T.IntegerType(), False) for c in _coord_cols(ndim)]
-    fields.append(T.StructField("chunk_hash", T.StringType(), False))
-    return T.StructType(fields)
-
-
-def _index_gen_schema(ndim: int) -> T.StructType:
-    """Columns of a committed index generation: :func:`index_schema`
-    plus the ``wb`` mask column (``_WB_TYPE``)."""
-    return T.StructType(
-        list(index_schema(ndim).fields)
-        + [T.StructField("wb", T.ArrayType(T.IntegerType()), True)]
-    )
-
-
-CHUNK_SCHEMA = T.StructType(
-    [
-        T.StructField("hash", T.StringType(), False),
-        T.StructField("blob", T.BinaryType(), False),
-        T.StructField("nbytes", T.LongType(), False),
-    ]
-)
 
 
 def slabs_to_piece_rows(
@@ -281,20 +261,34 @@ def _index_rows_bound(
     plan = conn._local_index_plan(version, var)
     if not plan:
         return None
-    import pyarrow.parquet as pq
-
     total = 0
     try:
         for v, g in plan:
             d = conn.index_path(v, var, g)
-            for fn in sorted(conn.fs.listdir(d)):
-                if fn.endswith(".parquet"):
-                    total += pq.ParquetFile(
-                        os.path.join(d, fn)
-                    ).metadata.num_rows
+            total += _footer_rows(
+                os.path.join(d, fn)
+                for fn in conn.fs.listdir(d)
+                if fn.endswith(".parquet")
+            )
     except OSError:
         return None
     return total
+
+
+def _grid_shape(grid: Slice) -> list[int]:
+    """Chunks per dimension of a chunk grid (an edge chunk counts
+    whole)."""
+    return [
+        -(-(hi - lo) // st)
+        for lo, hi, st in zip(grid.start, grid.stop, grid.step)
+    ]
+
+
+def _footer_rows(files: Iterable[str]) -> int:
+    """Summed row counts of local parquet files, from their footers."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
 
 
 def _bcast_budget(conn: Connection) -> int:
@@ -982,6 +976,7 @@ def _commit_merged(
     index_mode: str,
     expected_gen: int | None = None,
     wb_df: DataFrame | None = None,
+    covers_grid: Callable[[], bool] | None = None,
 ) -> str | None:
     """Append chunks + write the next index generation from a merged
     (ckey, coords…, chunk_hash, blob, nbytes) DataFrame.  ``merged``
@@ -989,6 +984,22 @@ def _commit_merged(
     Returns the path of the index generation this call wrote (NOT
     necessarily the newest one — a concurrent shard writer may have
     claimed a later number), or None when nothing reached the index.
+
+    A full-mode generation carries every untouched base entry by an
+    anti-join of the base index against the batch's ckeys.
+    ``covers_grid`` (:func:`ingest_aligned`'s alignment observation)
+    is called once the chunk append has run and before a generation
+    is claimed; it may raise to abort the commit, and True proves the
+    batch writes every grid chunk, so the base index is never built
+    and nothing is carried.
+
+    The index write is ``coalesce(n_files)`` with ``n_files`` =
+    ceil(grid chunks / ``INDEX_ROWS_PER_FILE``): one task below 4M
+    grid chunks.  Measured against a floor of one file per core at the
+    perfbench bulk shape (1,400 grid chunks, local[4], 6 alternating
+    pairs), the index-write job took a median 90 / 96 ms (first
+    ingest / full-cover re-ingest) with one task and 106 / 108 ms with
+    four, which also wrote four times the files; so no floor.
 
     Concurrency: safe for multiple simultaneous driver processes
     writing the same in-flight version (the writer_token flow) —
@@ -1019,10 +1030,13 @@ def _commit_merged(
         conn.chunks_path(), f"job-{uuid.uuid4().hex[:12]}"
     )
     chunk_table_writer(new_chunks).mode("overwrite").parquet(batch_dir)
+    skip_carry = covers_grid is not None and covers_grid()
 
     # 2. Write the next index generation: written coords take the
     #    new hash.  Full mode also carries every untouched base
-    #    entry; delta mode leaves them to read-time overlay.
+    #    entry (there is none when ``covers_grid`` proved the batch
+    #    writes every chunk); delta mode leaves them to read-time
+    #    overlay.
     # The expected generation is snapshot where the caller read its
     # base (write_pieces passes it in — snapshotting here leaves a
     # TOCTOU window where a concurrent generation committed during the
@@ -1033,7 +1047,7 @@ def _commit_merged(
     if expected_gen is None:
         expected_gen = (own_gens[-1] + 1) if own_gens else 0
     if index_mode == "full":
-        base_index = _base_index_df(conn, token, var)
+        base_index = None if skip_carry else _base_index_df(conn, token, var)
         has_base = base_index is not None
     else:
         # delta commits consult only base EXISTENCE (the delta-vs-
@@ -1061,10 +1075,7 @@ def _commit_merged(
     # never widens, so at 100 TB (billions of chunks) the write keeps
     # its parallelism; locally the skinny projection collapses to one
     # right-sized file.
-    grid = md.get_chunk_grid_slice(token, var)
-    grid_chunks = 1
-    for lo, hi, st in zip(grid.start, grid.stop, grid.step):
-        grid_chunks *= -(-(hi - lo) // st)
+    grid_chunks = math.prod(_grid_shape(md.get_chunk_grid_slice(token, var)))
     n_files = max(1, -(-grid_chunks // INDEX_ROWS_PER_FILE))
 
     def write_rows(gen_path: str, is_delta: bool, record_masks: bool) -> int:
@@ -1707,6 +1718,23 @@ def claim_index_gen(conn: Connection, vid: int, var: str) -> tuple[str, int]:
     )
 
 
+def _local_dup_ckey(conn: Connection, gen_path: str) -> bool | None:
+    """Whether the index generation at ``gen_path`` repeats a ckey,
+    read with pyarrow on a LOCAL store whose generation footers hold at
+    most ``index_map_max_entries`` rows (the driver index cap); None
+    leaves the check to Spark."""
+    if not isinstance(conn.fs, fsmod.LocalFS):
+        return None
+    files = _local_parquet_files(gen_path)
+    if _footer_rows(files) > conn.index_map_max_entries:
+        return None
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    ckeys = pq.read_table(files, columns=["ckey"]).column("ckey")
+    return pc.count_distinct(ckeys).as_py() < len(ckeys)
+
+
 def ingest_aligned(
     conn: Connection,
     token: Mapping[str, Any],
@@ -1727,12 +1755,21 @@ def ingest_aligned(
     the dedup semi-join (which shuffles only (hash, 8-byte key) pairs — see
     :func:`_dedup_by_hash`) and the Parquet appends.
 
-    Both preconditions are verified without extra jobs: alignment by an
-    ``Observation`` piggybacked on the chunk append, uniqueness by a
-    blob-free scan of the just-written index generation.  A violation
-    raises after some data may have been appended — safely: the version
-    is uncommitted, so readers never see it (failed-ingest invisibility,
-    test/failed_ingest.clj:26-146), and orphaned blobs are vacuumable.
+    Alignment is verified by an ``Observation`` piggybacked on the
+    chunk append, and a misaligned batch raises before an index
+    generation is claimed.  The same observation counts the pieces and
+    those outside the chunk grid: an aligned full-mode batch with none
+    outside and one piece per grid chunk writes every chunk (or holds a
+    duplicate, caught next), so its generation carries nothing from the
+    base (:func:`_commit_merged`).  Uniqueness is checked on the
+    just-written generation's ``ckey`` column: with pyarrow on a LOCAL
+    store whose generation footers hold at most
+    ``index_map_max_entries`` rows (no job), else by one Spark
+    aggregation.  A violation raises after some data may have been
+    appended — safely: the version is uncommitted, so readers never see
+    it (failed-ingest invisibility, test/failed_ingest.clj:26-146), a
+    violating generation is deleted before the raise, and orphaned
+    blobs are vacuumable.
     """
     from pyspark.sql import Observation
 
@@ -1754,7 +1791,8 @@ def ingest_aligned(
             # but the CARRY is not)
             reconcile_version(conn, token, variables=[var])
 
-    full_cover = F.lit(True)
+    grid_shape = _grid_shape(grid)
+    full_cover = in_grid = F.lit(True)
     for i in range(ndim):
         step_i = grid.step[i]
         full_cover = (
@@ -1762,11 +1800,31 @@ def ingest_aligned(
             & (F.col("pstart")[i] == F.col(ccols[i]) * step_i)
             & (F.col("pstop")[i] == (F.col(ccols[i]) + 1) * step_i)
         )
+        in_grid = in_grid & F.col(ccols[i]).between(0, grid_shape[i] - 1)
     obs = Observation()
     checked = pieces.observe(
         obs,
         F.sum(F.when(full_cover, 0).otherwise(1)).alias("misaligned"),
+        F.sum(F.when(in_grid, 0).otherwise(1)).alias("outside"),
+        F.count(F.lit(1)).alias("pieces"),
     )
+
+    def covers_grid() -> bool:
+        # Delivered when the chunk append (the first action on the
+        # persisted batch) completes.  Zero observed pieces yield None
+        # sums (sum over no rows), not an error — any Observation
+        # failure is a genuine bug and must propagate rather than skip
+        # the alignment validation the fast path's correctness rests on.
+        seen = obs.get
+        if seen["misaligned"]:
+            raise ValueError(
+                f"ingest_aligned: {seen['misaligned']} piece(s) do not "
+                "cover their whole chunk slice; use write_pieces for "
+                "partial writes"
+            )
+        return not seen["outside"] and seen["pieces"] == math.prod(
+            grid_shape
+        )
     merged = checked.select(
         "ckey",
         *ccols,
@@ -1779,30 +1837,21 @@ def ingest_aligned(
     try:
         # use the generation THIS call claimed (index_gens[-1] could be
         # a concurrent shard writer's) for the self-checks below
-        gen_path = _commit_merged(conn, token, var, merged, index_mode)
+        gen_path = _commit_merged(
+            conn, token, var, merged, index_mode, covers_grid=covers_grid
+        )
         if gen_path is not None:  # None ⇔ empty pieces: no-op write
-            # No exception guard here: zero observed pieces yields
-            # {"misaligned": None} (sum over no rows), not an error —
-            # verified on this Spark — so any Observation failure is a
-            # genuine bug (observation not attached, Py4J fault) and
-            # must propagate rather than silently skip the alignment
-            # validation that guards the fast path's correctness
-            # contract (r12 advice).
-            bad = obs.get.get("misaligned")
-            if bad:
-                raise ValueError(
-                    f"ingest_aligned: {bad} piece(s) do not cover "
-                    "their whole chunk slice; use write_pieces for "
-                    "partial writes"
+            dup = _local_dup_ckey(conn, gen_path)
+            if dup is None:
+                dup = (
+                    conn.spark.read.schema(_index_gen_schema(ndim))
+                    .parquet(gen_path)
+                    .groupBy("ckey")
+                    .count()
+                    .filter(F.col("count") > 1)
+                    .limit(1)
+                    .count()
                 )
-            idx = conn.spark.read.parquet(gen_path)
-            dup = (
-                idx.groupBy("ckey")
-                .count()
-                .filter(F.col("count") > 1)
-                .limit(1)
-                .count()
-            )
             if dup:
                 raise ValueError(
                     "ingest_aligned: multiple pieces target the same "
