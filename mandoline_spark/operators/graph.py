@@ -1,23 +1,39 @@
-"""Distributed connected components — the dedup-cluster former.
+"""Connected components — the dedup-cluster former.
 
 Near-dup pair emitters (minhash/simhash/jaccard) produce EDGES; turning
 them into "keep one document per duplicate cluster" requires the
 connected components of that graph, with a deterministic cluster label
 (the minimum member id).
 
-Scale shape: iterative min-label propagation.  Each round is one
-hash-shuffle join (neighbor labels) + one groupBy(min) — no driver-side
-graph state, edges never leave the cluster.  Rounds needed equal the
-graph diameter, and duplicate clusters are near-cliques (diameter ≤ 2-3
-in practice) so convergence is a handful of rounds even at corpus
-scale; ``max_iter`` bounds the pathological chain.  The per-round
-convergence check is a scalar ``count`` — a control-plane signal, not a
-data collect.  Each round is checkpointed to keep the plan O(1), and
-the previous round's blocks are freed eagerly once its convergence
-count has consumed them, so at most two label snapshots are live.
+Two tiers, one contract.  Both run min-label propagation over the same
+self-looped undirected edge cache (``und``) with the same hop counting
+and convergence test, so they give the same labels and raise on the
+same ``max_iter``.
 
-Fault tolerance: the default ``localCheckpoint`` stores blocks on
-executors WITHOUT replication — fast, but an executor loss
+- **Driver tier.**  One bounded job collects at most ``cap + 1`` rows
+  of ``und`` as Arrow.  When the whole edge set came back (≤ ``cap``
+  rows, integral ids, no null endpoint) the rounds run in numpy and the
+  labels return to Spark as a local relation small enough for the
+  downstream join to broadcast (``cap`` is derived from
+  ``spark.sql.autoBroadcastJoinThreshold``; see
+  :func:`connected_components`).  Near-dup graphs at curation scale are
+  a few hundred edges, so this tier replaces every propagation round
+  with that one collect.
+- **Spark tier** (graphs over the cap, non-integral ids, null
+  endpoints, or a threshold ≤ 0).  Each round is one hash-shuffle join
+  (neighbor labels) + one groupBy(min) over the cached ``und``; no
+  driver-side graph state.  Rounds needed equal the graph diameter, and
+  duplicate clusters are near-cliques (diameter ≤ 2-3 in practice) so
+  convergence is a handful of rounds even at corpus scale; ``max_iter``
+  bounds the pathological chain.  The per-round convergence check is a
+  scalar sum — a control-plane signal, not a data collect.  Each round
+  is checkpointed to keep the plan O(1), and the previous round's
+  blocks are freed eagerly once its convergence sum has consumed them,
+  so at most two label snapshots are live; ``und`` and any unreturned
+  snapshot are freed on every exit, the raise paths included.
+
+Fault tolerance (Spark tier): the default ``localCheckpoint`` stores
+blocks on executors WITHOUT replication — fast, but an executor loss
 mid-iteration kills the job unrecoverably.  On a real cluster pass
 ``checkpoint_dir`` (an HDFS/S3A path): rounds then use reliable
 ``df.checkpoint()`` files that survive executor loss, at the cost of
@@ -26,7 +42,29 @@ one write+read of the (small: id, cluster) label table per round.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, functions as F, types as T
+
+# Catalyst's size estimate of the driver tier's (id, cluster) local
+# relation, per row: 8 B of row overhead + each column's default size.
+# Measured on Spark 4.1: a 1,000-row (long, long) relation estimates
+# 24,000 B and an (int, int) one 16,000 B; the long figure bounds every
+# integral id type.
+_LABEL_ROW_BYTES = 24
+
+_INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
+
+
+def _not_converged(max_iter: int) -> RuntimeError:
+    # partial labels are silently WRONG (a path longer than max_iter
+    # hasn't finished propagating its minimum) — fail loudly; callers
+    # with genuinely deep graphs raise max_iter
+    return RuntimeError(
+        f"connected_components did not converge in {max_iter} "
+        "rounds; the graph has a component with a longer diameter "
+        "— raise max_iter"
+    )
 
 
 def connected_components(
@@ -42,16 +80,32 @@ def connected_components(
     label).  Nodes appear once; isolated nodes don't exist by
     construction (an edge list has no degree-0 entries).
 
-    ``checkpoint_dir``: when set, per-round lineage truncation uses
-    reliable checkpoints under this directory (executor-loss tolerant —
-    the 100 TB deployment path); when None, executor-local
-    checkpoints (single-job local runs).  Results are identical.
+    Tiers: the driver tier runs when ``und`` (the self-looped,
+    undirected, distinct edge set — about 2·edges + nodes rows) has at
+    most ``cap = spark.sql.autoBroadcastJoinThreshold // 24`` rows,
+    integral ids and no null endpoint; 24 B is the measured Catalyst
+    estimate per (id, cluster) row, so the label relation it returns
+    stays within the threshold and a join against it broadcasts (the
+    default 10 MiB gives a cap of 436,906 rows).  One job collects at
+    most ``cap + 1`` rows of the ``und`` cache; over the cap, the Spark
+    tier's rounds read the cache that job filled, so the upstream edge
+    plan is evaluated once either way.  A threshold ≤ 0 always runs the
+    Spark tier.  Both tiers give the same labels and the same schema
+    (``int`` edge columns give ``struct<id:int,cluster:int>``), run
+    ``hops_per_job`` hops per round with the same convergence test, and
+    raise on the same ``max_iter``.
 
-    The operator reads and writes no session conf.  Its per-round plans
-    are partitioned statically (the pre-partitioned edge cache plus
-    ReuseExchange), so on a session a user runs with AQE on, every
-    round pays AQE's re-plan cycle for no plan change and gives the
-    same labels.
+    ``checkpoint_dir``: when set, the Spark tier's per-round lineage
+    truncation uses reliable checkpoints under this directory
+    (executor-loss tolerant — the 100 TB deployment path); when None,
+    executor-local checkpoints (single-job local runs).  Results are
+    identical.
+
+    The operator writes no session conf; the broadcast threshold is
+    the one it reads.  The Spark tier's per-round plans are partitioned
+    statically (the pre-partitioned edge cache plus ReuseExchange), so
+    on a session a user runs with AQE on, every round pays AQE's
+    re-plan cycle for no plan change and gives the same labels.
 
     Block freeing is per-handle: each round unpersists the PREVIOUS
     round's checkpoint through that checkpoint's own RDD (the
@@ -60,7 +114,114 @@ def connected_components(
     DataFrames on the same session can never be caught in the round's
     cleanup (the r4 global persistent-RDD-set diff could capture an
     interleaved persist)."""
-    sc = edges.sparkSession.sparkContext
+    if hops_per_job < 1:
+        raise ValueError(f"hops_per_job must be >= 1: {hops_per_job}")
+    # Undirected edge list WITH SELF-LOOPS via a per-row explode —
+    # ONE evaluation of the upstream plan (a union of the edge plan
+    # with its reversal evaluates the whole upstream pair pipeline,
+    # e.g. the full minhash/jaccard computation, TWICE inside the
+    # cache materialization; measured ~1.4s per extra evaluation on
+    # the declared q82 at sf0.1).  The self-loops make each round a
+    # single join + min-agg: every node offers its label to its
+    # neighbors AND itself, so no second labels join is needed to keep
+    # a node's own label in play (the r4 shape paid join + agg + a
+    # labels re-join per round).  The cache is pre-partitioned and
+    # pre-sorted on the join key, so every Spark-tier round's
+    # sort-merge join streams it with NO exchange and NO re-sort on
+    # the edge side — only the (tiny) label table moves, plus the one
+    # unavoidable groupBy(d) transpose exchange.
+    und = (
+        edges.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col(src).alias("s"), F.col(dst).alias("d")),
+                    F.struct(F.col(dst).alias("s"), F.col(src).alias("d")),
+                    F.struct(F.col(src).alias("s"), F.col(src).alias("d")),
+                    F.struct(F.col(dst).alias("s"), F.col(dst).alias("d")),
+                )
+            ).alias("e")
+        )
+        .select("e.s", "e.d")
+        .distinct()
+        .repartition(F.col("s"))
+        .sortWithinPartitions("s")
+        .cache()  # the gate's collect and every round read und:
+        # without this the upstream pair pipeline would re-run per read
+    )
+    try:
+        labels = _driver_components(und, max_iter, hops_per_job)
+        if labels is None:
+            labels = _spark_components(
+                und, max_iter, checkpoint_dir, hops_per_job
+            )
+        return labels
+    finally:
+        # both tiers' results are independent of und (a local relation
+        # or a checkpoint), so it is freed on every exit
+        und.unpersist()
+
+
+def _driver_components(
+    und: DataFrame, max_iter: int, hops_per_job: int
+) -> DataFrame | None:
+    """The driver tier: (id, cluster) as a local relation, or None when
+    ``und`` is over the cap, has non-integral ids or a null endpoint
+    (the Spark tier then runs; its null-endpoint labels are kept as
+    they are).  The collect computes every partition of the ``und``
+    cache in full (a cached partition is materialized whole before the
+    per-partition ``limit`` reads it), so an over-cap Spark tier finds
+    the cache filled; that job's exchange carries at most
+    ``min(rows, partitions · (cap + 1))`` rows."""
+    spark = und.sparkSession
+    cap = (
+        spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+        // _LABEL_ROW_BYTES
+    )
+    typ = und.schema["d"].dataType
+    if cap <= 0 or not isinstance(typ, _INTEGRAL):
+        return None
+    tbl = und.limit(cap + 1).toArrow()
+    if tbl.num_rows > cap or tbl.column("d").null_count:
+        return None
+    # dense node indices in id order: the minimum index IS the minimum
+    # id.  Every node has a self-loop, so it appears in ``d``, and
+    # grouping the rows by ``d`` gives one reduceat segment per node.
+    nodes, di = np.unique(tbl.column("d").to_numpy(), return_inverse=True)
+    si = np.searchsorted(nodes, tbl.column("s").to_numpy())
+    order = np.argsort(di)
+    nbr = si[order]
+    starts = np.searchsorted(di[order], np.arange(len(nodes)))
+    lab = np.arange(len(nodes))
+    converged = False
+    # the Spark tier's rounds: ``hops_per_job`` hops each, converged
+    # when a round leaves the labels unchanged.  Labels only decrease,
+    # so unchanged arrays ⟺ equal label sums (the Spark test).
+    for _ in range(0, max_iter, hops_per_job):
+        prev = lab
+        for _ in range(hops_per_job):
+            lab = np.minimum.reduceat(lab[nbr], starts)
+        if np.array_equal(lab, prev):
+            converged = True
+            break
+    if not converged:
+        raise _not_converged(max_iter)
+    return spark.createDataFrame(
+        pa.table({"id": nodes, "cluster": nodes[lab]}),
+        schema=T.StructType(
+            [T.StructField("id", typ), T.StructField("cluster", typ)]
+        ),
+    )
+
+
+def _spark_components(
+    und: DataFrame,
+    max_iter: int,
+    checkpoint_dir: str | None,
+    hops_per_job: int,
+) -> DataFrame:
+    """The Spark tier: checkpointed min-label propagation rounds over
+    the cached ``und``."""
+    sc = und.sparkSession.sparkContext
     if checkpoint_dir is not None:
         sc.setCheckpointDir(checkpoint_dir)
 
@@ -68,7 +229,7 @@ def connected_components(
         """Eagerly checkpoint ``df``; return (checkpointed df, the
         checkpoint's OWN RDD handle) so the previous round's blocks can
         be freed deterministically once their last consumer (the
-        convergence count) has run.  The handle is the analyzed plan's
+        convergence sum) has run.  The handle is the analyzed plan's
         root — a ``LogicalRDD`` wrapping exactly the block-backed RDD
         the checkpoint registered (verified: unpersisting it empties
         the session's persistent-RDD delta; ``df.rdd.unpersist()`` is
@@ -86,48 +247,13 @@ def connected_components(
     def _free(handle: object) -> None:
         handle.unpersist(False)
 
-    # Undirected edge list WITH SELF-LOOPS via a per-row explode —
-    # ONE evaluation of the upstream plan (a union of the edge plan
-    # with its reversal evaluates the whole upstream pair pipeline,
-    # e.g. the full minhash/jaccard computation, TWICE inside the
-    # cache materialization; measured ~1.4s per extra evaluation on
-    # the declared q82 at sf0.1).  The self-loops make each round a
-    # single join + min-agg: every node offers its label to its
-    # neighbors AND itself, so no second labels join is needed to keep
-    # a node's own label in play (the r4 shape paid join + agg + a
-    # labels re-join per round).  The cache is pre-partitioned and
-    # pre-sorted on the join key, so every round's sort-merge join
-    # streams it with NO exchange and NO re-sort on the edge side —
-    # only the (tiny) label table moves, plus the one unavoidable
-    # groupBy(d) transpose exchange.
-    und = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(src).alias("s"), F.col(dst).alias("d")),
-                    F.struct(F.col(dst).alias("s"), F.col(src).alias("d")),
-                    F.struct(F.col(src).alias("s"), F.col(src).alias("d")),
-                    F.struct(F.col(dst).alias("s"), F.col(dst).alias("d")),
-                )
-            ).alias("e")
-        )
-        .select("e.s", "e.d")
-        .distinct()
-        .repartition(F.col("s"))
-        .sortWithinPartitions("s")
-        .cache()  # every round joins und: without this the upstream
-        # pair pipeline would re-run once per iteration
-    )
     # No eager materialization job: the first round's checkpoint job
-    # fills the cache as it scans.  That job reads und through two
-    # branches (the first-hop aggregate and the step join), but the
-    # block manager's per-partition write lock serializes a partition's
-    # first computation — the second consumer blocks and reads the
-    # cached block, so the upstream pair pipeline still executes once.
-    # A separate count() here spent a whole extra job traversal
-    # (~0.1-0.3s at sf0.1, one more scheduling round-trip per CC call
-    # on a cluster) purely to pre-fill the cache.
-    from pyspark.sql import Observation
+    # fills the cache as it scans (unless the driver tier's collect
+    # already did).  That job reads und through two branches (the
+    # first-hop aggregate and the step join), but the block manager's
+    # per-partition write lock serializes a partition's first
+    # computation — the second consumer blocks and reads the cached
+    # block, so the upstream pair pipeline still executes once.
 
     # Convergence signal: labels only ever DECREASE, so the exact sum
     # of all labels is strictly monotone until fixpoint — equal sums
@@ -163,7 +289,6 @@ def connected_components(
     labels = None
     label_handle = None
     prev_sum = None
-    converged = False
     # ``hops_per_job`` propagation steps per materialization (default
     # 2): the per-round cost at small/medium graph sizes is dominated
     # by the checkpoint job launch, not the joins, and composing steps
@@ -178,43 +303,37 @@ def connected_components(
     # ~25 rounds the planner itself OOMs the driver (observed on a
     # 30-node chain).  Checkpointing truncates the lineage to the
     # materialized blocks — plan size stays O(1) per round.
-    if hops_per_job < 1:
-        raise ValueError(f"hops_per_job must be >= 1: {hops_per_job}")
-    for it in range(0, max_iter, hops_per_job):
-        obs = Observation()
-        # first_hop already embodies one propagation step, so the
-        # opening round composes one fewer _step
-        cand = first_hop if it == 0 else labels
-        for _ in range(hops_per_job - (1 if it == 0 else 0)):
-            cand = _step(cand)
-        cand = cand.observe(obs, _sum)
-        new_labels, new_handle = _ckpt(cand)
-        cur_sum = obs.get["s"]
-        if it == 0:
-            prev_sum = obs0.get["ids"]  # identity-label sum
+    try:
+        for it in range(0, max_iter, hops_per_job):
+            obs = Observation()
+            # first_hop already embodies one propagation step, so the
+            # opening round composes one fewer _step
+            cand = first_hop if it == 0 else labels
+            for _ in range(hops_per_job - (1 if it == 0 else 0)):
+                cand = _step(cand)
+            cand = cand.observe(obs, _sum)
+            new_labels, new_handle = _ckpt(cand)
+            cur_sum = obs.get["s"]
+            if it == 0:
+                prev_sum = obs0.get["ids"]  # identity-label sum
+            if label_handle is not None:
+                # the checkpoint job was the last consumer of the
+                # previous round's blocks — free them now; at most two
+                # snapshots are ever live (a localCheckpoint is
+                # unreadable once freed, so this must stay AFTER the
+                # materialization)
+                _free(label_handle)
+            labels, label_handle = new_labels, new_handle
+            if cur_sum == prev_sum:
+                label_handle = None  # the returned snapshot stays live
+                return labels
+            prev_sum = cur_sum
+        raise _not_converged(max_iter)
+    finally:
+        # a raise (no convergence, or a failed round) returns no
+        # snapshot, so the last one is freed here
         if label_handle is not None:
-            # the checkpoint job was the last consumer of the
-            # previous round's blocks — free them now; at most two
-            # snapshots are ever live (a localCheckpoint is
-            # unreadable once freed, so this must stay AFTER the
-            # materialization)
             _free(label_handle)
-        labels, label_handle = new_labels, new_handle
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    und.unpersist()
-    if not converged:
-        # partial labels are silently WRONG (a path longer than
-        # max_iter hasn't finished propagating its minimum) — fail
-        # loudly; callers with genuinely deep graphs raise max_iter
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} "
-            "rounds; the graph has a component with a longer diameter "
-            "— raise max_iter"
-        )
-    return labels
 
 
 def dedup_clusters(

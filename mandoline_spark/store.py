@@ -1026,13 +1026,20 @@ class Connection:
             ("chunks", path), path, CHUNK_SCHEMA, recursive=True
         )
 
-    def _index_schema(self, version: int, var: str) -> T.StructType | None:
+    def _index_schema(
+        self, version: int, var: str, ndim: int | None = None
+    ) -> T.StructType | None:
         """Declared schema of ``var``'s index generations under
-        ``version``, from committed metadata: the version's own token,
-        or for an in-flight version the newest committed one below it
-        (its parent, whose shape it may not change — ``md.inherit``).
-        None when that token lacks ``var`` (a variable new in an
-        in-flight version): the read then infers the schema."""
+        ``version``: from ``ndim`` when the caller holds the variable's
+        dimension count (a writer, from its in-flight token), else from
+        committed metadata — the version's own token, or for an
+        in-flight version the newest committed one below it (its
+        parent, whose shape it may not change — ``md.inherit``).  None
+        when neither is known (a variable new in an in-flight version,
+        or a dataset's first version, read without ``ndim``): the read
+        then infers the schema in a one-task job."""
+        if ndim is not None:
+            return _index_gen_schema(ndim)
         for vid in self.version_ids():  # newest first
             if vid <= version:
                 token = self.metadata(vid)
@@ -1043,11 +1050,13 @@ class Connection:
                 )
         return None
 
-    def _gen_df(self, version: int, var: str, gen: int) -> DataFrame:
+    def _gen_df(
+        self, version: int, var: str, gen: int, ndim: int | None = None
+    ) -> DataFrame:
         return self._maybe_cached(
             ("index", version, var, gen),
             self.index_path(version, var, gen),
-            self._index_schema(version, var),
+            self._index_schema(version, var, ndim),
         )
 
     @staticmethod
@@ -1108,7 +1117,11 @@ class Connection:
         )
 
     def index_df(
-        self, version: int, var: str, ancestors: bool = True
+        self,
+        version: int,
+        var: str,
+        ancestors: bool = True,
+        ndim: int | None = None,
     ) -> DataFrame | None:
         """Resolved index from this version's own generations: the
         newest full generation overlaid with every later delta.  When
@@ -1117,8 +1130,11 @@ class Connection:
         recursively — compaction keeps these chains short), unless
         ``ancestors`` is False: the frame then holds only the entries
         this version's own generations resolve (vacuum's liveness
-        union, where every ancestor is counted under its own row).  None
-        when the version never wrote the variable."""
+        union, where every ancestor is counted under its own row).
+        ``ndim``: the variable's dimension count, which a writer passes
+        from its token so an in-flight version's frame declares its
+        schema (:meth:`_index_schema`).  None when the version never
+        wrote the variable."""
         gens = self.index_gens(version, var)
         if not gens:
             return None
@@ -1127,7 +1143,7 @@ class Connection:
             if not self.index_gen_is_delta(version, var, g):
                 last_full = g
         if last_full is not None:
-            base = self._gen_df(version, var, last_full)
+            base = self._gen_df(version, var, last_full, ndim)
             deltas = [g for g in gens if g > last_full]
         else:
             base = None
@@ -1149,7 +1165,7 @@ class Connection:
                 reader = self.spark.read.option(
                     "basePath", self.index_path(version, var)
                 )
-                schema = self._index_schema(version, var)
+                schema = self._index_schema(version, var, ndim)
                 if schema is not None:
                     reader = reader.schema(schema)
                 stack = reader.parquet(
@@ -1181,12 +1197,13 @@ class Connection:
             df = self._overlay(base, self._stack_winner(stack, "g"))
         else:
             df = self._overlay_stack(
-                base, [(g, self._gen_df(version, var, g)) for g in deltas]
+                base,
+                [(g, self._gen_df(version, var, g, ndim)) for g in deltas],
             )
         if last_full is None and ancestors:
             for vid in self.version_ids():  # newest first
                 if vid < version and self.index_gens(vid, var):
-                    anc = self.index_df(vid, var)
+                    anc = self.index_df(vid, var, ndim=ndim)
                     if anc is not None:
                         # df holds only this version's deltas here
                         df = df.unionByName(

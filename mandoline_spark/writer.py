@@ -237,7 +237,9 @@ def _base_index_df(
     (impl.clj:232-244 precedence + the mem.clj:45-49 version fallback —
     the parent version itself may never have written this variable)."""
     vid = token["version-id"]
-    own = conn.index_df(vid, var)
+    own = conn.index_df(
+        vid, var, ndim=len(md.get_variable_dimensions(token, var))
+    )
     if own is not None:
         return own
     parent = token.get("parent")
@@ -754,7 +756,7 @@ def write_pieces(
         # job when plan was empty / chunks was None).
         bound = _index_rows_bound(conn, vid, var)
         layers = _layered_base_grouped(
-            conn, var, plan, agg.select("ckey"), chunks,
+            conn, var, ndim, plan, agg.select("ckey"), chunks,
             n_hint=(
                 bound
                 if bound is not None
@@ -858,6 +860,7 @@ def write_pieces(
 def _layered_base_grouped(
     conn: Connection,
     var: str,
+    ndim: int,
     plan: list[tuple[int, int]],
     touched_ckeys: DataFrame,
     chunks: DataFrame | None,
@@ -876,7 +879,7 @@ def _layered_base_grouped(
         n_hint = n_hint()
     stack = None
     for i, (v, g) in enumerate(plan):
-        df = _norm_wb(conn._gen_df(v, var, g)).select(
+        df = _norm_wb(conn._gen_df(v, var, g, ndim)).select(
             "ckey", "chunk_hash", "wb"
         ).withColumn("_lyr", F.lit(i))
         stack = (
@@ -1412,7 +1415,7 @@ def _reconcile_var(
     plan = conn._local_index_plan(vid, var) or []
     stack = None
     for i, (v, g) in enumerate(plan):
-        df = _norm_wb(conn._gen_df(v, var, g)).select(
+        df = _norm_wb(conn._gen_df(v, var, g, ndim)).select(
             "ckey", *ccols, "chunk_hash", "wb"
         ).withColumn("_lyr", F.lit(i))
         stack = (

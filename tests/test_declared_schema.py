@@ -188,3 +188,27 @@ def test_table_frames_launch_no_jobs(store, cache_reads):
     ]
     assert all(f is not None for f in frames)
     assert len(_job_ids(conn.spark) - ids0) == 0
+
+
+@pytest.mark.parametrize("cache_reads", [False, True])
+def test_first_version_index_frames_launch_no_jobs(store, cache_reads):
+    """A dataset's first version has no committed token to take the
+    index schema from: the writer passes its own token's dimension
+    count, so the in-flight version's index frames (``index_df`` with
+    ``ndim``, and the base a second write of the same version reads)
+    build without a schema-inference job."""
+    conn = store.create_dataset("ds")
+    conn.cache_reads = cache_reads
+    tok = conn.add_version(SPEC)
+    writer.write_variable(conn, tok, "v", [_slab(CORNER, 3)])
+    writer.write_variable(
+        conn, tok, "v", [_slab(CORNER, 4)], index_mode="delta"
+    )
+    vid = tok["version-id"]
+    conn.invalidate_cache()
+    ids0 = _job_ids(conn.spark)
+    assert writer._base_index_df(conn, tok, "v") is not None
+    assert len(_job_ids(conn.spark) - ids0) == 0
+    own = conn.index_df(vid, "v", ndim=2)
+    assert len(_job_ids(conn.spark) - ids0) == 0
+    assert own.columns == writer._index_gen_schema(2).fieldNames()

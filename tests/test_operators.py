@@ -4,6 +4,8 @@ scale-critical plan properties."""
 
 from __future__ import annotations
 
+import contextlib
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -225,6 +227,62 @@ def test_salted_join_matches_plain_join(spark):
 # -- connected components (operators/graph.py) --------------------------------
 
 
+@contextlib.contextmanager
+def _broadcast_threshold(spark, value: str):
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def _spark_tier(spark):
+    """Pin connected_components to its Spark tier: a broadcast
+    threshold ≤ 0 turns its driver tier off."""
+    return _broadcast_threshold(spark, "-1")
+
+
+def _plan_root(df) -> str:
+    """LocalRelation for the driver tier's labels, LogicalRDD for the
+    Spark tier's checkpoint."""
+    return df._jdf.queryExecution().analyzed().getClass().getSimpleName()
+
+
+def _cc_oracle(pairs) -> set:
+    """(id, min id of its component) by union-find."""
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {(x, find(x)) for x in parent}
+
+
+def _random_cc_graph(seed: int, lo: int, hi: int) -> list:
+    """Shuffled edges of five cliques (sizes 2-5) and two chains
+    (diameters 5 and 8) over distinct random ids in [lo, hi)."""
+    rng = np.random.default_rng(seed)
+    ids = [int(x) for x in np.unique(rng.integers(lo, hi, 200))]
+    ids = [ids[i] for i in rng.permutation(len(ids))]
+    pairs = []
+    for size in (2, 3, 4, 5, 3):
+        m, ids = ids[:size], ids[size:]
+        pairs += [(m[i], m[j]) for i in range(size) for j in range(i + 1, size)]
+    for length in (6, 9):
+        m, ids = ids[:length], ids[length:]
+        pairs += [(m[i], m[i + 1]) for i in range(length - 1)]
+    return [pairs[i] for i in rng.permutation(len(pairs))]
+
+
 def test_connected_components_chain_and_islands(spark):
     """A 4-node chain (worst-case diameter), a triangle, and a 2-clique
     all label to their minimum member."""
@@ -295,13 +353,14 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
         "a long, b long",
     )
     ckdir = str(tmp_path / "cc_ckpt")
-    got = {
-        (r.id, r.cluster)
-        for r in connected_components(edges, checkpoint_dir=ckdir).collect()
-    }
-    want = {
-        (r.id, r.cluster) for r in connected_components(edges).collect()
-    }
+    with _spark_tier(spark):
+        got = {
+            (r.id, r.cluster)
+            for r in connected_components(edges, checkpoint_dir=ckdir).collect()
+        }
+        want = {
+            (r.id, r.cluster) for r in connected_components(edges).collect()
+        }
     assert got == want
     import os
 
@@ -324,11 +383,12 @@ def test_connected_components_frees_prior_round_blocks(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 12)], "a long, b long"
     )
-    labels = connected_components(chain, max_iter=20)
-    after = set(sc._jsc.getPersistentRDDs().keySet().toArray()) - before
-    # ~11 rounds ran; without eager freeing each would leave a snapshot
-    assert len(after) <= 2, f"leaked {len(after)} persisted RDDs"
-    assert labels.count() == 12  # the survivor is still readable
+    with _spark_tier(spark):
+        labels = connected_components(chain, max_iter=20)
+        after = set(sc._jsc.getPersistentRDDs().keySet().toArray()) - before
+        # ~11 rounds ran; without eager freeing each would leave a snapshot
+        assert len(after) <= 2, f"leaked {len(after)} persisted RDDs"
+        assert labels.count() == 12  # the survivor is still readable
 
 
 def test_connected_components_concurrent_persist_survives(spark):
@@ -365,9 +425,11 @@ def test_connected_components_concurrent_persist_survives(spark):
         edges = spark.createDataFrame(
             [(i, i + 1) for i in range(1, 12)], "a long, b long"
         )
-        got = {
-            (r.id, r.cluster) for r in connected_components(edges).collect()
-        }
+        with _spark_tier(spark):
+            got = {
+                (r.id, r.cluster)
+                for r in connected_components(edges).collect()
+            }
     finally:
         stop.set()
         t.join(timeout=30)
@@ -457,18 +519,20 @@ def test_graph_operators_aqe_invariant_and_conf_untouched(spark, monkeypatch):
         return real(self, *args, **kwargs)
 
     monkeypatch.setattr(df_cls, "localCheckpoint", spy)
-    try:
-        spark.conf.set(key, "true")
-        before = confs()
-        assert before[key] == "true"
-        assert run_all() == off
-        # a 12-node chain cannot converge in 2 hops
-        with pytest.raises(RuntimeError, match="did not converge"):
-            connected_components(chain, max_iter=2)
-        assert confs() == before
-        assert during and all(c == before for c in during)
-    finally:
-        spark.conf.set(key, old)
+    # the Spark tier, whose rounds the spy sees
+    with _spark_tier(spark):
+        try:
+            spark.conf.set(key, "true")
+            before = confs()
+            assert before[key] == "true"
+            assert run_all() == off
+            # a 12-node chain cannot converge in 2 hops
+            with pytest.raises(RuntimeError, match="did not converge"):
+                connected_components(chain, max_iter=2)
+            assert confs() == before
+            assert during and all(c == before for c in during)
+        finally:
+            spark.conf.set(key, old)
 
 
 def test_connected_components_hops_per_job_variants(spark):
@@ -483,23 +547,210 @@ def test_connected_components_hops_per_job_variants(spark):
         + [(20, 21), (21, 22), (20, 22), (30, 31)],
         "a long, b long",
     )
-    ref = sorted(
-        (r.id, r.cluster)
-        for r in connected_components(edges, hops_per_job=2).collect()
-    )
-    for k in (1, 3, 4):
-        got = sorted(
+    with _spark_tier(spark):
+        ref = sorted(
             (r.id, r.cluster)
-            for r in connected_components(edges, hops_per_job=k).collect()
+            for r in connected_components(edges, hops_per_job=2).collect()
         )
-        assert got == ref, k
-    # max_iter counts hops, not jobs: a diameter-9 chain needs ~10
-    # hops to settle its convergence signal; max_iter=4 must raise
-    # even when one composed job covers 4 hops
-    import pytest as _pytest
+        for k in (1, 3, 4):
+            got = sorted(
+                (r.id, r.cluster)
+                for r in connected_components(edges, hops_per_job=k).collect()
+            )
+            assert got == ref, k
+        # max_iter counts hops, not jobs: a diameter-9 chain needs ~10
+        # hops to settle its convergence signal; max_iter=4 must raise
+        # even when one composed job covers 4 hops
+        import pytest as _pytest
+
+        chain = spark.createDataFrame(
+            [(i, i + 1) for i in range(9)], "a long, b long"
+        )
+        with _pytest.raises(RuntimeError, match="did not converge"):
+            connected_components(chain, max_iter=4, hops_per_job=4)
+
+
+@pytest.mark.parametrize("aqe", ["false", "true"])
+def test_connected_components_tiers_agree(spark, aqe):
+    """The driver tier (a local relation) and the Spark tier (a
+    checkpoint) give the same labels and schema on seeded random
+    cliques and chains, with int32 and int64 ids, whatever the AQE
+    setting and the input partitioning; edge sets with a null endpoint
+    take the Spark tier and keep its labels."""
+    from mandoline_spark.operators.graph import connected_components
+
+    key = "spark.sql.adaptive.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, aqe)
+    try:
+        for typ, lo, hi, seed in (
+            ("int", -(2**31), 2**31 - 1, 1),
+            ("long", -(2**62), 2**62, 2),
+        ):
+            pairs = _random_cc_graph(seed, lo, hi)
+            edges = spark.createDataFrame(pairs, f"a {typ}, b {typ}")
+            with _spark_tier(spark):
+                spk = connected_components(edges)
+                want = {(r.id, r.cluster) for r in spk.collect()}
+            assert _plan_root(spk) == "LogicalRDD"
+            assert want == _cc_oracle(pairs)
+            for e in (edges, edges.repartition(5)):
+                drv = connected_components(e)
+                assert _plan_root(drv) == "LocalRelation"
+                assert drv.schema == spk.schema
+                assert {(r.id, r.cluster) for r in drv.collect()} == want
+            # a null endpoint sends the batch to the Spark tier
+            nulls = spark.createDataFrame(
+                pairs + [(pairs[0][0], None), (None, None)], f"a {typ}, b {typ}"
+            )
+            got = connected_components(nulls)
+            assert _plan_root(got) == "LogicalRDD"
+            with _spark_tier(spark):
+                want = {
+                    (r.id, r.cluster)
+                    for r in connected_components(nulls).collect()
+                }
+            assert {(r.id, r.cluster) for r in got.collect()} == want
+        # an empty edge set: no labels, the schema of the long graph's
+        # Spark-tier result (spk, from the last loop pass)
+        empty = spark.createDataFrame([], "a long, b long")
+        drv = connected_components(empty)
+        assert drv.collect() == [] and drv.schema == spk.schema
+        small = spark.createDataFrame(
+            [(1, 2), (2, None), (None, None)], "a long, b long"
+        )
+        assert {
+            (r.id, r.cluster) for r in connected_components(small).collect()
+        } == {(1, 1), (2, 1), (None, 1)}
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_connected_components_max_iter_raise_parity(spark):
+    """Both tiers count hops the same way: for every ``hops_per_job``
+    the smallest ``max_iter`` that converges on the driver tier is the
+    smallest that converges on the Spark tier."""
+    from mandoline_spark.operators.graph import connected_components
 
     chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(9)], "a long, b long"
+        [(i, i + 1) for i in range(5)], "a long, b long"
     )
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iter=4, hops_per_job=4)
+
+    def raises(k: int, m: int) -> bool:
+        try:
+            connected_components(chain, max_iter=m, hops_per_job=k)
+        except RuntimeError as e:
+            assert "did not converge" in str(e)
+            return True
+        return False
+
+    for k in (1, 2, 3, 4):
+        m = 1
+        while raises(k, m):
+            m += 1
+        assert m > 1, k
+        with _spark_tier(spark):
+            assert raises(k, m - 1) and not raises(k, m), k
+
+
+def test_connected_components_raise_frees_its_blocks(spark, monkeypatch):
+    """A Spark-tier run that raises, on non-convergence or on a failed
+    round, leaves no persisted RDD behind: the edge cache and the last
+    label snapshot are freed on every exit."""
+    from mandoline_spark.operators.graph import connected_components
+
+    sc = spark.sparkContext
+
+    def persisted() -> set:
+        return set(sc._jsc.getPersistentRDDs().keySet().toArray())
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 30)], "a long, b long"
+    )
+    with _spark_tier(spark):
+        before = persisted()
+        with pytest.raises(RuntimeError, match="did not converge"):
+            connected_components(chain, max_iter=3)
+        assert persisted() - before == set()
+
+        df_cls = type(chain)
+        real = df_cls.localCheckpoint
+        calls: list = []
+
+        def fail_second(self, *args, **kwargs):
+            calls.append(1)
+            if len(calls) == 2:
+                raise RuntimeError("round failed")
+            return real(self, *args, **kwargs)
+
+        monkeypatch.setattr(df_cls, "localCheckpoint", fail_second)
+        before = persisted()
+        with pytest.raises(RuntimeError, match="round failed"):
+            connected_components(chain, max_iter=20)
+        assert persisted() - before == set()
+
+
+def test_dedup_clusters_curation_graph_jobs(spark):
+    """On a curation-sized pair graph (~170 edges in near-cliques)
+    dedup_clusters runs its components on the driver: one edge collect,
+    the label broadcast and the cluster sort's two jobs."""
+    from mandoline_spark.operators.graph import dedup_clusters
+
+    rng = np.random.default_rng(8)
+    ids = [int(x) for x in rng.permutation(2000)]
+    pairs: list = []
+    while len(pairs) < 170:
+        size = int(rng.integers(2, 6))
+        m, ids = sorted(ids[:size]), ids[size:]
+        pairs += [(m[i], m[j]) for i in range(size) for j in range(i + 1, size)]
+    sizes = {i: int(rng.integers(10, 40)) for i in range(2000)}
+    docs = spark.createDataFrame(
+        sorted(sizes.items()), "doc_id long, n_chars long"
+    )
+    edges = spark.createDataFrame(pairs, "a long, b long")
+    jobs = spark.sparkContext._jsc.sc().statusTracker()
+    ids0 = set(jobs.getJobIdsForGroup(None))
+    got = [
+        (r.cluster, r.keep_id, r.n_docs)
+        for r in dedup_clusters(docs, edges).collect()
+    ]
+    assert len(set(jobs.getJobIdsForGroup(None)) - ids0) <= 4
+    label = dict(_cc_oracle(pairs))
+    members: dict = {}
+    for i in sizes:
+        members.setdefault(label.get(i, i), []).append(i)
+    want = sorted(
+        (c, min(m, key=lambda i: (-sizes[i], i)), len(m))
+        for c, m in members.items()
+    )
+    assert got == want
+
+
+@pytest.mark.parametrize("over_cap", [False, True])
+def test_connected_components_evaluates_edges_once(spark, over_cap):
+    """The upstream edge plan runs once on either tier: over the cap,
+    the Spark tier's rounds read the edge cache the gate's collect
+    filled (a nondeterministic UDF counts the evaluations)."""
+    from mandoline_spark.operators.graph import connected_components
+
+    acc = spark.sparkContext.accumulator(0)
+
+    def tick(x):
+        acc.add(1)
+        return x
+
+    tick_udf = F.udf(tick, "long").asNondeterministic()
+    edges = spark.range(40).select(
+        tick_udf(F.col("id")).alias("a"), (F.col("id") % 7).alias("b")
+    )
+    # 240 B holds 10 label rows: under it the 40-edge graph is over cap
+    with (
+        _broadcast_threshold(spark, "240")
+        if over_cap
+        else contextlib.nullcontext()
+    ):
+        labels = connected_components(edges)
+        got = {(r.id, r.cluster) for r in labels.collect()}
+    assert _plan_root(labels) == ("LogicalRDD" if over_cap else "LocalRelation")
+    assert got == _cc_oracle([(i, i % 7) for i in range(40)])
+    assert acc.value == 40
