@@ -559,28 +559,22 @@ def ivf_topk(
     vec_col: str = "embedding",
     round_to: int | None = 6,
     centroids: list[list[float]] | None = None,
-    vectorized: bool | None = None,
 ) -> DataFrame:
     """IVF (inverted-file) approximate cosine top-k: a k-means coarse
     quantizer partitions the corpus into ``n_cells`` cells; each query
     probes its ``n_probe`` nearest cells and exactly re-ranks only those
     candidates.
 
-    ``vectorized`` picks the candidate re-rank kernel: the numpy-einsum
-    Arrow batch (:func:`_cosine_batch_udf`) or the JVM
-    aggregate(zip_with()) fold.  Unlike :func:`cosine_topk`'s gate,
-    the DEFAULT here (``None``) is the einsum kernel at EVERY scale:
-    this pipeline already crosses the Python boundary for
-    ``cell_ranking``, so the Arrow round-trip's fixed cost — the whole
-    reason cosine_topk's gate stays JVM below 50k pairs — is already
-    paid, and the fold path additionally burns interpreted
-    higher-order-function norms per row.  Measured (r16,
-    PROBE_ANN_FOLD_SF1_r16.json): einsum wins at BOTH probed scale
-    points, 2.5k candidate pairs (sf0.1: 1.41 vs 1.87 s best) and 25k
-    (sf1: 0.91 vs 1.23 s best).  ``vectorized=False`` keeps the JVM
-    fold (a caller that must stay Python-worker-free).  Sims are
-    bit-approximate across the two kernels (summation order), same
-    contract as cosine_topk; NULL/zero-norm rows yield 0.0 on both.
+    Candidates are re-ranked by the numpy-einsum Arrow batch
+    (:func:`_cosine_batch_udf`) at every scale, unlike
+    :func:`cosine_topk`'s gate: this pipeline already crosses the
+    Python boundary for ``cell_ranking``, so the Arrow round-trip's
+    fixed cost — the whole reason cosine_topk stays on the JVM fold
+    below 50k pairs — is already paid.  Measured (r16,
+    PROBE_ANN_FOLD_SF1_r16.json): einsum beat the JVM fold at BOTH
+    probed scale points, 2.5k candidate pairs (sf0.1: 1.41 vs 1.87 s
+    best) and 25k (sf1: 0.91 vs 1.23 s best).  NULL/zero-norm vectors
+    yield 0.0 sims, as cosine_topk's fold does.
 
     ``centroids`` (from :func:`train_ivf_centroids`) skips the training
     scan: an IVF quantizer is INDEX state, trained once per corpus and
@@ -653,35 +647,13 @@ def ivf_topk(
         ).alias("_cell"),
     )
 
-    if vectorized is None or vectorized:
-        # einsum Arrow kernel: norms live inside the numpy batch, so
-        # the with_norm interpreted HOFs disappear on both sides.
-        # NULL/zero-norm rows yield 0.0 — exactly the fold's
-        # .otherwise(0.0)
-        q = probes.select(
-            "qid", "_cell", F.col("_qvec").alias("_qemb")
-        )
-        c = assigned.select(F.col(id_col), "_cell", F.col(vec_col).alias("_emb"))
-        pairs = c.join(F.broadcast(q), "_cell").withColumn(
-            "_sim", _cosine_batch_udf("_qemb", "_emb")
-        )
-    else:
-        q = with_norm(
-            probes.withColumnRenamed("_qvec", vec_col), vec_col
-        ).select(
-            "qid",
-            "_cell",
-            F.col("_emb").alias("_qemb"),
-            F.col("_norm").alias("_qnorm"),
-        )
-        c = with_norm(assigned, vec_col).select(
-            F.col(id_col), "_cell", F.col("_emb"), F.col("_norm")
-        )
-        sim = F.when(
-            (F.col("_qnorm") > 0) & (F.col("_norm") > 0),
-            _dot("_qemb", "_emb") / (F.col("_qnorm") * F.col("_norm")),
-        ).otherwise(F.lit(0.0))
-        pairs = c.join(F.broadcast(q), "_cell").withColumn("_sim", sim)
+    # einsum Arrow kernel: norms live inside the numpy batch.
+    # NULL/zero-norm rows yield 0.0 — exactly the fold's .otherwise(0.0)
+    q = probes.select("qid", "_cell", F.col("_qvec").alias("_qemb"))
+    c = assigned.select(F.col(id_col), "_cell", F.col(vec_col).alias("_emb"))
+    pairs = c.join(F.broadcast(q), "_cell").withColumn(
+        "_sim", _cosine_batch_udf("_qemb", "_emb")
+    )
     # same self-first tie-break as cosine_topk_lsh (ADVICE r02)
     w = Window.partitionBy("qid").orderBy(
         F.col("_sim").desc(),

@@ -81,12 +81,13 @@ def vacuum(
     would otherwise pin the number forever).  Returns counts of what
     was kept/removed.
 
-    Phase (a) runs in one of two tiers with the same result.  On a
-    LOCAL store whose chunk table is within
-    ``blob_local_fetch_max_bytes`` and whose committed versions' own
-    index generations hold at most ``index_map_max_entries`` rows in
-    all (footer counts), it runs on the driver with pyarrow and
-    launches no Spark job (:func:`_local_chunk_pass`): survivors are
+    Phase (a) runs in one of two tiers with the same result.  When the
+    driver-tier gate (:meth:`Connection.driver_tier`) admits the store —
+    LOCAL, its chunk table within ``blob_local_fetch_max_bytes``, its
+    committed versions' own index generations within
+    ``index_map_max_entries`` rows in all (footer counts) — it runs on
+    the driver with pyarrow and launches no Spark job
+    (:func:`_local_chunk_pass`): survivors are
     written as one zstd Parquet file in row groups of
     ~``writer.CHUNK_ROW_GROUP_BYTES`` and, like the driver write tier's
     files, carry no hash bloom filter.  Anything else — hdfs/s3a, the
@@ -418,10 +419,10 @@ def _finish_chunk_pass(
 
 def _local_live_hashes(conn: Connection, versions: list):
     """Distinct chunk hashes referenced by the committed ``versions``,
-    computed on a LOCAL store with pyarrow, or None when the
-    generations to read hold more than ``index_map_max_entries`` rows
-    by their footers, summed over every (version, variable) — the cap
-    bounds the driver's work as it bounds a read's index map.
+    computed with pyarrow, or None when the driver-tier gate
+    (:meth:`Connection.driver_tier`) refuses the generations to read,
+    summed over every (version, variable) — the index cap bounds the
+    driver's work as it bounds a read's index map.
 
     Each (version, variable) contributes its own generations (newest
     full plus later deltas, no ancestor base), as the Spark tier's
@@ -432,27 +433,24 @@ def _local_live_hashes(conn: Connection, versions: list):
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from .store import _local_parquet_files
-
-    plans = []  # per (version, variable): file lists, newest gen first
-    rows = 0
-    for vid, token in versions:
-        for var in token.get("variables", {}):
-            plan = conn._local_index_plan(vid, var, ancestors=False) or []
-            gens = [
-                _local_parquet_files(conn.index_path(v, var, g))
-                for v, g in reversed(plan)
-            ]
-            rows += sum(
-                pq.read_metadata(f).num_rows for files in gens for f in files
+    plans = [  # per (version, variable): generation dirs, newest first
+        [
+            conn.index_path(v, var, g)
+            for v, g in reversed(
+                conn._local_index_plan(vid, var, ancestors=False) or []
             )
-            plans.append(gens)
-    if rows > conn.index_map_max_entries:
+        ]
+        for vid, token in versions
+        for var in token.get("variables", {})
+    ]
+    tier = conn.driver_tier((d for p in plans for d in p), chunks=False)
+    if tier is None:
         return None
     hashes = []
-    for gens in plans:
+    for plan in plans:
         newer = None  # ckeys written by the newer generations
-        for i, files in enumerate(gens):
+        for i, d in enumerate(plan):
+            files = tier.index[d]
             if not files:
                 continue
             t = pa.concat_tables(
@@ -464,7 +462,7 @@ def _local_live_hashes(conn: Connection, versions: list):
             if newer is not None:
                 t = t.filter(pc.invert(pc.is_in(t["ckey"], value_set=newer)))
             hashes.append(t["chunk_hash"].combine_chunks())
-            if i + 1 < len(gens):
+            if i + 1 < len(plan):
                 keys = t["ckey"].combine_chunks()
                 newer = (
                     keys if newer is None else pa.concat_arrays([newer, keys])
@@ -480,9 +478,10 @@ def _local_chunk_pass(
     stats: dict,
 ) -> bool:
     """Phase (a) on the driver, with pyarrow and no Spark job.  Returns
-    False, having changed nothing, unless the store is LOCAL, its chunk
-    table is within ``blob_local_fetch_max_bytes`` (or empty) and the
-    live set fits :func:`_local_live_hashes`' cap; the caller then
+    False, having changed nothing, unless the driver-tier gate
+    (:meth:`Connection.driver_tier`) admits the chunk table (a LOCAL
+    store within ``blob_local_fetch_max_bytes``, or empty) and the live
+    set's generations (:func:`_local_live_hashes`); the caller then
     takes the Spark pass.
 
     The chunk table's ``hash`` column is read one row group at a time
@@ -494,16 +493,15 @@ def _local_chunk_pass(
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from . import fs as fsmod
     from . import writer
-    from .store import _local_parquet_files, _row_group_hashes
+    from .store import _row_group_hashes
 
-    if not isinstance(conn.fs, fsmod.LocalFS):
+    tier = conn.driver_tier()
+    if tier is None:
         return False
-    files = conn._local_chunk_files()
-    if files is None:
-        # over the driver byte cap, or no chunks yet: nothing to collect
-        return not _local_parquet_files(conn.chunks_path())
+    files = tier.chunks
+    if not files:
+        return True  # no chunks yet: nothing to collect
     live = _local_live_hashes(conn, versions)
     if live is None:
         return False

@@ -315,7 +315,11 @@ def _spark_components(
             new_labels, new_handle = _ckpt(cand)
             cur_sum = obs.get["s"]
             if it == 0:
-                prev_sum = obs0.get["ids"]  # identity-label sum
+                # identity-label sum.  A None label sum (no labels, or
+                # null ids only) has converged; obs0 is not read then,
+                # because AQE replaces an empty plan and drops its
+                # observation
+                prev_sum = None if cur_sum is None else obs0.get["ids"]
             if label_handle is not None:
                 # the checkpoint job was the last consumer of the
                 # previous round's blocks — free them now; at most two

@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+from .store import _local_parquet_files
+
 TABLES = (
     "region nation customer supplier part orders lineitem events "
     "documents embeddings"
@@ -141,15 +143,7 @@ def _footer_files(path: str) -> list[str]:
     # key=value subdirectories — a one-level listing returned [] there,
     # and callers summing over [] cached a silent 0 (r10 ADVICE).  A
     # real catalog's file listing is recursive; match it.
-    out = []
-    for base, dirs, files in os.walk(path):
-        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
-        out.extend(
-            os.path.join(base, f)
-            for f in files
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        )
-    return sorted(out)
+    return _local_parquet_files(path)
 
 
 def _footer_key(sf_dir: str, name: str) -> tuple:

@@ -13,11 +13,12 @@ and merges the returned pieces into it.
 
 Reads whose touched chunks fit the driver anyway (small reads, full
 scans, the box recursion of small strided reads) skip the decode stage
-and paste raw blobs into the result on the driver.  On a local store
-within the driver caps (``Connection.index_map_max_entries`` index
-rows, ``Connection.blob_local_fetch_max_bytes`` of chunk table) those
-reads resolve the index and fetch the blobs with pyarrow and launch no
-Spark job at all — the default, read cache on or off.
+and paste raw blobs into the result on the driver.  When the
+driver-tier gate ``Connection.driver_tier`` admits the store (local,
+within ``Connection.index_map_max_entries`` index rows and
+``Connection.blob_local_fetch_max_bytes`` of chunk table) those reads
+resolve the index and fetch the blobs with pyarrow and launch no Spark
+job at all — the default, read cache on or off.
 ``Connection.cache_reads`` only adds memoization on top (blob LRU,
 index map, cached table DataFrames).  Other backends and over-cap
 tables read the blobs through Spark.
@@ -154,15 +155,7 @@ def _join_blobs(
     # exists for can widen it explicitly instead of silently riding an
     # optimistic estimate.
     est_row_bytes = 1024
-    try:
-        budget = int(
-            conn.spark.conf.get(
-                "spark.mandoline.broadcastIndexBudget", str(256 << 20)
-            )
-        )
-    except ValueError:
-        budget = 256 << 20
-    if n_coords * est_row_bytes <= budget:
+    if n_coords * est_row_bytes <= conn._bcast_budget():
         idx = F.broadcast(idx)
     return idx.join(chunks, idx.chunk_hash == chunks.hash, "inner")
 

@@ -57,7 +57,7 @@ import re
 import threading
 import time
 from dataclasses import dataclass, field
-from typing import Any, Mapping
+from typing import Any, Iterable, Mapping, NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
@@ -72,11 +72,6 @@ from .core import metadata as md
 # only rejected ".." by accident, via the parent dir "already
 # existing")
 _NAME_RE = re.compile(r"^(?!\.+$)[A-Za-z0-9_.-]+$")
-
-# sentinel: a local (pyarrow) index resolution whose footer row-count
-# bound exceeded the driver-map cap — delegate to the Spark
-# limit-collect, which decides exactly
-_SPARK_RESOLVE = object()
 
 
 # -- table schemas: declared on every Spark read of the engine's own
@@ -154,6 +149,15 @@ def resume_writer(
 
 class VersionConflict(Exception):
     """Another writer committed against the same parent first."""
+
+
+class DriverTier(NamedTuple):
+    """What a job-free driver tier may read of a local store
+    (:meth:`Connection.driver_tier`)."""
+
+    chunks: list[str] | None  # chunk files ([] empty table; None unasked)
+    index: dict[str, list[str]]  # generation dir → its files, as asked
+    rows: int  # footer row total of the ``index`` files
 
 
 @dataclass
@@ -268,17 +272,19 @@ class Connection:
     _blob_lru: dict = field(default_factory=dict, repr=False)
     _index_map_cache: dict = field(default_factory=dict, repr=False)
     blob_lru_size: int = 1000
-    # Driver-side index cap: a resolved index above this many entries
-    # stays on the distributed path.  This cap and the next one also
-    # gate writer.write_variable's job-free driver write tier and
-    # maintenance.vacuum's job-free chunk pass (there summed over every
-    # committed version's generations).
+    # The two driver-tier caps, compared in one place only:
+    # :meth:`driver_tier`, the gate every job-free tier asks (reads and
+    # the cached index map, writer.write_variable's driver write,
+    # maintenance.vacuum's chunk pass, ingest's duplicate check).
+    # Index cap: the index generations a tier reads may hold at most
+    # this many rows by their footers (vacuum sums every committed
+    # version's own generations); above it the index resolves on Spark.
     index_map_max_entries: int = 2_000_000
-    # Driver-side blob fetch eligibility: when the LOCAL chunk table's
-    # on-disk footprint is under this bound, blobs are read with
-    # pyarrow on the driver (zero Spark jobs); above it they go through
-    # the Spark scan.  Measured per fetch, never memoized, so a table
-    # that grew past the bound is never fetched on a stale size.
+    # Chunk cap: blobs are read with pyarrow on the driver (zero Spark
+    # jobs) while the LOCAL chunk table's on-disk footprint is within
+    # this bound; above it they go through the Spark scan.  Measured
+    # per call, never memoized, so a table that grew past the bound is
+    # never fetched on a stale size.
     blob_local_fetch_max_bytes: int = 256 << 20
     # Serializes the driver-side cache mutations (blob LRU eviction,
     # index-map memo): one Connection is routinely shared by
@@ -749,49 +755,84 @@ class Connection:
                 break
         return base + [(version, g) for g in gens]
 
+    def driver_tier(
+        self, gens: Iterable[str] = (), chunks: bool = True, capped: bool = True
+    ) -> DriverTier | None:
+        """The one gate of the job-free driver tiers (reads, the cached
+        index map, driver writes, vacuum, ingest's duplicate check): the
+        local files they may read with pyarrow, or None for Spark.
+
+        None on any store but a LOCAL one.  ``chunks`` asks for the
+        committed chunk files (``[]`` for an empty table): None when
+        they exceed ``blob_local_fetch_max_bytes`` on disk.  ``gens``
+        asks for the parquet files of index generation directories and
+        their footer row total: None when it exceeds
+        ``index_map_max_entries``, unless ``capped`` is off (the total
+        is then a bound).  ``gens`` is consumed only on a local store,
+        so a lazy plan costs a remote one nothing.  Never memoized."""
+        import pyarrow.parquet as pq
+
+        if not isinstance(self.fs, fsmod.LocalFS):
+            return None
+        files = None
+        if chunks:
+            files = _local_parquet_files(self.chunks_path())
+            if sum(map(os.path.getsize, files)) > self.blob_local_fetch_max_bytes:
+                return None
+        index = {d: _local_parquet_files(d) for d in gens}
+        rows = sum(
+            pq.read_metadata(f).num_rows for fl in index.values() for f in fl
+        )
+        if capped and rows > self.index_map_max_entries:
+            return None
+        return DriverTier(files, index, rows)
+
+    def _bcast_budget(self) -> int:
+        """``spark.mandoline.broadcastIndexBudget`` (bytes, 256 MiB by
+        default): the bound on an explicit broadcast, sized at ~1 KiB
+        per built row (reader._join_blobs)."""
+        try:
+            return int(
+                self.spark.conf.get(
+                    "spark.mandoline.broadcastIndexBudget", str(256 << 20)
+                )
+            )
+        except ValueError:
+            return 256 << 20
+
     def _local_index_map(
         self,
         version: int,
         var: str,
-        cap: int,
         box: list[tuple[int, int]] | None = None,
-    ):
-        """Driver-side index resolution for LOCAL stores: read the
-        generation parquet files with pyarrow and fold the overlay into
-        a dict — ZERO Spark jobs, no overlay-plan construction (the
-        Spark resolution costs one job plus per-generation relation
-        setup, ~0.3-0.5 s of a cold small read at overlay depth 10).
-        Scale guard rides the parquet FOOTERS: the summed row count of
-        every generation in the plan is an upper bound on the resolved
-        index size, so if it exceeds ``cap`` the answer is delegated to
-        the Spark limit-collect (returns ``_SPARK_RESOLVE``), which
-        decides exactly.  Bytes read stay ≤ the index generations a
-        Spark resolution would scan anyway.  ``box`` (inclusive chunk-
-        coordinate bounds per dimension) drops every row outside it
-        before the fold, so a small read builds an O(request) map; the
-        overlay is per coordinate, so filtering each generation first
-        resolves the same winners."""
+    ) -> dict | None:
+        """Driver-side index resolution: fold the generation files the
+        gate (:meth:`driver_tier`) admits into a dict, in
+        :meth:`_local_index_plan` order — ZERO Spark jobs, no
+        overlay-plan construction (the Spark resolution costs one job
+        plus per-generation relation setup, ~0.3-0.5 s of a cold small
+        read at overlay depth 10).  ``box`` (inclusive chunk-coordinate
+        bounds per dimension) drops every row outside it before the
+        fold, so a small read builds an O(request) map; the overlay is
+        per coordinate, so filtering each generation first resolves the
+        same winners.  None when no version wrote the variable, or when
+        the gate sends the index to Spark."""
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        plan = self._local_index_plan(version, var)
-        if plan is None:
+        tier = self.driver_tier(
+            (
+                self.index_path(v, var, g)
+                for v, g in self._local_index_plan(version, var) or ()
+            ),
+            chunks=False,
+        )
+        if tier is None or not tier.index:
             return None
-        files: list = []  # ParquetFile handles, plan order
-        total = 0
-        for vid, g in plan:
-            d = self.index_path(vid, var, g)
-            for fn in sorted(self.fs.listdir(d)):
-                if not fn.endswith(".parquet"):
-                    continue
-                pf = pq.ParquetFile(os.path.join(d, fn))
-                total += pf.metadata.num_rows
-                files.append(pf)
-        if total > cap:
-            return _SPARK_RESOLVE
         m: dict = {}
         # plan order is application order: later gens overwrite
-        for pf in files:
+        for fp in (f for fl in tier.index.values() for f in fl):
+            pf = pq.ParquetFile(fp)
             ccols = sorted(
                 (
                     c
@@ -836,10 +877,7 @@ class Connection:
         if not self.cache_reads:
             if self._local_chunk_files() is None:
                 return None
-            m = self._local_index_map(
-                version, var, self.index_map_max_entries, box
-            )
-            return None if m is _SPARK_RESOLVE else m
+            return self._local_index_map(version, var, box)
         key = (version, var)
         with self._cache_lock:
             if key in self._index_map_cache:
@@ -855,14 +893,14 @@ class Connection:
         return value
 
     def _compute_index_map(self, version: int, var: str) -> dict | None:
-        cap = self.index_map_max_entries
-        if isinstance(self.fs, fsmod.LocalFS):
-            local = self._local_index_map(version, var, cap)
-            if local is not _SPARK_RESOLVE:
-                return local
+        # the gate's index half alone: blobs may still go to Spark
+        local = self._local_index_map(version, var)
+        if local is not None:
+            return local
         idx = self.resolve_index_df(version, var)
         if idx is None:
             return None
+        cap = self.index_map_max_entries
         ccols = sorted(
             (c for c in idx.columns if re.match(r"^c\d+$", c)),
             key=lambda c: int(c[1:]),
@@ -884,19 +922,12 @@ class Connection:
         }
 
     def _local_chunk_files(self) -> list[str] | None:
-        """The committed chunk files when blobs may be read on the
-        driver: a LOCAL store whose chunk table is non-empty and within
-        ``blob_local_fetch_max_bytes`` on disk.  None sends the read to
-        the Spark scan (remote or in-memory catalog, big table, no
-        chunks yet)."""
-        if not isinstance(self.fs, fsmod.LocalFS):
-            return None
-        files = _local_parquet_files(self.chunks_path())
-        if not files or (
-            sum(map(os.path.getsize, files)) > self.blob_local_fetch_max_bytes
-        ):
-            return None
-        return files
+        """The chunk files a read fetches blobs from on the driver: the
+        gate's chunk half (:meth:`driver_tier`) when the table holds
+        any.  None sends the read to the Spark scan (remote or
+        in-memory catalog, big table, no chunks yet)."""
+        tier = self.driver_tier()
+        return tier.chunks if tier is not None and tier.chunks else None
 
     @staticmethod
     def _local_hash_scan(
@@ -1285,7 +1316,9 @@ def _row_group_hashes(fp: str):
 def _local_parquet_files(path: str) -> list[str]:
     """Committed parquet files under a LOCAL directory, recursively and
     in name order, skipping underscore/dot-prefixed entries by the rule
-    of :func:`_has_parquet`."""
+    of :func:`_has_parquet` — the one listing rule of local Parquet
+    files, shared by the driver-tier gate and the footer statistics of
+    ``queries``.  ``[]`` for a missing directory."""
     out: list[str] = []
     try:
         with os.scandir(path) as it:

@@ -52,14 +52,11 @@ from .core import slab as sb
 from .core import slice as sl
 from .core.slab import Slab
 from .core.slice import Slice
-from . import fs as fsmod
 from .store import (
-    _SPARK_RESOLVE,
     CHUNK_SCHEMA,
     Connection,
     _coord_cols,
     _index_gen_schema,
-    _local_parquet_files,
     index_schema,
 )
 
@@ -249,32 +246,27 @@ def _base_index_df(
 
 
 def _index_rows_bound(
-    conn: Connection, version: int, var: str
+    conn: Connection, var: str, plan: list[tuple[int, int]]
 ) -> int | None:
-    """Upper bound on the resolved (version, var) index row count from
-    parquet FOOTERS — catalog metadata, zero Spark jobs (the same
-    footer walk the local index-map scale guard uses).  The touched
-    base rows are a subset of the resolved index, so a bound within
-    the broadcast budget proves the streamed-scan attach safe without
-    paying an exact count job.  None when unavailable (non-local fs,
-    no index anywhere)."""
-    if not isinstance(conn.fs, fsmod.LocalFS):
-        return None
-    plan = conn._local_index_plan(version, var)
+    """Upper bound on the row count of the index the generation
+    ``plan`` (:meth:`Connection._local_index_plan`) resolves: the
+    driver-tier gate's footer row total, uncapped — catalog metadata,
+    zero Spark jobs.  The touched base rows are a subset of the
+    resolved index, so a bound within the broadcast budget proves the
+    streamed-scan attach safe without paying an exact count job.  None
+    when unavailable (non-local fs, no index anywhere, an unreadable
+    footer)."""
     if not plan:
         return None
-    total = 0
     try:
-        for v, g in plan:
-            d = conn.index_path(v, var, g)
-            total += _footer_rows(
-                os.path.join(d, fn)
-                for fn in conn.fs.listdir(d)
-                if fn.endswith(".parquet")
-            )
+        tier = conn.driver_tier(
+            (conn.index_path(v, var, g) for v, g in plan),
+            chunks=False,
+            capped=False,
+        )
     except OSError:
         return None
-    return total
+    return None if tier is None else tier.rows
 
 
 def _grid_shape(grid: Slice) -> list[int]:
@@ -284,29 +276,6 @@ def _grid_shape(grid: Slice) -> list[int]:
         -(-(hi - lo) // st)
         for lo, hi, st in zip(grid.start, grid.stop, grid.step)
     ]
-
-
-def _footer_rows(files: Iterable[str]) -> int:
-    """Summed row counts of local parquet files, from their footers."""
-    import pyarrow.parquet as pq
-
-    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-
-
-def _bcast_budget(conn: Connection) -> int:
-    """Session broadcast budget in bytes
-    (``spark.mandoline.broadcastIndexBudget``; shared convention with
-    reader._join_blobs — an explicit broadcast bypasses
-    autoBroadcastJoinThreshold, so the bound must live with the
-    hint)."""
-    try:
-        return int(
-            conn.spark.conf.get(
-                "spark.mandoline.broadcastIndexBudget", str(256 << 20)
-            )
-        )
-    except ValueError:
-        return 256 << 20
 
 
 def _touched_base_blobs(
@@ -335,7 +304,7 @@ def _touched_base_blobs(
     )
     # ~1 KiB per built hash-relation row, the read path's measured
     # convention (reader._join_blobs)
-    if n_rows * 1024 <= _bcast_budget(conn):
+    if n_rows * 1024 <= conn._bcast_budget():
         # one broadcast does prune AND attach: the streamed chunk scan
         # probes the touched-rows hash relation, non-matching blobs
         # never leave their scan task, matching ones pick up their
@@ -486,12 +455,12 @@ def _driver_write(
     slabs (:func:`slabs_to_piece_rows`) with numpy + pyarrow and no
     Spark job — the reference's client-side ``write-variable``
     (impl.clj:246-308).  Returns False, having written nothing, unless
-    the store is LOCAL, the commit is a delta or a full commit with no
-    base, the touched base entries resolve within
-    ``index_map_max_entries``, the chunk table is within
-    ``blob_local_fetch_max_bytes`` (or empty), no generation of the
-    base carries cross-writer masks, and every base blob is found;
-    the caller then takes the Spark tier.  (A full commit onto a base
+    the driver-tier gate (:meth:`Connection.driver_tier`) admits the
+    chunk table (a LOCAL store within ``blob_local_fetch_max_bytes``,
+    or empty) and the base's index generations, the commit is a delta
+    or a full commit with no base, no generation of the base carries
+    cross-writer masks, and every base blob is found; the caller then
+    takes the Spark tier.  (A full commit onto a base
     must carry every untouched entry: the Spark tier's anti-join does
     that in parallel, where the driver would fold and rewrite the whole
     base map serially.)
@@ -502,8 +471,10 @@ def _driver_write(
     (no bloom filter — see :func:`chunk_table_writer`), and the index
     generation commits through :func:`_commit_generation` against the
     generation snapshot taken before the base read."""
-    if not isinstance(conn.fs, fsmod.LocalFS):
+    tier = conn.driver_tier()
+    if tier is None:
         return False
+    files = tier.chunks
     vid = token["version-id"]
     base_gens = conn.index_gens(vid, var)
     expected_gen = (base_gens[-1] + 1) if base_gens else 0
@@ -512,11 +483,6 @@ def _driver_write(
         return False
     if any(_gen_masked(conn, v, var, g) for v, g in plan):
         return False
-    files = conn._local_chunk_files()
-    if files is None:
-        if _local_parquet_files(conn.chunks_path()):
-            return False  # chunk table over the driver byte cap
-        files = []
     ndim = len(md.get_variable_dimensions(token, var))
     pieces: dict[tuple, list] = {}  # coord → [(pstart, pstop, data)], ord order
     for r in rows:
@@ -529,12 +495,9 @@ def _driver_write(
             (min(c[i] for c in pieces), max(c[i] for c in pieces))
             for i in range(ndim)
         ]
-        base = conn._local_index_map(
-            vid, var, conn.index_map_max_entries, box
-        )
-        if base is _SPARK_RESOLVE:
-            return False
-        base = base or {}
+        base = conn._local_index_map(vid, var, box)
+        if base is None:
+            return False  # the base's index goes to Spark
     blobs = Connection._local_blobs(
         files, [base[c] for c in pieces if c in base], copy=False
     )
@@ -711,11 +674,11 @@ def write_pieces(
             # bound already fits the budget (zero jobs — the common
             # small-store / test / bench shape); only an inconclusive
             # bound pays the exact count over the persisted agg
-            bound = _index_rows_bound(conn, vid, var)
+            bound = _index_rows_bound(conn, var, plan)
             n_rows = (
                 bound
                 if bound is not None
-                and bound * 1024 <= _bcast_budget(conn)
+                and bound * 1024 <= conn._bcast_budget()
                 else agg.count()
             )
             based = _touched_base_blobs(
@@ -754,13 +717,13 @@ def write_pieces(
         # _layered_base_grouped has confirmed there is a stack to
         # attach at all (r11 ADVICE: the eager count paid a discarded
         # job when plan was empty / chunks was None).
-        bound = _index_rows_bound(conn, vid, var)
+        bound = _index_rows_bound(conn, var, plan)
         layers = _layered_base_grouped(
             conn, var, ndim, plan, agg.select("ckey"), chunks,
             n_hint=(
                 bound
                 if bound is not None
-                and bound * 1024 <= _bcast_budget(conn)
+                and bound * 1024 <= conn._bcast_budget()
                 else (lambda: agg.count() * max(1, len(plan)))
             ),
         )
@@ -889,7 +852,7 @@ def _layered_base_grouped(
         )
     stack = stack.join(touched_ckeys.distinct(), "ckey", "left_semi")
     blob_src = chunks.select(F.col("hash").alias("chunk_hash"), "blob")
-    if n_hint is not None and n_hint * 1024 <= _bcast_budget(conn):
+    if n_hint is not None and n_hint * 1024 <= conn._bcast_budget():
         # prune the chunk table to the stack's hashes before any blob
         # bytes move (same streamed-scan discipline as
         # _touched_base_blobs; n_hint bounds the stack's row count)
@@ -1451,7 +1414,7 @@ def _reconcile_var(
 
     sub = stack.join(contested, "ckey", "left_semi")
     blob_src = chunks.select(F.col("hash").alias("chunk_hash"), "blob")
-    if n_contested * len(plan) * 1024 <= _bcast_budget(conn):
+    if n_contested * len(plan) * 1024 <= conn._bcast_budget():
         # stream the chunk table, move only the contested layers' blobs
         # (same discipline as _touched_base_blobs; the full count above
         # replaced a limit(1) probe — same job class, and it sizes this
@@ -1723,18 +1686,18 @@ def claim_index_gen(conn: Connection, vid: int, var: str) -> tuple[str, int]:
 
 def _local_dup_ckey(conn: Connection, gen_path: str) -> bool | None:
     """Whether the index generation at ``gen_path`` repeats a ckey,
-    read with pyarrow on a LOCAL store whose generation footers hold at
-    most ``index_map_max_entries`` rows (the driver index cap); None
-    leaves the check to Spark."""
-    if not isinstance(conn.fs, fsmod.LocalFS):
-        return None
-    files = _local_parquet_files(gen_path)
-    if _footer_rows(files) > conn.index_map_max_entries:
+    read with pyarrow when the driver-tier gate
+    (:meth:`Connection.driver_tier`) admits the generation; None leaves
+    the check to Spark."""
+    tier = conn.driver_tier([gen_path], chunks=False)
+    if tier is None:
         return None
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    ckeys = pq.read_table(files, columns=["ckey"]).column("ckey")
+    ckeys = pq.read_table(tier.index[gen_path], columns=["ckey"]).column(
+        "ckey"
+    )
     return pc.count_distinct(ckeys).as_py() < len(ckeys)
 
 
@@ -1765,9 +1728,9 @@ def ingest_aligned(
     outside and one piece per grid chunk writes every chunk (or holds a
     duplicate, caught next), so its generation carries nothing from the
     base (:func:`_commit_merged`).  Uniqueness is checked on the
-    just-written generation's ``ckey`` column: with pyarrow on a LOCAL
-    store whose generation footers hold at most
-    ``index_map_max_entries`` rows (no job), else by one Spark
+    just-written generation's ``ckey`` column: with pyarrow when the
+    driver-tier gate admits the generation (a LOCAL store, footers
+    within ``index_map_max_entries`` rows; no job), else by one Spark
     aggregation.  A violation raises after some data may have been
     appended — safely: the version is uncommitted, so readers never see
     it (failed-ingest invisibility, test/failed_ingest.clj:26-146), a

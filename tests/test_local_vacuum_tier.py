@@ -272,7 +272,7 @@ def test_spark_tier_live_set_is_the_resolved_union(store, spark):
 
     own = union(False)
     assert own == union(True)
-    assert len(own) > len(conn._local_index_map(conn.last_version(), "v", 10**6))
+    assert len(own) > len(conn._local_index_map(conn.last_version(), "v"))
 
 
 def test_spark_tier_jobs_linear_in_versions(store, spark, tmp_path):

@@ -174,8 +174,8 @@ def test_driver_tier_matches_spark_tier(store, spark):
                 (
                     _read(conn, v).data.tobytes(),
                     _read(conn, v, "s", SCALAR).data.tobytes(),
-                    conn._local_index_map(v, "v", 10**6),
-                    conn._local_index_map(v, "s", 10**6),
+                    conn._local_index_map(v, "v"),
+                    conn._local_index_map(v, "s"),
                 )
                 for v in versions
             ],
@@ -188,6 +188,34 @@ def test_driver_tier_matches_spark_tier(store, spark):
         assert a[2] == b[2], f"version {i}: resolved index of v differs"
         assert a[3] == b[3], f"version {i}: resolved index of s differs"
     assert drv[1] == spk[1]
+
+
+def test_index_cap_sends_reads_and_delta_commits_to_spark(store, spark):
+    """The index half of the driver-tier gate: with
+    ``index_map_max_entries`` below the store's index rows, an uncached
+    ``get_slice`` and a delta ``write_variable`` each launch Spark jobs
+    and give byte-equal reads to a twin on the driver tier."""
+    twins = {}
+    for name, cap in (("driver", 2_000_000), ("spark", 1)):
+        conn = store.create_dataset(name)
+        t = conn.add_version(DDS)
+        writer.write_variable(conn, t, "v", [_random_slab(FULL, 20)])
+        v1 = conn.finish_version(t)
+        conn.index_map_max_entries = cap  # v1's index holds 6 rows
+        read_jobs = _jobs_of(spark, _read, conn, v1)
+        t = conn.add_version(DDS)
+        box = sl.mk_slice((1, 2), (7, 5))  # crosses four chunks, none whole
+        write_jobs = _jobs_of(
+            spark, writer.write_variable, conn, t, "v", [_random_slab(box, 21)],
+            index_mode="delta",
+        )
+        v2 = conn.finish_version(t)
+        if name == "spark":
+            assert read_jobs > 0 and write_jobs > 0, (read_jobs, write_jobs)
+        else:
+            assert read_jobs == 0 and write_jobs == 0, (read_jobs, write_jobs)
+        twins[name] = [_read(conn, v).data.tobytes() for v in (v1, v2)]
+    assert twins["driver"] == twins["spark"]
 
 
 def test_rewrite_of_stored_content_appends_no_blob(store, spark):
@@ -285,7 +313,7 @@ def test_spark_reads_mixed_chunk_tree_and_delta_chain(store, spark):
         np.testing.assert_array_equal(_read(conn, v, spark_path=True).data, want)
         np.testing.assert_array_equal(_read(conn, v).data, want)
         rows = conn.resolve_index_df(v, "v").select("c0", "c1", "chunk_hash").collect()
-        assert {(r.c0, r.c1): r.chunk_hash for r in rows} == conn._local_index_map(v, "v", 10**6)
+        assert {(r.c0, r.c1): r.chunk_hash for r in rows} == conn._local_index_map(v, "v")
     cells = reader.cells_df(conn, reader.on_version(conn, max(versions)), "v").collect()
     assert len(cells) == mirror.size
     assert all(r.value == mirror[r.dim0, r.dim1] for r in cells)

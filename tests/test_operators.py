@@ -616,6 +616,10 @@ def test_connected_components_tiers_agree(spark, aqe):
         empty = spark.createDataFrame([], "a long, b long")
         drv = connected_components(empty)
         assert drv.collect() == [] and drv.schema == spk.schema
+        with _spark_tier(spark):
+            got = connected_components(empty)
+        assert _plan_root(got) == "LogicalRDD"
+        assert got.collect() == [] and got.schema == spk.schema
         small = spark.createDataFrame(
             [(1, 2), (2, None), (None, None)], "a long, b long"
         )

@@ -423,11 +423,8 @@ def test_delta_overlay_matches_numpy_across_versions(data, store_factory):
     # sampled stack — not just produce the same cell values.
     import re as _re
 
-    from mandoline_spark.store import _SPARK_RESOLVE
-
     for vid in mirrors:
-        local = conn._local_index_map(vid, "v", 1 << 20)
-        assert local is not _SPARK_RESOLVE
+        local = conn._local_index_map(vid, "v")
         idx = conn.resolve_index_df(vid, "v")
         if idx is None:
             assert local is None

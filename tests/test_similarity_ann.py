@@ -297,35 +297,37 @@ def _crafted_corpus(spark, emb):
 
 
 def test_ivf_vectorized_default_and_override(spark, emb):
-    """r16 (VERDICT r15 #6): ivf_topk's sim kernel defaults to the
-    einsum Arrow batch — the pipeline already crosses the Python
-    boundary for cell_ranking, and the einsum measured faster at BOTH
-    probed pair counts (2.5k and 25k, PROBE_ANN_FOLD_SF1_r16.json) —
-    with vectorized=False preserving the JVM fold.  Both kernels must
-    agree on ranks, sims to FP association, and the NULL/zero-norm
-    degenerate rows (0.0 on both paths: the kernel's mask matches the
-    fold's .otherwise(0.0))."""
-    from mandoline_spark.functions.similarity import ivf_topk
-
+    """ivf_topk re-ranks with the einsum Arrow batch at every scale —
+    the pipeline already crosses the Python boundary for cell_ranking,
+    and the einsum measured faster than the JVM fold at BOTH probed
+    pair counts (2.5k and 25k, PROBE_ANN_FOLD_SF1_r16.json).  At
+    n_probe == n_cells it must agree with cosine_topk, whose kernel
+    below the 50k-pair crossover is that JVM fold: the same ranks,
+    sims to FP association, and 0.0 sims for the zero-norm query on
+    both (the kernel's mask matches the fold's .otherwise(0.0)).  The
+    degenerate queries' all-zero ties are broken differently (ivf_topk
+    puts the query's own id first), and a NULL query vector probes no
+    cell, so ranks are compared on the real queries."""
     corpus = _crafted_corpus(spark, emb)
     q = corpus.filter(
         (F.col("vec_id") < 3) | (F.col("vec_id") > 10_000)
     )
-    kw = dict(k=5, n_cells=8, n_probe=8, round_to=None)
-    auto = ivf_topk(q, corpus, **kw)
-    forced_on = ivf_topk(q, corpus, vectorized=True, **kw)
-    fold = ivf_topk(q, corpus, vectorized=False, **kw)
-    assert not _has_jvm_fold(auto)
-    assert not _has_jvm_fold(forced_on)
+    kw = dict(k=5, round_to=None)
+    ivf = ivf_topk(q, corpus, n_cells=8, n_probe=8, **kw)
+    fold = cosine_topk(q, corpus, **kw)
+    assert not _has_jvm_fold(ivf)
     assert _has_jvm_fold(fold)
-    a, b = auto.collect(), fold.collect()
-    assert [(r.qid, r.vec_id) for r in a] == [
-        (r.qid, r.vec_id) for r in b
+    a, b = ivf.collect(), fold.collect()
+    real_a, real_b = ([r for r in rows if r.qid < 10_000] for rows in (a, b))
+    assert real_a and [(r.qid, r.vec_id) for r in real_a] == [
+        (r.qid, r.vec_id) for r in real_b
     ]
-    for ra, rb in zip(a, b):
+    for ra, rb in zip(real_a, real_b):
         assert abs(ra.sim - rb.sim) <= 1e-12, (ra, rb)
     degenerate = [r for r in a if r.qid > 10_000]
     assert degenerate and all(r.sim == 0.0 for r in degenerate)
+    assert {r.qid for r in degenerate} == {10_002}
+    assert all(r.sim == 0.0 for r in b if r.qid > 10_000)
 
 
 def test_lsh_vectorized_gate_outcomes(spark, emb):
