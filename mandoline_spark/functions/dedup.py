@@ -4,9 +4,12 @@ xxhash64/bitwise aggregates) — no Python in any per-token loop.
 
 Scale shapes:
 - exact: groupBy(md5) — one shuffle of (hash, id).
-- n-gram Jaccard: inverted-index self-join on shingle (each gram is a
-  blocking key); `max_df` drops stop-shingles so hot keys can't explode
-  the join (the classic skew guard).
+- n-gram Jaccard: inverted index on shingle hashes.  By default each
+  doc posts only its threshold prefix of sorted hashes (prefix
+  filtering), and the candidate pairs are verified on the id-partitioned
+  gram pass, which the verify join reuses; `max_df` instead posts every
+  gram and drops stop-shingles so hot keys can't explode the join (the
+  classic skew guard).
 - MinHash-LSH: the k-permutation signature is computed per document in a
   SINGLE projection over the gram array (one `aggregate` pass carrying k
   running minima) — no explode, no shuffle, nothing leaves the input
@@ -105,15 +108,20 @@ def doc_gram_hashes(
     fixed-width longs instead of ~30-char strings, and set
     intersections downstream compare longs.  Hash collisions merge two
     grams — the same d²/2^65 bound documented on ngram_jaccard_pairs.
-    Repartitioned like :func:`doc_grams` (CPU-bound per-doc work).
+
+    The corpus is hash-partitioned by id (one exchange of the raw
+    text, like :func:`doc_grams`' rebalance, into the session's
+    shuffle partitions — the core count — and balanced because ids are
+    unique): the per-doc work is CPU-bound, and a join on ``id``
+    downstream (:func:`_verify_jaccard`) reuses this partitioning, so
+    the gram arrays never cross a second exchange.
     The two-step select is load-bearing: the split result materializes
     in its own Project, and the sig UDF downstream consumes a plain
     attribute (a fused single expression collapses into the pandas
     UDF's argument and trips ExtractPythonUDFs' codegen)."""
-    sc = df.sparkSession.sparkContext
     gets = ", ".join(f"get(_words, i + {j})" for j in range(n))
     return (
-        df.repartition(sc.defaultParallelism)
+        df.repartition(F.col(id_col))
         .select(
             F.col(id_col).alias("id"),
             F.split(F.col(text_col), r"\s+").alias("_words"),
@@ -163,13 +171,27 @@ def ngram_jaccard_pairs(
     ordered: bool = True,
     sizes_broadcast: bool = False,
 ) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs (a < b, jac ≥ threshold) via
-    an inverted-index self-join on shingles.  ``threshold`` is coerced
-    to a plain Python float before SQL interpolation — a numpy scalar's
-    repr under numpy 2.x ('np.float64(0.5)') would not parse
-    (ADVICE r8).  ``max_df`` (drop shingles
-    occurring in more than max_df docs) bounds join fan-out at scale
-    without affecting high-similarity pairs.
+    """Exact n-gram Jaccard near-dup pairs (a < b, jac ≥ threshold).
+    ``threshold`` is coerced to a plain Python float before SQL
+    interpolation — a numpy scalar's repr under numpy 2.x
+    ('np.float64(0.5)') would not parse (ADVICE r8).
+
+    Default path (``max_df=None``): prefix filtering (Bayardo, Ma &
+    Srikant, WWW 2007; run in parallel as in Vernica, Carey & Li,
+    SIGMOD 2010).  Under one total order of the gram hashes, two sets
+    with J ≥ t share a gram among the first ``|x| - ceil(t·|x|) + 1``
+    of each, so every document posts only its
+    ``size - floor(t·size) + 1`` smallest hashes (``floor``: float
+    rounding can only lengthen the prefix).  The posting lists emit the
+    distinct candidate pairs and :func:`_verify_jaccard` computes the
+    exact Jaccard of the hashed sets, so the pair set and ``jac`` are
+    those of the full inverted index — at t = 0.8 about a fifth of the
+    posting rows cross the exchange.
+
+    ``max_df`` (drop shingles occurring in more than max_df docs)
+    bounds join fan-out at scale without affecting high-similarity
+    pairs; that path posts EVERY gram, since document frequency is a
+    count over all posting rows, and sizes are the post-drop ones.
 
     ``sizes_broadcast`` (max_df path only) broadcasts the per-doc
     post-drop set sizes — ~16 bytes per DOCUMENT on the driver, so it
@@ -189,51 +211,34 @@ def ngram_jaccard_pairs(
 
     The posting shuffle is keyed on the 64-bit xxhash of each shingle,
     not the shingle string — 8 bytes per key instead of ~3 words of
-    text.  A hash collision merges two posting lists and can only
-    inflate ``common`` for pairs appearing in both; with d distinct
-    shingles the expected number of colliding shingle pairs is
-    d²/2^65 (< 1 up to ~6e9 distinct shingles)."""
+    text.  A hash collision merges two grams and can only inflate
+    ``common`` for pairs holding both; with d distinct shingles the
+    expected number of colliding shingle pairs is d²/2^65 (< 1 up to
+    ~6e9 distinct shingles)."""
     # coerced BEFORE the branch bodies interpolate it into SQL
     threshold = float(threshold)
     # Hash-level gram sets (see doc_gram_hashes): the posting key and
     # the set sizes never need the gram strings.
-    g = (
-        doc_gram_hashes(df, text_col, id_col, n)
-        .select(
-            "id",
-            F.size("ghashes").alias("ng"),
-            F.explode_outer("ghashes").alias("gram"),
-        )
-        .where(F.col("gram").isNotNull())
-    )
+    dgh = doc_gram_hashes(df, text_col, id_col, n)
     # Posting-list pair generation: ONE shuffle of the exploded shingles
     # (groupBy gram), then each posting list emits its a<b pairs
     # JVM-side, incrementally (see _pairs_from_posts).  The classic
     # a-join-b inverted-index self-join shuffles the same rows twice AND
     # re-runs the whole gram pipeline per branch (Catalyst can't reuse
-    # the exchange across the join's alias renames); this shape computes
-    # grams once.  Posting-list length is the quadratic guard — cap it
-    # with ``max_df`` at scale.
+    # the exchange across the join's alias renames).  Posting-list
+    # length is the quadratic guard — cap it with ``max_df`` at scale.
     if max_df is None:
-        # each posting row carries the doc's gram count (8 bytes) on the
-        # one shuffle we already pay, so set sizes need no second pass;
-        # na/nb are functionally dependent on a/b — extra grouping keys,
-        # not extra groups.  min_size=2: sizes ride as row payload (not
-        # recounted from the lists), so singleton grams — the bulk of
-        # the vocabulary — drop right after collection (a post-collect
-        # length filter; their 16-byte arrays are built but never reach
-        # the pair emitter's projection)
-        posts = _posting_lists(g, ["gram"], ["ng"], min_size=2)
-        common = (
-            _pairs_from_posts(posts, ["ng"], None)
-            .groupBy(
-                "a",
-                "b",
-                F.col("ng_a").alias("na"),
-                F.col("ng_b").alias("nb"),
-            )
-            .agg(F.count("*").alias("common"))
-        )
+        prefix = dgh.select(
+            "id",
+            F.explode_outer(
+                F.expr(
+                    "slice(array_sort(ghashes), 1, CAST(greatest(size(ghashes)"
+                    f" - floor({threshold!r} * size(ghashes)) + 1, 0) AS INT))"
+                )
+            ).alias("gram"),
+        ).where(F.col("gram").isNotNull())
+        cand = _posting_pairs(prefix, ["gram"], []).distinct()
+        out = _verify_jaccard(cand, dgh, threshold, round_to)
     else:
         # A gram's per-bucket row count IS its document frequency (one
         # distinct row per (id, gram)), so the stop-shingle drop is a
@@ -247,7 +252,8 @@ def ngram_jaccard_pairs(
         # the same object, so ReuseExchange serves both from one gram
         # exchange — the whole corpus-scale gram pipeline runs once.
         surv = (
-            g.drop("ng")
+            dgh.select("id", F.explode_outer("ghashes").alias("gram"))
+            .where(F.col("gram").isNotNull())
             .selectExpr(
                 "*",
                 "count(1) OVER (PARTITION BY gram) AS _bsz",
@@ -338,17 +344,7 @@ def ngram_jaccard_pairs(
             sa = sizes.selectExpr("id AS a", "_sz AS na")
             sb = sizes.selectExpr("id AS b", "_sz AS nb")
             common = pairs.join(sa, "a").join(sb, "b")
-    round_to = int(round_to) if round_to is not None else None
-    jac_sql = "common / (na + nb - common)"
-    out = common.where(f"{jac_sql} >= {threshold!r}").selectExpr(
-        "a",
-        "b",
-        (
-            f"round({jac_sql}, {round_to}) AS jac"
-            if round_to is not None
-            else f"{jac_sql} AS jac"
-        ),
-    )
+        out = _jaccard_rows(common, threshold, round_to)
     # ``ordered=False`` skips the final sort entirely: consumers that
     # re-aggregate the pairs (connected components, cluster keep-best)
     # would pay an exchange+sort only to destroy the order one stage
@@ -689,6 +685,65 @@ def _posting_pairs(
     )
 
 
+def _jaccard_rows(
+    common: DataFrame, threshold: float, round_to: int | None
+) -> DataFrame:
+    """(a, b, jac) at jac ≥ threshold from (a, b, common, na, nb) rows:
+    the one Jaccard formula of both exact emitters."""
+    jac_sql = "common / (na + nb - common)"
+    jac = jac_sql if round_to is None else f"round({jac_sql}, {int(round_to)})"
+    return common.where(f"{jac_sql} >= {float(threshold)!r}").selectExpr(
+        "a", "b", f"{jac} AS jac"
+    )
+
+
+def _verify_jaccard(
+    cand: DataFrame,
+    dgh: DataFrame,
+    threshold: float,
+    round_to: int | None,
+) -> DataFrame:
+    """Exact Jaccard of candidate pairs (a, b) on the gram-hash sets of
+    ``dgh`` (:func:`doc_gram_hashes`): (a, b, jac) at jac ≥ threshold,
+    cost O(candidates), never O(corpus²).
+
+    Both docs' sets come from ONE pass over dgh: each pair explodes
+    into its two member rows, which join dgh once and fold back per
+    pair — two plain joins of dgh would run the gram pipeline once per
+    join branch.  The join is a shuffled hash join built on the member
+    rows (a hint: their size is unknown at plan time, and a broadcast
+    would cost its own job).  The member rows are hash-partitioned by
+    id to meet dgh's own id partitioning, so the corpus's gram arrays
+    stream through the probe side with no exchange and cross one only
+    in the fold-back, for candidate docs alone."""
+    members = cand.select("a", "b", F.explode(F.array("a", "b")).alias("id"))
+    paired = (
+        dgh.join(members.hint("shuffle_hash"), "id")
+        .groupBy("a", "b")
+        .agg(
+            F.first(
+                F.when(F.col("id") == F.col("a"), F.col("ghashes")),
+                ignorenulls=True,
+            ).alias("_ga"),
+            F.first(
+                F.when(F.col("id") == F.col("b"), F.col("ghashes")),
+                ignorenulls=True,
+            ).alias("_gb"),
+        )
+    )
+    return _jaccard_rows(
+        paired.selectExpr(
+            "a",
+            "b",
+            "size(array_intersect(_ga, _gb)) AS common",
+            "size(_ga) AS na",
+            "size(_gb) AS nb",
+        ),
+        threshold,
+        round_to,
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     threshold: float,
@@ -700,7 +755,6 @@ def minhash_lsh_pairs(
     seed: int = 42,
     round_to: int | None = 6,
     max_bucket: int | None = None,
-    verify_broadcast: bool = False,
     ordered: bool = True,
 ) -> DataFrame:
     """Near-dup pairs by MinHash banding + exact-Jaccard verification.
@@ -708,8 +762,8 @@ def minhash_lsh_pairs(
     Banding: signature split into ``bands`` groups of k/bands rows; docs
     colliding on any band become candidates (join key = band id + band
     hash), recall 1-(1-s^r)^b (≈1 for s ≥ 0.8 at 16×4).  Verification
-    joins each candidate pair to the two gram SETS and computes exact
-    Jaccard with ``array_intersect`` — cost O(candidates), so the full
+    computes each candidate's exact Jaccard on the two gram SETS with
+    ``array_intersect`` — cost O(candidates), so the full
     inverted-index self-join never runs.
 
     Documents with no shingles are excluded from candidacy (see
@@ -722,26 +776,14 @@ def minhash_lsh_pairs(
     100 TB call sites pass an explicit cap sized to their executor
     memory (the declared q36 passes 10_000).
 
-    ``verify_broadcast`` broadcasts the (a, b, id) candidate sides into
-    the verification join, so the corpus's gram arrays never hit an
-    exchange — the gram pipeline streams past a hash map of candidate
-    ids (measured ~1.6x end-to-end at sf0.1, where the planner otherwise
-    picks a shuffle join: the candidate side's size is unknown at plan
-    time, and AQE's runtime downgrade still pays the corpus exchange
-    write).  Opt-in because the broadcast must hold EVERY candidate
-    pair on the driver: right for typical dup rates (candidates ≪
-    corpus by construction), wrong for a dup-saturated corpus where
-    near-dup pairs approach corpus scale — there the default shuffle
-    join is the safe shape.
-
-    The broadcast probe streams the ONE-pass gram pipeline (``dgh``)
-    rather than recomputing the gram expression per candidate member
-    row (r16; guide §2.3).  The r9–r15 shape did the latter, sized
-    for candidates ≪ corpus — but candidate count grows with the
-    corpus's dup structure, not its size: at sf1 the banding emits 5
-    pairs per DOC (251k pairs / 50k docs), so per-member recompute
-    ran the split/shingle/hash work ~10x over the corpus pass and
-    verification was 19 s of q36's 21 s (PROBE_Q36_SF1_r16.json).
+    Verification (:func:`_verify_jaccard`) joins the candidate member
+    rows to the ONE-pass gram pipeline (``dgh``) rather than recomputing
+    the gram expression per member row (r16).  The r9–r15 shape did the
+    latter, sized for candidates ≪ corpus — but candidate count grows
+    with the corpus's dup structure, not its size: at sf1 the banding
+    emits 5 pairs per DOC (251k pairs / 50k docs), so per-member
+    recompute ran the split/shingle/hash work ~10x over the corpus pass
+    and verification was 19 s of q36's 21 s (PROBE_Q36_SF1_r16.json).
     One corpus gram pass is at most 2x optimal at ANY dup rate (the
     signature side already pays one), never pathological."""
     # Hash-level gram sets end-to-end (see doc_gram_hashes): the
@@ -756,52 +798,7 @@ def minhash_lsh_pairs(
     cand = _posting_pairs(
         banded, ["band_id", "band_hash"], [], max_bucket
     ).distinct()
-    # Verification fetches both docs' gram-hash sets in ONE pass over
-    # dgh: exploding each pair into its two member rows, joining dgh
-    # once, and folding back — two plain joins of dgh would run the
-    # whole gram pipeline once per join branch.  The fold-back shuffle
-    # carries hash arrays for candidate docs only, O(candidates), never
-    # O(corpus).
-    sides_small = cand.select("a", "b", F.explode(F.array("a", "b")).alias("id"))
-    if verify_broadcast:
-        # Stream dgh (grams computed ONCE per corpus doc) past the
-        # broadcast of the candidate member rows — no corpus exchange.
-        # The r9–r15 shape instead recomputed the gram expression per
-        # member row off the raw scan, sized for candidates ≪ corpus;
-        # banding's candidate count follows the DUP RATE, not the
-        # corpus size, and at sf1 (5 pairs/doc) that recompute was
-        # ~10 corpus-passes of interpreted HOF work — 19 s of q36's
-        # 21 s (r16, PROBE_Q36_SF1_r16.json: verification 20.9 s of
-        # 21 s full; the swap measured 21 s → see probe).  One doc in
-        # several pairs now fans out AFTER its grams are computed.
-        sides = dgh.join(F.broadcast(sides_small), "id")
-    else:
-        sides = sides_small.join(dgh, "id")
-    paired = sides.groupBy("a", "b").agg(
-        F.first(
-            F.when(F.col("id") == F.col("a"), F.col("ghashes")),
-            ignorenulls=True,
-        ).alias("_ga"),
-        F.first(
-            F.when(F.col("id") == F.col("b"), F.col("ghashes")),
-            ignorenulls=True,
-        ).alias("_gb"),
-    )
-    common = F.size(F.array_intersect("_ga", "_gb"))
-    jac = common / (F.size("_ga") + F.size("_gb") - common)
-    out = (
-        paired.withColumn("_jac", jac)
-        .filter(F.col("_jac") >= threshold)
-        .select(
-            "a",
-            "b",
-            (
-                F.round("_jac", round_to)
-                if round_to is not None
-                else F.col("_jac")
-            ).alias("jac"),
-        )
-    )
+    out = _verify_jaccard(cand, dgh, threshold, round_to)
     # same ordered contract as ngram_jaccard_pairs: threshold-bounded
     # presentation output gathers + sorts in one partition instead of
     # paying a range-sampler job per action

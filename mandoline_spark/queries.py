@@ -1129,13 +1129,8 @@ def q36(spark, sf):
     # bucket (the 100 TB skew guard, opt-in — the function default is
     # exact recall); at fixture scale no bucket approaches it, so the
     # declared result remains exactly the oracle's Jaccard pairs.
-    # verify_broadcast: candidates ≪ corpus here (and at any typical
-    # dup rate), so the verification join streams the gram arrays past
-    # a broadcast of the candidate sides instead of exchanging them;
-    # dup-saturated corpora keep the default shuffle join.
     return minhash_lsh_pairs(
-        d, threshold=0.8, n=3, k=64, bands=16, max_bucket=10_000,
-        verify_broadcast=True,
+        d, threshold=0.8, n=3, k=64, bands=16, max_bucket=10_000
     )
 
 
@@ -2515,7 +2510,10 @@ def q82(spark, sf):
 
     The declared pair emitter is the EXACT Jaccard inverted index
     (ngram_jaccard_pairs), matching the oracle's pair set with recall 1
-    at every sf.  The r3 declared form fed minhash-LSH pairs instead
+    at every sf: it posts only each doc's threshold prefix of sorted
+    gram hashes (prefix filtering — exact, not a heuristic) and
+    verifies the candidates on the id-partitioned gram pass.  The r3
+    declared form fed minhash-LSH pairs instead
     (per-pair recall ~0.9998 at 16x4 — not 1), and one near-threshold
     pair missing every band would split a cluster and diverge the whole
     component labeling (ADVICE r03).  minhash stays the at-scale
@@ -2550,8 +2548,9 @@ def q83(spark, sf):
     one canonical survivor per cluster (longest text, ties to lowest
     id) — the operation a 100 TB training-data pipeline runs to drop
     duplicate documents while keeping the best copy.  Exact-Jaccard
-    pair emitter for the declared form (see q82's recall note);
-    minhash-LSH is the drop-in at-scale alternative."""
+    pair emitter for the declared form, prefix-filtered and verified
+    on the gram pass (see q82's recall note); minhash-LSH is the
+    drop-in at-scale alternative."""
     from .functions.dedup import ngram_jaccard_pairs
     from .operators.graph import dedup_clusters
 

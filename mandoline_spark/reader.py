@@ -527,9 +527,17 @@ def get_slice(
         # on or off; cache_reads adds the reference's read-wrapper
         # stack (CachingChunkStore + read-only index cache), so warm
         # chunks skip even the file reads.  None from either call sends
-        # the read to the Spark plan below.
-        imap = conn.index_map(
-            token["version-id"], var, [(lo, hi) for lo, hi, _ in csets]
+        # the read to the Spark plan below.  Without the cache the
+        # chunk half of the gate is asked ONCE, before the index map
+        # (a map is wasted work when the blobs cannot follow it), and
+        # its files serve the blob fetch.
+        files = None if conn.cache_reads else conn._local_chunk_files()
+        imap = (
+            conn.index_map(
+                token["version-id"], var, [(lo, hi) for lo, hi, _ in csets]
+            )
+            if conn.cache_reads or files is not None
+            else None
         )
         if imap is not None:
             import itertools
@@ -544,7 +552,7 @@ def get_slice(
                 )
                 if c in imap
             ]
-            blobs = conn.blobs_for([imap[c] for c in coords])
+            blobs = conn.blobs_for([imap[c] for c in coords], files)
             if blobs is not None:
                 for c in coords:
                     _paste(c, blobs[imap[c]])

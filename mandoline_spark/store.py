@@ -868,15 +868,13 @@ class Connection:
 
         Without ``cache_reads`` the map is built job-free on LOCAL
         stores only, restricted to ``box`` (see
-        :meth:`_local_index_map`), and only when the blobs can follow it
-        job-free (:meth:`_local_chunk_files`) — otherwise the Spark read
-        resolves the index inside its own plan and a driver map would
-        be wasted work.  With ``cache_reads`` the WHOLE map is memoized
-        per (version, var), built locally or by one Spark
-        limit-collect."""
+        :meth:`_local_index_map`); a read asks first whether its blobs
+        can follow job-free (:meth:`_local_chunk_files`), since
+        otherwise the Spark read resolves the index inside its own plan
+        and a driver map would be wasted work.  With ``cache_reads`` the
+        WHOLE map is memoized per (version, var), built locally or by
+        one Spark limit-collect."""
         if not self.cache_reads:
-            if self._local_chunk_files() is None:
-                return None
             return self._local_index_map(version, var, box)
         key = (version, var)
         with self._cache_lock:
@@ -991,18 +989,21 @@ class Connection:
             h: b.as_py() if copy else b.as_buffer() for h, b in found.items()
         }
 
-    def blobs_for(self, hashes: list[str]) -> dict | None:
+    def blobs_for(
+        self, hashes: list[str], files: list[str] | None = None
+    ) -> dict | None:
         """hash → chunk blob fetched on the driver, or None when the
         read should take the Spark path.
 
         Without ``cache_reads``: an eligible local chunk table
-        (:meth:`_local_chunk_files`) is read job-free and the values
-        are zero-copy Arrow buffers; anything else returns None.  With
+        (:meth:`_local_chunk_files`, or ``files`` when the caller
+        already asked for them) is read job-free and the values are
+        zero-copy Arrow buffers; anything else returns None.  With
         ``cache_reads``: read-through the blob LRU (``bytes``) — hits
         cost nothing, misses are fetched locally when eligible and
         otherwise in one filtered Spark job."""
         if not self.cache_reads:
-            files = self._local_chunk_files()
+            files = files if files is not None else self._local_chunk_files()
             if files is None:
                 return None
             return self._local_blobs(files, hashes, copy=False)

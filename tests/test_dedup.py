@@ -226,18 +226,101 @@ def _brute_jaccard_pairs(texts: dict, threshold: float, max_df=None):
 
 @pytest.mark.parametrize("max_df", [None, 3])
 def test_ngram_jaccard_matches_bruteforce(spark, max_df):
+    """The default path posts only each doc's threshold prefix of
+    sorted gram hashes, so it is checked across thresholds — prefix
+    lengths from most of a set (0.2) down to a single gram (1.0)."""
     docs = _docs(spark).limit(120)
     texts = {r.doc_id: r.text for r in docs.select("doc_id", "text").collect()}
+    for t in (0.2, 0.5, 0.8, 0.9, 1.0) if max_df is None else (0.2,):
+        got = {
+            (r.a, r.b): float(r.jac)
+            for r in ngram_jaccard_pairs(
+                docs, threshold=t, max_df=max_df
+            ).collect()
+        }
+        brute = {
+            (a, b): j for a, b, j in _brute_jaccard_pairs(texts, t, max_df)
+        }
+        assert set(got) == set(brute), t
+        for pair, j in got.items():
+            assert j == pytest.approx(brute[pair], abs=1e-6)
+
+
+def test_ngram_jaccard_prefix_keeps_boundary_pair(spark):
+    """J == t exactly with an integral t·|x|: A (4 grams) ⊂ B (5 grams)
+    at t = 0.8, so J = 4/5 = t.  The prefix of A holds
+    4 - floor(0.8·4) + 1 = 2 hashes and that of B 5 - 4 + 1 = 2, and
+    the pair must still meet in a posting list and be kept."""
+    rows = [
+        Row(doc_id=1, text="w0 w1 w2 w3 w4 w5"),  # 4 grams
+        Row(doc_id=2, text="w0 w1 w2 w3 w4 w5 w6"),  # 5 grams, ⊃ A
+        Row(doc_id=3, text="x0 x1 x2 x3 x4 x5"),
+    ]
+    docs = spark.createDataFrame(rows)
+    want = _brute_jaccard_pairs({r.doc_id: r.text for r in rows}, 0.8)
+    assert want == {(1, 2, 0.8)}
     got = {
-        (r.a, r.b): float(r.jac)
-        for r in ngram_jaccard_pairs(
-            docs, threshold=0.2, max_df=max_df
-        ).collect()
+        (r.a, r.b, float(r.jac))
+        for r in ngram_jaccard_pairs(docs, threshold=0.8).collect()
     }
-    brute = {(a, b): j for a, b, j in _brute_jaccard_pairs(texts, 0.2, max_df)}
-    assert set(got) == set(brute)
-    for pair, j in got.items():
-        assert j == pytest.approx(brute[pair], abs=1e-6)
+    assert got == want
+
+
+def test_ngram_jaccard_default_path_edge_docs(spark):
+    """String ids with empty and whitespace-only docs on the default
+    (prefix-filtered) path: empty text has no gram and never pairs,
+    while two whitespace-only docs share the single gram " " (J = 1),
+    exactly as the brute-force oracle counts them."""
+    texts = {
+        "doc-a": "the quick brown fox jumps over the lazy dog",
+        "doc-b": "the quick brown fox jumps over the lazy cat",
+        "doc-c": "",
+        "doc-d": "   ",
+        "doc-e": "\t ",
+        "doc-f": "",
+        "doc-g": "the quick brown fox jumps over the lazy dog",
+    }
+    docs = spark.createDataFrame(
+        [Row(doc_id=k, text=v) for k, v in texts.items()]
+    )
+    for t in (0.3, 0.8, 1.0):
+        got = {
+            (r.a, r.b, r.jac)
+            for r in ngram_jaccard_pairs(docs, threshold=t).collect()
+        }
+        assert got == _brute_jaccard_pairs(texts, t), t
+    assert ("doc-d", "doc-e", 1.0) in got
+
+
+@pytest.mark.slow
+def test_ngram_jaccard_prefix_property(spark):
+    """Property (hypothesis): on random small corpora over a tiny
+    vocabulary (so sets overlap heavily, sizes vary and pairs sit near
+    the threshold) the prefix-filtered default path returns exactly the
+    brute-force pair set and values at any threshold."""
+    from hypothesis import HealthCheck, given, settings
+    from hypothesis import strategies as st
+
+    words = st.lists(st.sampled_from("abcde"), max_size=9)
+    corpora = st.lists(words.map(" ".join), min_size=2, max_size=8)
+    thresholds = st.sampled_from([0.1, 0.25, 1 / 3, 0.5, 0.6, 2 / 3, 0.75, 0.8, 0.9, 1.0])
+
+    @settings(
+        max_examples=25,
+        deadline=None,
+        suppress_health_check=[HealthCheck.too_slow],
+    )
+    @given(corpora, thresholds)
+    def check(texts, t):
+        rows = [Row(doc_id=i, text=x) for i, x in enumerate(texts)]
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        got = {
+            (r.a, r.b, r.jac)
+            for r in ngram_jaccard_pairs(docs, threshold=t).collect()
+        }
+        assert got == _brute_jaccard_pairs(dict(enumerate(texts)), t)
+
+    check()
 
 
 # -- shingle-less docs ----------------------------------------------------------
@@ -262,10 +345,9 @@ def test_empty_docs_never_pair(spark):
 
 
 def test_minhash_verify_broadcast_id_named_id(spark):
-    """The verify_broadcast probe joins the raw corpus to the
-    candidate rows; with id_col == "id" the bare column name exists on
-    BOTH sides (r9 review finding — the qualified join/select must
-    resolve it, as the r8 USING join did)."""
+    """The verify join meets the gram pass on ``id``; with id_col ==
+    "id" the bare column name exists on BOTH sides (r9 review finding —
+    the join/select must resolve it, as the r8 USING join did)."""
     rows = [
         # identical texts: banding recall is 1.0 regardless of seed —
         # this test pins name RESOLUTION, not LSH recall
@@ -274,9 +356,7 @@ def test_minhash_verify_broadcast_id_named_id(spark):
         Row(id=3, text="totally different words over here now"),
     ]
     docs = spark.createDataFrame(rows)
-    got = minhash_lsh_pairs(
-        docs, threshold=0.5, id_col="id", verify_broadcast=True
-    ).collect()
+    got = minhash_lsh_pairs(docs, threshold=0.5, id_col="id").collect()
     assert [(r.a, r.b, r.jac) for r in got] == [(1, 2, 1.0)]
 
 
@@ -356,16 +436,16 @@ def test_ngram_jaccard_size_band_prune_exact(spark):
 
 
 def test_minhash_verify_broadcast_streams_one_gram_pass(spark):
-    """r16: the broadcast verify streams the ONE-pass gram pipeline
-    (dgh) past the candidate broadcast instead of recomputing the gram
-    expression per candidate member row — banding's candidate count
-    follows the dup rate, not the corpus size, and at sf1 (5 pairs per
-    doc) the per-member recompute was ~10 corpus passes of interpreted
-    HOF work (19 of q36's 21 s; PROBE_Q36_VERIFY_SF1_r16.json pins the
-    6.5x).  Pinned two ways: (a) the per-member gram marker — the
-    inlined `transform(array(split(...)))[0]` expression the old shape
-    projected ABOVE the join — no longer appears in the executed plan;
-    (b) both verify shapes agree on a fixture where one doc
+    """r16: the verify join streams the ONE-pass gram pipeline (dgh)
+    instead of recomputing the gram expression per candidate member
+    row — banding's candidate count follows the dup rate, not the
+    corpus size, and at sf1 (5 pairs per doc) the per-member recompute
+    was ~10 corpus passes of interpreted HOF work (19 of q36's 21 s;
+    PROBE_Q36_VERIFY_SF1_r16.json pins the 6.5x).  Pinned two ways:
+    (a) the per-member gram marker — the inlined
+    `transform(array(split(...)))[0]` expression the old shape
+    projected ABOVE the join — does not appear in the executed plan;
+    (b) the result equals brute force on a fixture where one doc
     participates in MANY pairs (the case the old shape recomputed per
     pair)."""
     base = "alpha beta gamma delta epsilon zeta eta theta"
@@ -373,17 +453,12 @@ def test_minhash_verify_broadcast_streams_one_gram_pass(spark):
         Row(doc_id=9, text="totally unrelated words over here now friend"),
     ]
     docs = spark.createDataFrame(rows)
-    bc = minhash_lsh_pairs(docs, threshold=0.5, verify_broadcast=True)
-    plan = bc._jdf.queryExecution().executedPlan().toString()
+    mh = minhash_lsh_pairs(docs, threshold=0.5)
+    plan = mh._jdf.queryExecution().executedPlan().toString()
     assert "transform(array(split(" not in plan
-    got_bc = [(r.a, r.b, r.jac) for r in bc.collect()]
-    got_sh = [
-        (r.a, r.b, r.jac)
-        for r in minhash_lsh_pairs(
-            docs, threshold=0.5, verify_broadcast=False
-        ).collect()
-    ]
+    got = [(r.a, r.b, r.jac) for r in mh.collect()]
     # 6 identical docs -> all 15 pairs at jac 1.0, via every doc
     # sitting in 5 pairs (10 member rows) -- the multi-pair fan-out
-    assert got_bc == got_sh
-    assert len(got_bc) == 15 and all(j == 1.0 for _, _, j in got_bc)
+    want = _brute_jaccard_pairs({r.doc_id: r.text for r in rows}, 0.5)
+    assert set(got) == want
+    assert len(got) == 15 and all(j == 1.0 for _, _, j in got)

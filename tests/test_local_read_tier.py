@@ -204,3 +204,43 @@ def test_blob_fetch_reads_blob_column_only_where_hashes_match(
     assert isinstance(value, bytes if cache_reads else pa.Buffer)
     if cache_reads:
         assert isinstance(conn._blob_lru[want], bytes)
+
+
+def test_cache_off_read_asks_the_chunk_gate_once(store, spark, monkeypatch):
+    """An uncached small read lists the chunk tree once: the files the
+    chunk half of the gate returns before the index map serve the blob
+    fetch too, instead of a second listing and stat of every file.  The
+    read stays job-free and byte-equal to the Spark fallback's."""
+    dds = {
+        "dimensions": {"x": 16, "y": 16},
+        "chunk-dimensions": {"x": 4, "y": 4},
+        "variables": {
+            "v": {"type": "int", "shape": ["x", "y"], "fill-value": 0}
+        },
+    }
+    full = sl.mk_slice((0, 0), (16, 16))
+    conn = store.create_dataset("gateonce")
+    assert not conn.cache_reads
+    t = conn.add_version(dds)
+    writer.write_variable(conn, t, "v", [_random_slab(full, 8)])
+    v = conn.finish_version(t)
+    req = sl.mk_slice((5, 9), (7, 11))
+
+    calls: list = []
+    gate = Connection.driver_tier
+
+    def counting(self, gens=(), chunks=True, capped=True):
+        calls.append(chunks)
+        return gate(self, gens, chunks, capped)
+
+    monkeypatch.setattr(Connection, "driver_tier", counting)
+    got, jobs = _scan(conn, v, req)
+    assert jobs == 0
+    assert calls.count(True) == 1, calls
+    assert calls.count(False) == 1, calls  # the index half
+
+    monkeypatch.setattr(conn, "blob_local_fetch_max_bytes", 0)
+    fallback, fb_jobs = _scan(conn, v, req)
+    assert fb_jobs > 0
+    assert got.data.tobytes() == fallback.data.tobytes()
+    assert got.data.tobytes() == _random_slab(full, 8).data[5:7, 9:11].tobytes()

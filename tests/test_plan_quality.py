@@ -51,11 +51,13 @@ def test_hash_agg_is_partial(spark):
 
 
 def _only_rebalance_exchanges(text: str) -> bool:
-    """True when every Exchange in the plan is the deliberate
-    round-robin rebalance from doc_grams (CPU-parallelism for per-doc
-    work) — no hash/range shuffle keyed on data."""
+    """True when every Exchange in the plan is a deliberate per-doc
+    rebalance — doc_grams' round-robin, or doc_gram_hashes' partitioning
+    by the unique document id (CPU-parallelism for per-doc work) — and
+    none is a hash/range shuffle keyed on data."""
     low = text.lower()
-    return "hashpartitioning" not in low and "rangepartitioning" not in low
+    keys = set(re.findall(r"hashpartitioning\((\w+)#", low))
+    return keys <= {"doc_id"} and "rangepartitioning" not in low
 
 
 def test_minhash_signatures_have_no_key_shuffle(spark):
@@ -64,8 +66,8 @@ def test_minhash_signatures_have_no_key_shuffle(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     text = explain_str(minhash_signatures(docs))
     assert _only_rebalance_exchanges(text), (
-        "signature stage must not shuffle on a key (only the doc_grams "
-        "round-robin rebalance is allowed):\n" + text
+        "signature stage must not shuffle on a key (only the per-doc "
+        "rebalance is allowed):\n" + text
     )
 
 
@@ -171,6 +173,74 @@ def test_bucket_caps_filter_before_collect(spark):
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
     assert plan2.count("hashpartitioning(band") == 1, plan2
+
+
+def _children(node) -> list:
+    """A physical plan node's children; a ReusedExchange stands for the
+    exchange it reuses."""
+    if node.nodeName() == "ReusedExchange":
+        return [node.child()]
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _nodes(node):
+    yield node
+    for c in _children(node):
+        yield from _nodes(c)
+
+
+def _first_exchanges(node) -> list:
+    """The exchanges reached from ``node`` without crossing another."""
+    if node.nodeName() in ("Exchange", "ReusedExchange"):
+        return [node]
+    return [e for c in _children(node) for e in _first_exchanges(c)]
+
+
+def _is_corpus_exchange(node) -> bool:
+    """An exchange fed straight by the corpus scan (no exchange below)."""
+    return node.nodeName() in ("Exchange", "ReusedExchange") and not any(
+        _first_exchanges(c) for c in _children(node)
+    )
+
+
+@pytest.mark.parametrize("fn_name", ["ngram_jaccard_pairs", "minhash_lsh_pairs"])
+def test_exact_jaccard_verify_reuses_the_gram_pass_partitioning(
+    spark, tmp_path, fn_name
+):
+    """The default exact-Jaccard emitters (prefix-filtered n-gram
+    Jaccard, MinHash-LSH) verify their candidates on the id-partitioned
+    gram pass: the raw corpus crosses ONE exchange (hash-partitioned by
+    the doc id; its other consumer plans as a ReusedExchange), no
+    BroadcastExchange runs, the verify join is a shuffled hash join
+    whose gram side reaches that corpus exchange with no exchange in
+    between, and writing the result launches one job."""
+    from mandoline_spark.functions import dedup
+
+    jsc = spark.sparkContext._jsc.sc()
+    docs = spark.read.parquet(f"{SF}/documents.parquet")  # schema job
+    df = getattr(dedup, fn_name)(docs, threshold=0.8)
+    plan = df._jdf.queryExecution().executedPlan()
+    nodes = list(_nodes(plan))
+    names = [n.nodeName() for n in nodes]
+    assert "BroadcastExchange" not in names, plan.toString()
+    corpus = {
+        n.toString()
+        for n in nodes
+        if n.nodeName() == "Exchange" and _is_corpus_exchange(n)
+    }
+    assert len(corpus) == 1, plan.toString()
+    assert "hashpartitioning(doc_id#" in corpus.pop(), plan.toString()
+    joins = [n for n in nodes if n.nodeName() == "ShuffledHashJoin"]
+    assert len(joins) == 1, plan.toString()
+    assert any(
+        _is_corpus_exchange(e) for e in _first_exchanges(joins[0])
+    ), plan.toString()
+
+    ids0 = set(jsc.statusTracker().getJobIdsForGroup(None))
+    df.write.parquet(str(tmp_path / "out"))
+    jobs = len(set(jsc.statusTracker().getJobIdsForGroup(None)) - ids0)
+    assert jobs == 1, f"{fn_name}: writing the pairs launched {jobs} jobs"
 
 
 def test_array_read_prunes_index(store):
@@ -758,7 +828,7 @@ def test_constant_job_counts(spark):
     q60 pays the sketch-side broadcast build + the count-pass action."""
     budgets = {
         "q37_ngram_jaccard": 2,  # size-broadcast build + action
-        "q36_minhash_neardup": 2,  # verify-candidate broadcast + action
+        "q36_minhash_neardup": 1,  # action (shuffled-hash verify join)
         # r9 job-kills: footer-stats bounds/counts replaced per-action
         # broadcast subtrees, and the osort gather gate removed the
         # range-sampling job at fixture scale

@@ -57,8 +57,7 @@ def main() -> None:
 
     def full():
         return D.minhash_lsh_pairs(
-            d, threshold=T, n=3, k=K, bands=BANDS, max_bucket=MB,
-            verify_broadcast=True,
+            d, threshold=T, n=3, k=K, bands=BANDS, max_bucket=MB
         )
 
     stages = (

@@ -1,8 +1,9 @@
 #!/usr/bin/env python
 """q36 verify-shape A/B (r16): the r9-r15 broadcast verify recomputed
 the gram expression per candidate MEMBER ROW off the raw scan; the
-r16 shape streams the one-pass gram pipeline (dgh) past the same
-candidate broadcast.  Alternates both shapes in one session at a
+r16 shape streams the one-pass gram pipeline (dgh) past the candidate
+member rows (today through the shuffled hash join of
+``dedup._verify_jaccard``).  Alternates both shapes in one session at a
 given sf dir, asserts result equality once, reports best/median.
 The old shape is inlined verbatim from the pre-change code.
 
@@ -42,8 +43,7 @@ def main() -> None:
 
     def new_shape():
         return D.minhash_lsh_pairs(
-            d, threshold=T, n=N, k=K, bands=BANDS, max_bucket=MB,
-            verify_broadcast=True,
+            d, threshold=T, n=N, k=K, bands=BANDS, max_bucket=MB
         )
 
     def _ghashes_col_old(text_col: str, n: int) -> Column:
