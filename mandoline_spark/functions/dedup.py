@@ -6,10 +6,9 @@ Scale shapes:
 - exact: groupBy(md5) — one shuffle of (hash, id).
 - n-gram Jaccard: inverted index on shingle hashes.  By default each
   doc posts only its threshold prefix of sorted hashes (prefix
-  filtering), and the candidate pairs are verified on the id-partitioned
-  gram pass, which the verify join reuses; `max_df` instead posts every
-  gram and drops stop-shingles so hot keys can't explode the join (the
-  classic skew guard).
+  filtering) and candidates are verified exactly; `max_df` instead
+  posts every gram and drops stop-shingles so hot keys can't explode
+  the join (the classic skew guard).
 - MinHash-LSH: the k-permutation signature is computed per document in a
   SINGLE projection over the gram array (one `aggregate` pass carrying k
   running minima) — no explode, no shuffle, nothing leaves the input
@@ -95,6 +94,26 @@ def doc_grams(
     )
 
 
+def _doc_words(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """(id, _words): the corpus hash-partitioned by id and split into
+    words in place (see :func:`doc_gram_hashes`)."""
+    return df.repartition(F.col(id_col)).select(
+        F.col(id_col).alias("id"),
+        F.split(F.col(text_col), r"\s+").alias("_words"),
+    )
+
+
+def _gram_hash_col(n: int) -> Column:
+    """The distinct gram-hash set of the ``_words`` column."""
+    gets = ", ".join(f"get(_words, i + {j})" for j in range(n))
+    return F.expr(
+        f"array_distinct(transform(filter("
+        f"transform(sequence(0, greatest(size(_words) - {n}, 0)),"
+        f" i -> concat_ws(' ', {gets})),"
+        f" g -> length(g) > 0), g -> xxhash64(g)))"
+    )
+
+
 def doc_gram_hashes(
     df: DataFrame,
     text_col: str = "text",
@@ -109,32 +128,20 @@ def doc_gram_hashes(
     intersections downstream compare longs.  Hash collisions merge two
     grams — the same d²/2^65 bound documented on ngram_jaccard_pairs.
 
-    The corpus is hash-partitioned by id (one exchange of the raw
-    text, like :func:`doc_grams`' rebalance, into the session's
-    shuffle partitions — the core count — and balanced because ids are
-    unique): the per-doc work is CPU-bound, and a join on ``id``
-    downstream (:func:`_verify_jaccard`) reuses this partitioning, so
-    the gram arrays never cross a second exchange.
+    The corpus is hash-partitioned by id (one exchange of the raw text,
+    balanced because ids are unique) into the session's shuffle
+    partitions: like :func:`doc_grams`' rebalance it spreads the
+    CPU-bound per-doc work (``get_spark`` sets those partitions to the
+    core count; bench.py sizes them down to 8 for its small scale),
+    and every later exchange on id uses the same count, so a join on
+    id (:func:`_verify_jaccard` reuses this exchange) shuffles only
+    its other side.
     The two-step select is load-bearing: the split result materializes
     in its own Project, and the sig UDF downstream consumes a plain
     attribute (a fused single expression collapses into the pandas
     UDF's argument and trips ExtractPythonUDFs' codegen)."""
-    gets = ", ".join(f"get(_words, i + {j})" for j in range(n))
-    return (
-        df.repartition(F.col(id_col))
-        .select(
-            F.col(id_col).alias("id"),
-            F.split(F.col(text_col), r"\s+").alias("_words"),
-        )
-        .select(
-            "id",
-            F.expr(
-                f"array_distinct(transform(filter("
-                f"transform(sequence(0, greatest(size(_words) - {n}, 0)),"
-                f" i -> concat_ws(' ', {gets})),"
-                f" g -> length(g) > 0), g -> xxhash64(g)))"
-            ).alias("ghashes"),
-        )
+    return _doc_words(df, text_col, id_col).select(
+        "id", _gram_hash_col(n).alias("ghashes")
     )
 
 
@@ -177,16 +184,14 @@ def ngram_jaccard_pairs(
     ('np.float64(0.5)') would not parse (ADVICE r8).
 
     Default path (``max_df=None``): prefix filtering (Bayardo, Ma &
-    Srikant, WWW 2007; run in parallel as in Vernica, Carey & Li,
-    SIGMOD 2010).  Under one total order of the gram hashes, two sets
-    with J ≥ t share a gram among the first ``|x| - ceil(t·|x|) + 1``
-    of each, so every document posts only its
-    ``size - floor(t·size) + 1`` smallest hashes (``floor``: float
-    rounding can only lengthen the prefix).  The posting lists emit the
-    distinct candidate pairs and :func:`_verify_jaccard` computes the
-    exact Jaccard of the hashed sets, so the pair set and ``jac`` are
-    those of the full inverted index — at t = 0.8 about a fifth of the
-    posting rows cross the exchange.
+    Srikant, WWW 2007; in parallel as in Vernica, Carey & Li, SIGMOD
+    2010).  Under one total order of the gram hashes, two sets with
+    J ≥ t share a gram among the first ``|x| - ceil(t·|x|) + 1`` of
+    each, so every doc posts only its ``size - floor(t·size) + 1``
+    smallest hashes (``floor``: float rounding can only lengthen the
+    prefix), and :func:`_verify_jaccard` computes the candidates' exact
+    Jaccard: the pairs and ``jac`` of the full inverted index, with
+    about a fifth of its posting rows at t = 0.8.
 
     ``max_df`` (drop shingles occurring in more than max_df docs)
     bounds join fan-out at scale without affecting high-similarity
@@ -237,8 +242,9 @@ def ngram_jaccard_pairs(
                 )
             ).alias("gram"),
         ).where(F.col("gram").isNotNull())
-        cand = _posting_pairs(prefix, ["gram"], []).distinct()
-        out = _verify_jaccard(cand, dgh, threshold, round_to)
+        cand = _posting_pairs(prefix, ["gram"], [])
+        words = _doc_words(df, text_col, id_col)
+        out = _verify_jaccard(cand, words, n, threshold, round_to)
     else:
         # A gram's per-bucket row count IS its document frequency (one
         # distinct row per (id, gram)), so the stop-shingle drop is a
@@ -698,46 +704,42 @@ def _jaccard_rows(
 
 
 def _verify_jaccard(
-    cand: DataFrame,
-    dgh: DataFrame,
-    threshold: float,
-    round_to: int | None,
+    cand: DataFrame, words: DataFrame, n: int, threshold: float, round_to: int | None
 ) -> DataFrame:
-    """Exact Jaccard of candidate pairs (a, b) on the gram-hash sets of
-    ``dgh`` (:func:`doc_gram_hashes`): (a, b, jac) at jac ≥ threshold,
-    cost O(candidates), never O(corpus²).
+    """Exact Jaccard of candidate pairs (a, b), repeats allowed, on the
+    gram-hash sets of the corpus ``words`` (:func:`_doc_words`): (a, b,
+    jac) at jac ≥ threshold, cost O(candidates), never O(corpus²).
 
-    Both docs' sets come from ONE pass over dgh: each pair explodes
-    into its two member rows, which join dgh once and fold back per
-    pair — two plain joins of dgh would run the gram pipeline once per
-    join branch.  The join is a shuffled hash join built on the member
-    rows (a hint: their size is unknown at plan time, and a broadcast
-    would cost its own job).  The member rows are hash-partitioned by
-    id to meet dgh's own id partitioning, so the corpus's gram arrays
-    stream through the probe side with no exchange and cross one only
-    in the fold-back, for candidate docs alone."""
-    members = cand.select("a", "b", F.explode(F.array("a", "b")).alias("id"))
-    paired = (
-        dgh.join(members.hint("shuffle_hash"), "id")
-        .groupBy("a", "b")
-        .agg(
-            F.first(
-                F.when(F.col("id") == F.col("a"), F.col("ghashes")),
-                ignorenulls=True,
-            ).alias("_ga"),
-            F.first(
-                F.when(F.col("id") == F.col("b"), F.col("ghashes")),
-                ignorenulls=True,
-            ).alias("_gb"),
-        )
+    Each candidate doc gathers its distinct pairs into one row, which a
+    sort-merge join (hinted: the candidate side's size is unknown at
+    plan time, a broadcast costs a job, and a hash join's build cannot
+    spill when candidates near corpus scale) meets with its text on
+    the reused id-partitioned corpus exchange.  Its gram set is built
+    there ONCE, for all its pairs, which fold back per pair: gram
+    arrays cross only that O(candidates) exchange, and a non-candidate
+    doc's grams are never built here."""
+    need = (
+        cand.select("a", "b", F.explode(F.array("a", "b")).alias("id"))
+        .groupBy("id")
+        .agg(F.collect_set(F.struct("a", "b")).alias("_pairs"))
     )
+    paired = (
+        words.join(need.hint("merge"), "id")
+        # grams in their own Project: beside the explode they would be
+        # built once per pair
+        .select("_pairs", _gram_hash_col(n).alias("ghashes"))
+        .select("ghashes", F.explode("_pairs").alias("_p"))
+        .groupBy("_p.a", "_p.b")
+        .agg(F.collect_list("ghashes").alias("_g"))
+    )
+    # the formula is symmetric, so the two sets' order does not matter
     return _jaccard_rows(
         paired.selectExpr(
             "a",
             "b",
-            "size(array_intersect(_ga, _gb)) AS common",
-            "size(_ga) AS na",
-            "size(_gb) AS nb",
+            "size(array_intersect(_g[0], _g[1])) AS common",
+            "size(_g[0]) AS na",
+            "size(_g[1]) AS nb",
         ),
         threshold,
         round_to,
@@ -776,16 +778,14 @@ def minhash_lsh_pairs(
     100 TB call sites pass an explicit cap sized to their executor
     memory (the declared q36 passes 10_000).
 
-    Verification (:func:`_verify_jaccard`) joins the candidate member
-    rows to the ONE-pass gram pipeline (``dgh``) rather than recomputing
-    the gram expression per member row (r16).  The r9–r15 shape did the
-    latter, sized for candidates ≪ corpus — but candidate count grows
-    with the corpus's dup structure, not its size: at sf1 the banding
-    emits 5 pairs per DOC (251k pairs / 50k docs), so per-member
-    recompute ran the split/shingle/hash work ~10x over the corpus pass
-    and verification was 19 s of q36's 21 s (PROBE_Q36_SF1_r16.json).
-    One corpus gram pass is at most 2x optimal at ANY dup rate (the
-    signature side already pays one), never pathological."""
+    Verification (:func:`_verify_jaccard`) builds each candidate DOC's
+    gram set once for all its pairs, not once per member row (the
+    r9–r15 shape, sized for candidates ≪ corpus — but candidate count
+    grows with the corpus's dup structure, not its size: at sf1 the
+    banding emits 5 pairs per DOC (251k pairs / 50k docs), and that
+    per-member recompute was 19 s of q36's 21 s,
+    PROBE_Q36_SF1_r16.json).  The gram work is at most 2x optimal at
+    ANY dup rate (the signature pass, then candidate docs again)."""
     # Hash-level gram sets end-to-end (see doc_gram_hashes): the
     # signature kernel consumes the hashes directly, and verification
     # intersects long arrays instead of gram strings — the string set
@@ -795,10 +795,9 @@ def minhash_lsh_pairs(
         "id", _minhash_kernel(k, seed)(F.col("ghashes")).alias("sig")
     )
     banded = _banded(sig, k, bands)
-    cand = _posting_pairs(
-        banded, ["band_id", "band_hash"], [], max_bucket
-    ).distinct()
-    out = _verify_jaccard(cand, dgh, threshold, round_to)
+    cand = _posting_pairs(banded, ["band_id", "band_hash"], [], max_bucket)
+    words = _doc_words(df, text_col, id_col)
+    out = _verify_jaccard(cand, words, n, threshold, round_to)
     # same ordered contract as ngram_jaccard_pairs: threshold-bounded
     # presentation output gathers + sorts in one partition instead of
     # paying a range-sampler job per action

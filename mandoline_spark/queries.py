@@ -2512,7 +2512,7 @@ def q82(spark, sf):
     (ngram_jaccard_pairs), matching the oracle's pair set with recall 1
     at every sf: it posts only each doc's threshold prefix of sorted
     gram hashes (prefix filtering — exact, not a heuristic) and
-    verifies the candidates on the id-partitioned gram pass.  The r3
+    verifies the candidates' Jaccard exactly.  The r3
     declared form fed minhash-LSH pairs instead
     (per-pair recall ~0.9998 at 16x4 — not 1), and one near-threshold
     pair missing every band would split a cluster and diverge the whole
@@ -2549,8 +2549,8 @@ def q83(spark, sf):
     id) — the operation a 100 TB training-data pipeline runs to drop
     duplicate documents while keeping the best copy.  Exact-Jaccard
     pair emitter for the declared form, prefix-filtered and verified
-    on the gram pass (see q82's recall note); minhash-LSH is the
-    drop-in at-scale alternative."""
+    exactly (see q82's recall note); minhash-LSH is the drop-in
+    at-scale alternative."""
     from .functions.dedup import ngram_jaccard_pairs
     from .operators.graph import dedup_clusters
 

@@ -995,15 +995,14 @@ class Connection:
         """hash → chunk blob fetched on the driver, or None when the
         read should take the Spark path.
 
-        Without ``cache_reads``: an eligible local chunk table
-        (:meth:`_local_chunk_files`, or ``files`` when the caller
-        already asked for them) is read job-free and the values are
-        zero-copy Arrow buffers; anything else returns None.  With
-        ``cache_reads``: read-through the blob LRU (``bytes``) — hits
-        cost nothing, misses are fetched locally when eligible and
-        otherwise in one filtered Spark job."""
+        Without ``cache_reads``: ``files`` is the caller's one
+        :meth:`_local_chunk_files` answer — an eligible local chunk
+        table is read job-free and the values are zero-copy Arrow
+        buffers; None returns None.  With ``cache_reads`` (``files``
+        unused): read-through the blob LRU (``bytes``) — hits cost
+        nothing, misses are fetched locally when eligible and otherwise
+        in one filtered Spark job."""
         if not self.cache_reads:
-            files = files if files is not None else self._local_chunk_files()
             if files is None:
                 return None
             return self._local_blobs(files, hashes, copy=False)

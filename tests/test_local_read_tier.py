@@ -200,7 +200,7 @@ def test_blob_fetch_reads_blob_column_only_where_hashes_match(
     blob_files = {f for f, cols in reads if "blob" in cols}
     assert blob_files and blob_files <= holders, reads
 
-    value = conn.blobs_for([want])[want]
+    value = conn.blobs_for([want], conn._local_chunk_files())[want]
     assert isinstance(value, bytes if cache_reads else pa.Buffer)
     if cache_reads:
         assert isinstance(conn._blob_lru[want], bytes)

@@ -50,24 +50,63 @@ def test_hash_agg_is_partial(spark):
     assert "partial_sum" in text and "partial_count" in text
 
 
-def _only_rebalance_exchanges(text: str) -> bool:
-    """True when every Exchange in the plan is a deliberate per-doc
-    rebalance — doc_grams' round-robin, or doc_gram_hashes' partitioning
-    by the unique document id (CPU-parallelism for per-doc work) — and
-    none is a hash/range shuffle keyed on data."""
-    low = text.lower()
-    keys = set(re.findall(r"hashpartitioning\((\w+)#", low))
-    return keys <= {"doc_id"} and "rangepartitioning" not in low
+def _children(node) -> list:
+    """A physical plan node's children; a ReusedExchange stands for the
+    exchange it reuses."""
+    if node.nodeName() == "ReusedExchange":
+        return [node.child()]
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _nodes(node):
+    yield node
+    for c in _children(node):
+        yield from _nodes(c)
+
+
+def _first_exchanges(node) -> list:
+    """The exchanges reached from ``node`` without crossing another."""
+    if node.nodeName() in ("Exchange", "ReusedExchange"):
+        return [node]
+    return [e for c in _children(node) for e in _first_exchanges(c)]
+
+
+def _is_corpus_exchange(node) -> bool:
+    """An exchange fed straight by the corpus scan (no exchange below)."""
+    return node.nodeName() in ("Exchange", "ReusedExchange") and not any(
+        _first_exchanges(c) for c in _children(node)
+    )
+
+
+def _only_rebalance_exchanges(df) -> bool:
+    """True when the plan's one Exchange is the deliberate per-doc
+    rebalance fed straight by the corpus scan — doc_grams' round-robin
+    or doc_gram_hashes' partitioning by the unique document id
+    (CPU-parallelism for per-doc work) — and no other exchange runs."""
+    plan = df._jdf.queryExecution().executedPlan()
+    exchanges = [
+        n
+        for n in _nodes(plan)
+        if n.nodeName() in ("Exchange", "ReusedExchange")
+    ]
+    if len(exchanges) != 1 or not _is_corpus_exchange(exchanges[0]):
+        return False
+    part = exchanges[0].outputPartitioning().toString()
+    return bool(
+        re.fullmatch(r"roundrobinpartitioning\(\d+\)", part.lower())
+        or re.fullmatch(r"hashpartitioning\(doc_id#\d+L?, \d+\)", part)
+    )
 
 
 def test_minhash_signatures_have_no_key_shuffle(spark):
     from mandoline_spark.functions.dedup import minhash_signatures
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    text = explain_str(minhash_signatures(docs))
-    assert _only_rebalance_exchanges(text), (
+    df = minhash_signatures(docs)
+    assert _only_rebalance_exchanges(df), (
         "signature stage must not shuffle on a key (only the per-doc "
-        "rebalance is allowed):\n" + text
+        "rebalance is allowed):\n" + explain_str(df)
     )
 
 
@@ -75,8 +114,8 @@ def test_simhash_has_no_key_shuffle(spark):
     from mandoline_spark.functions.dedup import simhash
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    text = explain_str(simhash(docs))
-    assert _only_rebalance_exchanges(text), text
+    df = simhash(docs)
+    assert _only_rebalance_exchanges(df), explain_str(df)
 
 
 def _optimized_plan(df) -> str:
@@ -175,72 +214,75 @@ def test_bucket_caps_filter_before_collect(spark):
     assert plan2.count("hashpartitioning(band") == 1, plan2
 
 
-def _children(node) -> list:
-    """A physical plan node's children; a ReusedExchange stands for the
-    exchange it reuses."""
-    if node.nodeName() == "ReusedExchange":
-        return [node.child()]
-    kids = node.children()
-    return [kids.apply(i) for i in range(kids.size())]
-
-
-def _nodes(node):
-    yield node
+def _below(node) -> list:
+    """The nodes under ``node`` reached without crossing an exchange."""
+    out = []
     for c in _children(node):
-        yield from _nodes(c)
+        if c.nodeName() not in ("Exchange", "ReusedExchange"):
+            out += [c, *_below(c)]
+    return out
 
 
-def _first_exchanges(node) -> list:
-    """The exchanges reached from ``node`` without crossing another."""
-    if node.nodeName() in ("Exchange", "ReusedExchange"):
-        return [node]
-    return [e for c in _children(node) for e in _first_exchanges(c)]
-
-
-def _is_corpus_exchange(node) -> bool:
-    """An exchange fed straight by the corpus scan (no exchange below)."""
-    return node.nodeName() in ("Exchange", "ReusedExchange") and not any(
-        _first_exchanges(c) for c in _children(node)
-    )
-
-
+# the session's shuffle partitions (= cores, 8 in the test session),
+# fewer (bench.py runs 8 on local[32]) and more (Spark's default 200
+# on a small host): the gram pass follows them
+@pytest.mark.parametrize("shuffle_parts", [None, "3", "16"])
 @pytest.mark.parametrize("fn_name", ["ngram_jaccard_pairs", "minhash_lsh_pairs"])
 def test_exact_jaccard_verify_reuses_the_gram_pass_partitioning(
-    spark, tmp_path, fn_name
+    spark, tmp_path, fn_name, shuffle_parts
 ):
     """The default exact-Jaccard emitters (prefix-filtered n-gram
     Jaccard, MinHash-LSH) verify their candidates on the id-partitioned
-    gram pass: the raw corpus crosses ONE exchange (hash-partitioned by
-    the doc id; its other consumer plans as a ReusedExchange), no
-    BroadcastExchange runs, the verify join is a shuffled hash join
-    whose gram side reaches that corpus exchange with no exchange in
-    between, and writing the result launches one job."""
+    corpus: the raw corpus crosses ONE exchange, hash-partitioned by
+    the doc id into the shuffle partitions (its other consumer plans
+    as a ReusedExchange), no BroadcastExchange runs, the verify join is
+    a sort-merge join whose corpus side reaches that exchange with no
+    exchange in between and builds no grams below the join (they are
+    built after it, for candidate docs only), and writing the result
+    launches one job."""
     from mandoline_spark.functions import dedup
 
     jsc = spark.sparkContext._jsc.sc()
-    docs = spark.read.parquet(f"{SF}/documents.parquet")  # schema job
-    df = getattr(dedup, fn_name)(docs, threshold=0.8)
-    plan = df._jdf.queryExecution().executedPlan()
-    nodes = list(_nodes(plan))
-    names = [n.nodeName() for n in nodes]
-    assert "BroadcastExchange" not in names, plan.toString()
-    corpus = {
-        n.toString()
-        for n in nodes
-        if n.nodeName() == "Exchange" and _is_corpus_exchange(n)
-    }
-    assert len(corpus) == 1, plan.toString()
-    assert "hashpartitioning(doc_id#" in corpus.pop(), plan.toString()
-    joins = [n for n in nodes if n.nodeName() == "ShuffledHashJoin"]
-    assert len(joins) == 1, plan.toString()
-    assert any(
-        _is_corpus_exchange(e) for e in _first_exchanges(joins[0])
-    ), plan.toString()
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    try:
+        if shuffle_parts is not None:
+            spark.conf.set(key, shuffle_parts)
+        docs = spark.read.parquet(f"{SF}/documents.parquet")  # schema job
+        df = getattr(dedup, fn_name)(docs, threshold=0.8)
+        plan = df._jdf.queryExecution().executedPlan()
+        text = plan.toString()
+        nodes = list(_nodes(plan))
+        assert "BroadcastExchange" not in [n.nodeName() for n in nodes], text
+        corpus = {
+            n.toString(): n
+            for n in nodes
+            if n.nodeName() == "Exchange" and _is_corpus_exchange(n)
+        }
+        assert len(corpus) == 1, text
+        (ex,) = corpus.values()
+        parts = int(spark.conf.get(key))
+        assert ex.outputPartitioning().toString().startswith(
+            "hashpartitioning(doc_id#"
+        ) and ex.outputPartitioning().numPartitions() == parts, text
+        joins = [n for n in nodes if n.nodeName() == "SortMergeJoin"]
+        assert len(joins) == 1, text
+        sides = [
+            c
+            for c in _children(joins[0])
+            if any(_is_corpus_exchange(e) for e in _first_exchanges(c))
+        ]
+        assert len(sides) == 1, text
+        assert not any(
+            "xxhash64(" in n.toString() for n in [sides[0], *_below(sides[0])]
+        ), text
 
-    ids0 = set(jsc.statusTracker().getJobIdsForGroup(None))
-    df.write.parquet(str(tmp_path / "out"))
-    jobs = len(set(jsc.statusTracker().getJobIdsForGroup(None)) - ids0)
-    assert jobs == 1, f"{fn_name}: writing the pairs launched {jobs} jobs"
+        ids0 = set(jsc.statusTracker().getJobIdsForGroup(None))
+        df.write.parquet(str(tmp_path / "out"))
+        jobs = len(set(jsc.statusTracker().getJobIdsForGroup(None)) - ids0)
+        assert jobs == 1, f"{fn_name}: writing the pairs launched {jobs} jobs"
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_array_read_prunes_index(store):
