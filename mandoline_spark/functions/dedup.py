@@ -57,40 +57,16 @@ def gram_array(words: str, n: int = 3) -> Column:
     call/lambda), paid at every plan construction; a single ``expr``
     parse is one round-trip for the identical Catalyst tree.
     """
+    return F.expr(f"array_distinct({_grams_sql(words, n)})")
+
+
+def _grams_sql(words: str, n: int) -> str:
+    """The word n-grams of ``words`` as SQL, repeats kept: the one
+    builder behind :func:`gram_array` and :func:`_gram_hash_col`."""
     gets = ", ".join(f"get({words}, i + {j})" for j in range(n))
-    return F.expr(
-        f"array_distinct(filter("
-        f"transform(sequence(0, greatest(size({words}) - {n}, 0)),"
-        f" i -> concat_ws(' ', {gets})),"
-        f" g -> length(g) > 0))"
-    )
-
-
-def doc_grams(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-) -> DataFrame:
-    """One row per document: (id, grams array) — the corpus stays one
-    row per doc; nothing is exploded.  Two projections: the split is
-    materialized first so the gram lambda reads an attribute (see
-    :func:`gram_array`); Catalyst keeps non-cheap multi-referenced
-    aliases un-collapsed.
-
-    The input is repartitioned to the cluster's core count first: gram
-    construction and everything downstream of it (signatures, simhash)
-    is CPU-bound per document, and a corpus that arrives as a handful of
-    parquet files would otherwise pin that work to a handful of tasks
-    (measured 4x on a 32-core local run of a one-file corpus).  One
-    exchange of the raw text, amortized over every per-doc pass."""
-    sc = df.sparkSession.sparkContext
-    with_words = df.repartition(sc.defaultParallelism).select(
-        F.col(id_col).alias("id"),
-        F.split(F.col(text_col), r"\s+").alias("_words"),
-    )
-    return with_words.select(
-        "id", gram_array("_words", n).alias("grams")
+    return (
+        f"filter(transform(sequence(0, greatest(size({words}) - {n}, 0)),"
+        f" i -> concat_ws(' ', {gets})), g -> length(g) > 0)"
     )
 
 
@@ -104,13 +80,11 @@ def _doc_words(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 
 
 def _gram_hash_col(n: int) -> Column:
-    """The distinct gram-hash set of the ``_words`` column."""
-    gets = ", ".join(f"get(_words, i + {j})" for j in range(n))
+    """The distinct gram-hash set of the ``_words`` column: the grams
+    of :func:`gram_array`, hashed before the distinct."""
     return F.expr(
-        f"array_distinct(transform(filter("
-        f"transform(sequence(0, greatest(size(_words) - {n}, 0)),"
-        f" i -> concat_ws(' ', {gets})),"
-        f" g -> length(g) > 0), g -> xxhash64(g)))"
+        f"array_distinct(transform({_grams_sql('_words', n)},"
+        f" g -> xxhash64(g)))"
     )
 
 
@@ -130,40 +104,18 @@ def doc_gram_hashes(
 
     The corpus is hash-partitioned by id (one exchange of the raw text,
     balanced because ids are unique) into the session's shuffle
-    partitions: like :func:`doc_grams`' rebalance it spreads the
-    CPU-bound per-doc work (``get_spark`` sets those partitions to the
-    core count; bench.py sizes them down to 8 for its small scale),
-    and every later exchange on id uses the same count, so a join on
-    id (:func:`_verify_jaccard` reuses this exchange) shuffles only
-    its other side.
+    partitions: it spreads the CPU-bound per-doc work over that many
+    tasks however few files the corpus arrives in (``get_spark`` sets
+    those partitions to the core count; bench.py sizes them down to 8
+    for its small scale), and every later exchange on id uses the same
+    count, so a join on id (:func:`_verify_jaccard` reuses this
+    exchange) shuffles only its other side.
     The two-step select is load-bearing: the split result materializes
     in its own Project, and the sig UDF downstream consumes a plain
     attribute (a fused single expression collapses into the pandas
     UDF's argument and trips ExtractPythonUDFs' codegen)."""
     return _doc_words(df, text_col, id_col).select(
         "id", _gram_hash_col(n).alias("ghashes")
-    )
-
-
-def shingles(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-) -> DataFrame:
-    """Distinct (id, gram) rows — the exploded/inverted-index view, used
-    where the gram itself is the join key.
-
-    explode_outer, not explode: InferFiltersFromGenerate turns a plain
-    explode into a ``size(grams) > 0`` filter pushed below the project,
-    re-inlining the whole gram expression (split and all) into a
-    per-input-row re-evaluation — measured ~7x slower.  The outer
-    variant infers nothing; empty-array docs yield one NULL gram row,
-    dropped here."""
-    return (
-        doc_grams(df, text_col, id_col, n)
-        .select("id", F.explode_outer("grams").alias("gram"))
-        .where(F.col("gram").isNotNull())
     )
 
 
@@ -176,7 +128,6 @@ def ngram_jaccard_pairs(
     max_df: int | None = None,
     round_to: int | None = 6,
     ordered: bool = True,
-    sizes_broadcast: bool = False,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs (a < b, jac ≥ threshold).
     ``threshold`` is coerced to a plain Python float before SQL
@@ -197,22 +148,18 @@ def ngram_jaccard_pairs(
     bounds join fan-out at scale without affecting high-similarity
     pairs; that path posts EVERY gram, since document frequency is a
     count over all posting rows, and sizes are the post-drop ones.
-
-    ``sizes_broadcast`` (max_df path only) broadcasts the per-doc
-    post-drop set sizes — ~16 bytes per DOCUMENT on the driver, so it
-    is safe whenever the corpus's doc count fits a broadcast (the
-    declared q37 passes True); the default keeps the two size
-    attachments as shuffle joins, the shape that holds when even
-    |docs| rows are too many to broadcast.  On the broadcast path
-    (r16) the sizes attach BELOW the posting collection instead of
-    onto the pair stream: each posting entry carries its doc's
-    post-drop size, which (a) lets the pair emitter drop size-band-
-    impossible pairs before they ever reach the pair exchange —
-    ``jac <= min(na,nb)/max(na,nb)``, so a pair with
+    The per-doc sizes attach BELOW the posting collection, through one
+    join on id that the planner broadcasts while their size estimate
+    fits ``spark.sql.autoBroadcastJoinThreshold`` (0.40 MB for the
+    sf0.1 corpus, 4.06 MB for sf1) and sort-merges above it, or when
+    the input has no size estimate.  Each posting entry then carries
+    its doc's post-drop size, which (a) lets the pair emitter drop
+    size-band-impossible pairs before they ever reach the pair
+    exchange — ``jac <= min(na,nb)/max(na,nb)``, so a pair with
     ``min < t*max - 1`` provably fails the threshold (the -1 integer
-    slack keeps exact-boundary pairs; guide §2.3 "shuffle fewer
-    bytes") — and (b) removes both post-pair size joins, since na/nb
-    ride the pair rows as functionally-dependent grouping keys.
+    slack keeps exact-boundary pairs) — and (b) leaves no join on the
+    pair stream, since na/nb ride the pair rows as
+    functionally-dependent grouping keys.
 
     The posting shuffle is keyed on the 64-bit xxhash of each shingle,
     not the shingle string — 8 bytes per key instead of ~3 words of
@@ -278,78 +225,37 @@ def ngram_jaccard_pairs(
         # and lets the pair side emit the upper triangle only — at
         # sf0.1 the swap measured 1.45s -> 0.9s end-to-end.
         sizes = surv.groupBy("id").agg(F.expr("count(*) AS _sz"))
-        if sizes_broadcast:
-            # r16 fused shape (guide §2.3): sizes broadcast onto the
-            # surviving exploded rows BELOW the posting collection, so
-            # every posting entry carries (id, _sz).  The pair emitter
-            # then (a) prunes size-band-impossible pairs in the same
-            # pass that builds them — jac <= min/max, so
-            # min*1.0 < t*max - 1 cannot reach the threshold (integer
-            # slack 1 keeps exact-boundary pairs; sizes are ints, so a
-            # dropped pair has jac <= min/max < t - 1/max < t) — before
-            # the pair exchange, and (b) carries na/nb through the pair
-            # aggregation as functionally-dependent grouping keys,
-            # removing both post-pair size joins (and their broadcast
-            # build job) from the plan.
-            surv = surv.join(F.broadcast(sizes), "id")
-            # min_size=2 applies to the PAIR side only (singleton
-            # grams emit no pairs but DO count toward their doc's set
-            # size — the sizes recount above runs before the length
-            # filter).
-            posts = (
-                surv.groupBy("gram")
-                .agg(
-                    F.expr(
-                        "sort_array(collect_list(struct(id, _sz))) AS _ids"
-                    )
-                )
-                .where("size(_ids) >= 2")
+        # Sizes ride the posting entries (see the docstring); the
+        # emitter's prune min*1.0 < t*max - 1 is exact because sizes
+        # are ints: a dropped pair has jac <= min/max < t - 1/max < t.
+        surv = surv.join(sizes, "id")
+        # min_size=2 applies to the PAIR side only (singleton grams
+        # emit no pairs but DO count toward their doc's set size — the
+        # sizes recount above runs before the length filter).
+        posts = (
+            surv.groupBy("gram")
+            .agg(F.expr("sort_array(collect_list(struct(id, _sz))) AS _ids"))
+            .where("size(_ids) >= 2")
+        )
+        # Upper-triangle emission off the sorted lists (sort_array
+        # ⇒ a < b canonically); incremental O(L) tail slices as in
+        # _pairs_from_posts, single-expr construction (each nested
+        # pyspark call is a py4j round-trip; one SQL parse is one).
+        common = (
+            posts.select("_ids", F.posexplode("_ids").alias("_i", "_x"))
+            .selectExpr(
+                "explode_outer(transform(filter("
+                " slice(_ids, _i + 2, greatest(size(_ids) - _i - 1, 0)),"
+                f" y -> least(_x._sz, y._sz) * 1.0D >="
+                f" {threshold!r} * greatest(_x._sz, y._sz) - 1.0D),"
+                " y -> named_struct('a', _x.id, 'b', y.id,"
+                " 'na', _x._sz, 'nb', y._sz))) AS _p"
             )
-            # Upper-triangle emission off the sorted lists (sort_array
-            # ⇒ a < b canonically); incremental O(L) tail slices as in
-            # _pairs_from_posts, single-expr construction (each nested
-            # pyspark call is a py4j round-trip; one SQL parse is one).
-            common = (
-                posts.select("_ids", F.posexplode("_ids").alias("_i", "_x"))
-                .selectExpr(
-                    "explode_outer(transform(filter("
-                    " slice(_ids, _i + 2, greatest(size(_ids) - _i - 1, 0)),"
-                    f" y -> least(_x._sz, y._sz) * 1.0D >="
-                    f" {threshold!r} * greatest(_x._sz, y._sz) - 1.0D),"
-                    " y -> named_struct('a', _x.id, 'b', y.id,"
-                    " 'na', _x._sz, 'nb', y._sz))) AS _p"
-                )
-                .where("_p IS NOT NULL")
-                .selectExpr(
-                    "_p.a AS a", "_p.b AS b", "_p.na AS na", "_p.nb AS nb"
-                )
-                .groupBy("a", "b", "na", "nb")
-                .agg(F.expr("count(*) AS common"))
-            )
-        else:
-            # shuffle-join shape: holds when even |docs| size rows are
-            # too many to broadcast (no emission-time prune there — the
-            # sizes aren't visible until the post-pair join)
-            posts = (
-                surv.groupBy("gram")
-                .agg(F.expr("sort_array(collect_list(struct(id))) AS _ids"))
-                .where("size(_ids) >= 2")
-            )
-            pairs = (
-                posts.select("_ids", F.posexplode("_ids").alias("_i", "_x"))
-                .selectExpr(
-                    "explode_outer(transform("
-                    " slice(_ids, _i + 2, greatest(size(_ids) - _i - 1, 0)),"
-                    " y -> named_struct('a', _x.id, 'b', y.id))) AS _p"
-                )
-                .where("_p IS NOT NULL")
-                .selectExpr("_p.a AS a", "_p.b AS b")
-                .groupBy("a", "b")
-                .agg(F.expr("count(*) AS common"))
-            )
-            sa = sizes.selectExpr("id AS a", "_sz AS na")
-            sb = sizes.selectExpr("id AS b", "_sz AS nb")
-            common = pairs.join(sa, "a").join(sb, "b")
+            .where("_p IS NOT NULL")
+            .selectExpr("_p.a AS a", "_p.b AS b", "_p.na AS na", "_p.nb AS nb")
+            .groupBy("a", "b", "na", "nb")
+            .agg(F.expr("count(*) AS common"))
+        )
         out = _jaccard_rows(common, threshold, round_to)
     # ``ordered=False`` skips the final sort entirely: consumers that
     # re-aggregate the pairs (connected components, cluster keep-best)
@@ -372,13 +278,6 @@ def _perm_params(k: int, seed: int) -> list[tuple[int, int]]:
     a = rng.integers(1, _PRIME, size=k, dtype=np.int64)
     b = rng.integers(0, _PRIME, size=k, dtype=np.int64)
     return list(zip(a.tolist(), b.tolist()))
-
-
-def _hashed_grams(grams: str) -> Column:
-    """xxhash64 each gram JVM-side (by column NAME, one expr parse —
-    see gram_array) — the only per-token work left on the
-    interpreted-expression path once the signature folds run in numpy."""
-    return F.expr(f"transform({grams}, g -> xxhash64(g))")
 
 
 def _minhash_kernel(k: int, seed: int):
@@ -512,12 +411,13 @@ def minhash_signatures(
     seed: int = 42,
 ) -> DataFrame:
     """k-permutation MinHash signature per document as columns
-    mh0..mh{k-1} — a single projection per doc, no shuffle.  The sig
-    array is materialized in its own Project (Catalyst keeps non-cheap
-    multi-referenced aliases un-collapsed), so the aggregate runs once."""
-    dg = doc_grams(df, text_col, id_col, n)
-    with_sig = dg.select(
-        "id", _minhash_kernel(k, seed)(_hashed_grams("grams")).alias("sig")
+    mh0..mh{k-1} — a single projection per doc over its gram-hash set
+    (:func:`doc_gram_hashes`), no key shuffle.  The sig array is
+    materialized in its own Project (Catalyst keeps non-cheap
+    multi-referenced aliases un-collapsed), so the kernel runs once."""
+    dgh = doc_gram_hashes(df, text_col, id_col, n)
+    with_sig = dgh.select(
+        "id", _minhash_kernel(k, seed)(F.col("ghashes")).alias("sig")
     )
     return with_sig.select(
         "id", *[F.element_at("sig", i + 1).alias(f"mh{i}") for i in range(k)]
@@ -723,6 +623,13 @@ def _verify_jaccard(
         .groupBy("id")
         .agg(F.collect_set(F.struct("a", "b")).alias("_pairs"))
     )
+    # the formula is symmetric, so the two sets' order does not matter.
+    # common/na/nb are the aggregate's result expressions, evaluated
+    # once per pair: a filter on them cannot be pushed beneath it, so
+    # the threshold test reads them instead of re-inlining the
+    # intersection (a projection above the aggregate would be
+    # substituted into the filter, and its intersection built again).
+    g = "collect_list(ghashes)"
     paired = (
         words.join(need.hint("merge"), "id")
         # grams in their own Project: beside the explode they would be
@@ -730,20 +637,13 @@ def _verify_jaccard(
         .select("_pairs", _gram_hash_col(n).alias("ghashes"))
         .select("ghashes", F.explode("_pairs").alias("_p"))
         .groupBy("_p.a", "_p.b")
-        .agg(F.collect_list("ghashes").alias("_g"))
+        .agg(
+            F.expr(f"size(array_intersect({g}[0], {g}[1])) AS common"),
+            F.expr(f"size({g}[0]) AS na"),
+            F.expr(f"size({g}[1]) AS nb"),
+        )
     )
-    # the formula is symmetric, so the two sets' order does not matter
-    return _jaccard_rows(
-        paired.selectExpr(
-            "a",
-            "b",
-            "size(array_intersect(_g[0], _g[1])) AS common",
-            "size(_g[0]) AS na",
-            "size(_g[1]) AS nb",
-        ),
-        threshold,
-        round_to,
-    )
+    return _jaccard_rows(paired, threshold, round_to)
 
 
 def minhash_lsh_pairs(
@@ -963,10 +863,8 @@ def band_key_array(
         raise ValueError(f"bands must divide k: k={k} bands={bands}")
     r = k // bands
     s1 = df.withColumn("_words", F.split(F.col(text_col), r"\s+"))
-    s2 = s1.withColumn("_grams", gram_array("_words", n))
-    s3 = s2.withColumn(
-        "_sig", _minhash_kernel(k, seed)(_hashed_grams("_grams"))
-    )
+    s2 = s1.withColumn("_ghashes", _gram_hash_col(n))
+    s3 = s2.withColumn("_sig", _minhash_kernel(k, seed)(F.col("_ghashes")))
     empty = F.get("_sig", 0) == F.lit(_PRIME).cast("long")
     keys = F.transform(
         F.sequence(F.lit(0), F.lit(bands - 1)),
@@ -974,4 +872,4 @@ def band_key_array(
             empty, F.xxhash64(F.lit(empty_salt), F.col(id_col), b)
         ).otherwise(F.xxhash64(b, F.slice("_sig", b * r + 1, r))),
     )
-    return s3.withColumn(out_col, keys).drop("_words", "_grams", "_sig")
+    return s3.withColumn(out_col, keys).drop("_words", "_ghashes", "_sig")

@@ -97,7 +97,6 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_to: int | None = 6,
-    vectorized: bool | None = None,
     pair_count_hint: int | None = None,
 ) -> DataFrame:
     """Exact cosine top-k of ``corpus`` rows for each ``queries`` row.
@@ -106,34 +105,21 @@ def cosine_topk(
     id.  Broadcast-join shape: O(|corpus|) work per query, no corpus
     shuffle except the final per-query top-k (tiny).
 
-    ``vectorized=True`` computes the per-pair cosine in a numpy-einsum
-    Arrow-batched pandas_udf instead of the JVM aggregate(zip_with())
-    fold.  The crossover is real and measured (BASELINE.md r13): HOFs
-    are CodegenFallback (interpreted per ELEMENT), so the vectorized
-    kernel won 27% on a 20k-vector corpus in a clean window — but the
-    Python-worker round trip costs a fixed ~0.4-0.5 s that DOMINATES
-    small pair counts (2k vectors x 5 queries regressed 0.26→0.68 s in
-    two full-bench windows).  Since r15 (VERDICT r14 #9) the gate is
-    AUTOMATIC when the caller supplies ``pair_count_hint`` (|queries| x
-    |corpus|, e.g. from parquet-footer catalog stats the way osort's
-    gate reads them): ``vectorized=None`` (default) picks the einsum
-    kernel iff the hint clears :data:`VEC_CROSSOVER_PAIRS`, so the sf1
-    win is the default without the sf0.1 regression.  No hint keeps
-    the JVM fold (the operator cannot see the pair count without
-    spending a job); an explicit True/False always wins.  Values are
-    bit-level-APPROXIMATE across the two paths, not identical:
-    einsum's summation order differs from the sequential fold, so a
-    sim can differ in the last ulps and a ``round_to``/rank decision
-    near a boundary can diverge (tests/test_similarity_ann.py pins
-    rank-set equality and <=1e-12 sim agreement on the fixture,
-    including the NULL/zero-norm rows, which yield 0.0 on both
-    paths)."""
-    if vectorized is None:
-        vectorized = (
-            pair_count_hint is not None
-            and pair_count_hint >= VEC_CROSSOVER_PAIRS
-        )
-    if vectorized:
+    ``pair_count_hint`` (|queries| x |corpus|, e.g. from parquet-footer
+    catalog stats the way osort's gate reads them) picks the per-pair
+    cosine kernel: at or above :data:`VEC_CROSSOVER_PAIRS` a
+    numpy-einsum Arrow-batched pandas_udf, otherwise (or with no hint:
+    the operator cannot see the pair count without spending a job) the
+    JVM aggregate(zip_with()) fold.  The crossover is measured
+    (BASELINE.md r13): HOFs are CodegenFallback (interpreted per
+    ELEMENT), so the einsum kernel won 27% on a 20k-vector corpus —
+    but the Python-worker round trip costs a fixed ~0.4-0.5 s that
+    DOMINATES small pair counts (2k vectors x 5 queries regressed
+    0.26→0.68 s in two full-bench windows).  Sims are bit-approximate
+    across the kernels (einsum's summation order differs from the
+    sequential fold), so a ``round_to``/rank decision near a boundary
+    can diverge; NULL/zero-norm rows yield 0.0 on both."""
+    if pair_count_hint is not None and pair_count_hint >= VEC_CROSSOVER_PAIRS:
         q = queries.select(
             F.col(id_col).alias("qid"),
             F.col(vec_col).alias("_qemb"),
@@ -184,8 +170,6 @@ def cosine_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     round_to: int | None = 6,
-    vectorized: bool | None = None,
-    pair_count_hint: int | None = None,
 ) -> DataFrame:
     """All (a, b) id pairs with cosine similarity ≥ threshold
     (embedding near-dup detection).  ``block_col`` restricts candidate
@@ -196,26 +180,14 @@ def cosine_pairs(
     matrix (``applyInPandas``) — each block is one task, pairs never hit
     the shuffle as rows, and the kernel is vectorized instead of a
     per-pair interpreted fold (measured ~10x over the expression form).
-    It takes no gate: per-block pair counts are a function of the
-    block-key distribution, which catalog footer stats cannot see
-    without spending a job, and the kernel is already Arrow-vectorized.
 
-    Unblocked path keeps the JVM expression join by default (no
-    driver-size assumption about the corpus fitting one task) with the
-    same kernel gate as :func:`cosine_topk`: ``vectorized=None`` plus
-    ``pair_count_hint`` (n·(n−1)/2 from catalog row counts) picks the
-    numpy-einsum Arrow kernel for the per-pair cosine once the hint
-    clears :data:`VEC_CROSSOVER_PAIRS` — at that size the interpreted
-    per-element fold dominates the fixed Arrow round trip.  The NULL
-    guard is the same expression on both kernels (zero-norm pairs keep
-    sim NULL and fail the threshold), so semantics are identical;
-    sims are bit-approximate across kernels (summation order)."""
+    Unblocked path: a JVM expression join (no driver-size assumption
+    about the corpus fitting one task) with the per-pair dot fold; a
+    NULL or zero-norm row has a NULL sim and pairs with nothing."""
     if block_col is not None:
         return _cosine_pairs_blas(
             df, threshold, block_col, id_col, vec_col, round_to
         )
-    # (block_col handled above by the BLAS path — this is the
-    # unblocked expression join only)
     a = with_norm(df, vec_col).select(
         F.col(id_col).alias("a"),
         F.col("_emb").alias("_aemb"),
@@ -231,17 +203,8 @@ def cosine_pairs(
     # ranks NaN ABOVE the threshold — without the guard a single
     # all-zero embedding pairs with the whole corpus (the BLAS path
     # drops them; numpy NaN compares False)
-    if vectorized is None:
-        vectorized = (
-            pair_count_hint is not None
-            and pair_count_hint >= VEC_CROSSOVER_PAIRS
-        )
     denom = F.col("_anorm") * F.col("_bnorm")
-    sim = (
-        F.when(denom > 0, _cosine_batch_udf("_aemb", "_bemb"))
-        if vectorized
-        else F.when(denom > 0, _dot("_aemb", "_bemb") / denom)
-    )
+    sim = F.when(denom > 0, _dot("_aemb", "_bemb") / denom)
     out = joined.withColumn("_sim", sim).filter(F.col("_sim") >= threshold)
     return (
         out.select(
@@ -358,28 +321,17 @@ def cosine_topk_lsh(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_probe_bits: int = 1,
-    vectorized: bool | None = None,
-    pair_count_hint: int | None = None,
 ) -> DataFrame:
     """Approximate cosine top-k: candidates restricted to the query's
     LSH bucket(s), then exact re-rank.  Trades recall for a bucket-equi
     join instead of a full cross product (the 100 TB shape).
 
-    ``vectorized``/``pair_count_hint`` gate the re-rank kernel exactly
-    as :func:`cosine_topk` does (``None`` + hint ≥
-    :data:`VEC_CROSSOVER_PAIRS` picks the numpy-einsum Arrow kernel,
-    otherwise the JVM fold; explicit True/False always wins).  The
-    hint is the EXPECTED candidate count — |queries| × probe_buckets ×
-    |corpus| / 2^n_planes under uniform hashing, computable from
-    catalog row counts with no job.  Unlike ivf_topk the fold stays
-    the small-scale default even though lsh_bucket already pays one
-    Arrow round trip: the fold here sits under a NULL-propagating
-    guard (zero-norm rows keep sim NULL and lose every rank), so the
-    vectorized branch must keep the norm columns for the guard and
-    only replaces the per-pair dot — worth it only once the pair
-    stream is large.  Sims are bit-approximate across kernels
-    (summation order); NULL/zero-norm semantics are identical by
-    construction (the guard is the same expression).
+    The re-rank is the JVM dot fold under a NULL-propagating guard:
+    zero-norm rows keep sim NULL and lose every rank.  The candidate
+    stream is |queries| × probe buckets × |corpus| / 2^n_planes (the
+    declared q40: 351 pairs at sf0.1, 3,515 at sf1), far below
+    :data:`VEC_CROSSOVER_PAIRS`, where :func:`cosine_topk`'s einsum
+    kernel starts to win.
 
     ``n_probe_bits`` controls MULTI-PROBE (Lv et al., VLDB'07 shape):
     each query also probes every bucket within that Hamming distance
@@ -439,17 +391,8 @@ def cosine_topk_lsh(
     # zero-norm guard (same as cosine_topk/ivf_topk): NaN sims sort
     # FIRST under desc ordering, so one zero vector in a bucket would
     # displace every true top-1 there
-    if vectorized is None:
-        vectorized = (
-            pair_count_hint is not None
-            and pair_count_hint >= VEC_CROSSOVER_PAIRS
-        )
     _denom = F.col("_qnorm") * F.col("_norm")
-    _sim = (
-        F.when(_denom > 0, _cosine_batch_udf("_qemb", "_emb"))
-        if vectorized
-        else F.when(_denom > 0, _dot("_qemb", "_emb") / _denom)
-    )
+    _sim = F.when(_denom > 0, _dot("_qemb", "_emb") / _denom)
     pairs = c.join(F.broadcast(q), "bucket").withColumn("_sim", _sim)
     # sim ties break to the query itself first, then lower id: an
     # in-corpus query's top-1 is itself even when the corpus contains

@@ -55,6 +55,14 @@ _LABEL_ROW_BYTES = 24
 
 _INTEGRAL = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
+# Propagation hops per round.  A round's cost on small and medium graphs
+# is its checkpoint job's launch, not its joins, so composing hops
+# divides the job count; the convergence test sees the composed state
+# and pays at most one redundant hop after the fixpoint.  2 beat 3 at
+# sf1 (q82 median 64.3 vs 84.1 s, 5 vs 6 jobs;
+# PROBE_CC_HOPS_SF1_r16.json), and the two were flat at sf0.1.
+_HOPS = 2
+
 
 def _not_converged(max_iter: int) -> RuntimeError:
     # partial labels are silently WRONG (a path longer than max_iter
@@ -73,7 +81,6 @@ def connected_components(
     dst: str = "b",
     max_iter: int = 25,
     checkpoint_dir: str | None = None,
-    hops_per_job: int = 2,
 ) -> DataFrame:
     """(id, cluster) for every node in ``edges``, where ``cluster`` is
     the minimum node id reachable from ``id`` (deterministic canonical
@@ -92,7 +99,7 @@ def connected_components(
     plan is evaluated once either way.  A threshold ≤ 0 always runs the
     Spark tier.  Both tiers give the same labels and the same schema
     (``int`` edge columns give ``struct<id:int,cluster:int>``), run
-    ``hops_per_job`` hops per round with the same convergence test, and
+    :data:`_HOPS` hops per round with the same convergence test, and
     raise on the same ``max_iter``.
 
     ``checkpoint_dir``: when set, the Spark tier's per-round lineage
@@ -114,8 +121,6 @@ def connected_components(
     DataFrames on the same session can never be caught in the round's
     cleanup (the r4 global persistent-RDD-set diff could capture an
     interleaved persist)."""
-    if hops_per_job < 1:
-        raise ValueError(f"hops_per_job must be >= 1: {hops_per_job}")
     # Undirected edge list WITH SELF-LOOPS via a per-row explode —
     # ONE evaluation of the upstream plan (a union of the edge plan
     # with its reversal evaluates the whole upstream pair pipeline,
@@ -149,11 +154,9 @@ def connected_components(
         # without this the upstream pair pipeline would re-run per read
     )
     try:
-        labels = _driver_components(und, max_iter, hops_per_job)
+        labels = _driver_components(und, max_iter)
         if labels is None:
-            labels = _spark_components(
-                und, max_iter, checkpoint_dir, hops_per_job
-            )
+            labels = _spark_components(und, max_iter, checkpoint_dir)
         return labels
     finally:
         # both tiers' results are independent of und (a local relation
@@ -161,9 +164,7 @@ def connected_components(
         und.unpersist()
 
 
-def _driver_components(
-    und: DataFrame, max_iter: int, hops_per_job: int
-) -> DataFrame | None:
+def _driver_components(und: DataFrame, max_iter: int) -> DataFrame | None:
     """The driver tier: (id, cluster) as a local relation, or None when
     ``und`` is over the cap, has non-integral ids or a null endpoint
     (the Spark tier then runs; its null-endpoint labels are kept as
@@ -193,12 +194,12 @@ def _driver_components(
     starts = np.searchsorted(di[order], np.arange(len(nodes)))
     lab = np.arange(len(nodes))
     converged = False
-    # the Spark tier's rounds: ``hops_per_job`` hops each, converged
-    # when a round leaves the labels unchanged.  Labels only decrease,
-    # so unchanged arrays ⟺ equal label sums (the Spark test).
-    for _ in range(0, max_iter, hops_per_job):
+    # the Spark tier's rounds: ``_HOPS`` hops each, converged when a
+    # round leaves the labels unchanged.  Labels only decrease, so
+    # unchanged arrays ⟺ equal label sums (the Spark test).
+    for _ in range(0, max_iter, _HOPS):
         prev = lab
-        for _ in range(hops_per_job):
+        for _ in range(_HOPS):
             lab = np.minimum.reduceat(lab[nbr], starts)
         if np.array_equal(lab, prev):
             converged = True
@@ -214,10 +215,7 @@ def _driver_components(
 
 
 def _spark_components(
-    und: DataFrame,
-    max_iter: int,
-    checkpoint_dir: str | None,
-    hops_per_job: int,
+    und: DataFrame, max_iter: int, checkpoint_dir: str | None
 ) -> DataFrame:
     """The Spark tier: checkpointed min-label propagation rounds over
     the cached ``und``."""
@@ -289,27 +287,21 @@ def _spark_components(
     labels = None
     label_handle = None
     prev_sum = None
-    # ``hops_per_job`` propagation steps per materialization (default
-    # 2): the per-round cost at small/medium graph sizes is dominated
-    # by the checkpoint job launch, not the joins, and composing steps
-    # into one plan divides the job count (labels propagate k hops per
-    # job; the convergence check sees the composed state, costing at
-    # most k-1 redundant hops after fixpoint).  max_iter still counts
-    # SINGLE hops, so the diameter contract is unchanged.  r13 measured
-    # 3-vs-2 flat at sf0.1 (floor-dominated); the r16 sf1 A/B
-    # (PROBE_CC_HOPS_SF1_r16.json) settles the knob at data scale.
+    # ``_HOPS`` propagation steps per materialization (see _HOPS);
+    # max_iter still counts SINGLE hops, so the diameter contract is
+    # unchanged.
     # checkpoint (not cache) each round: caching materializes the
     # DATA but the logical plan still nests every earlier round, so by
     # ~25 rounds the planner itself OOMs the driver (observed on a
     # 30-node chain).  Checkpointing truncates the lineage to the
     # materialized blocks — plan size stays O(1) per round.
     try:
-        for it in range(0, max_iter, hops_per_job):
+        for it in range(0, max_iter, _HOPS):
             obs = Observation()
             # first_hop already embodies one propagation step, so the
             # opening round composes one fewer _step
             cand = first_hop if it == 0 else labels
-            for _ in range(hops_per_job - (1 if it == 0 else 0)):
+            for _ in range(_HOPS - (1 if it == 0 else 0)):
                 cand = _step(cand)
             cand = cand.observe(obs, _sum)
             new_labels, new_handle = _ckpt(cand)
@@ -347,7 +339,6 @@ def dedup_clusters(
     size_col: str = "n_chars",
     max_iter: int = 25,
     checkpoint_dir: str | None = None,
-    hops_per_job: int = 2,
 ) -> DataFrame:
     """Assign every document to a duplicate cluster and pick its
     canonical representative: cluster = min reachable id over the
@@ -357,10 +348,7 @@ def dedup_clusters(
     (cluster, keep_id, n_docs).  ``checkpoint_dir``: see
     :func:`connected_components` (pass on clusters)."""
     cc = connected_components(
-        pairs,
-        max_iter=max_iter,
-        checkpoint_dir=checkpoint_dir,
-        hops_per_job=hops_per_job,
+        pairs, max_iter=max_iter, checkpoint_dir=checkpoint_dir
     )
     labeled = docs.select(
         F.col(id_col).alias("id"), F.col(size_col).alias("_sz")

@@ -1100,7 +1100,7 @@ def q33(spark, sf):
 
 # -- dedup / near-dup (LLM pipeline) -----------------------------------------
 
-# exact 3-gram jaccard pairs, mirroring functions.dedup.shingles verbatim
+# exact 3-gram jaccard pairs, mirroring functions.dedup.gram_array verbatim
 _JACCARD_SQL = """
 WITH w AS (SELECT doc_id, regexp_split_to_array(text, '\\s+') AS ws
            FROM documents),
@@ -1168,9 +1168,7 @@ def q37(spark, sf):
     from .functions.dedup import ngram_jaccard_pairs
 
     d = load(spark, sf, "documents")
-    return ngram_jaccard_pairs(
-        d, threshold=0.5, n=3, max_df=20, sizes_broadcast=True
-    )
+    return ngram_jaccard_pairs(d, threshold=0.5, n=3, max_df=20)
 
 
 def _simhash_expected(sf_dir: str, max_hamming: int, n: int = 3):
@@ -1280,15 +1278,7 @@ def q40(spark, sf):
 
     e = load(spark, sf, "embeddings")
     q = e.filter(F.col("vec_id") < 5)
-    # catalog-stats hint (parquet footers, no job): 5 queries x 9
-    # probed buckets (n_probe_bits=1 default over 8 planes) x the
-    # expected bucket population |corpus|/2^8 — the kernel gate stays
-    # on the JVM fold until the candidate stream clears the measured
-    # crossover (r16, VERDICT r15 #6; same pattern as q30/q66)
-    top = cosine_topk_lsh(
-        q, e, k=1, n_planes=8,
-        pair_count_hint=5 * 9 * table_rows(sf, "embeddings") // 256,
-    )
+    top = cosine_topk_lsh(q, e, k=1, n_planes=8)
     return top.select("qid", F.col("vec_id").alias("top_id")).transform(psort, "qid")
 
 
@@ -3302,7 +3292,7 @@ def q98(spark, sf):
         # excluded-rule config, a plain explode lets
         # InferFiltersFromGenerate push size(gs) > 0 below the
         # repartition and re-inline the gram pipeline into the scan
-        # (the dedup.shingles idiom)
+        # (the idiom of ngram_jaccard_pairs' posting explode)
         .select(F.explode_outer("gs").alias("gram"))
         .where(F.col("gram").isNotNull())
         .agg(F.collect_set("gram").alias("bench"))

@@ -14,7 +14,7 @@ from pyspark.sql import Row, functions as F
 
 from mandoline_spark.functions.dedup import (
     _posting_pairs,
-    doc_grams,
+    doc_gram_hashes,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash,
@@ -111,12 +111,13 @@ def test_py_xxh64_matches_spark(spark):
 
 def test_signature_kernels_match_expression_folds(spark):
     """The Arrow-batched numpy folds (_minhash_kernel/_simhash_kernel,
-    the hot path) must be bit-for-bit the JVM expression folds
-    (_signature_col/_simhash_col, kept as the executable spec) —
-    including NULL gram arrays (NULL out) and empty arrays (all-PRIME /
-    zero degenerate values)."""
+    the hot path) over the production gram-hash set (_gram_hash_col)
+    must be bit-for-bit the JVM expression folds (_signature_col/
+    _simhash_col, kept as the executable spec) over the gram strings of
+    gram_array — including empty word arrays (all-PRIME / zero
+    degenerate values) and NULL ones."""
     from mandoline_spark.functions.dedup import (
-        _hashed_grams,
+        _gram_hash_col,
         _minhash_kernel,
         _signature_col,
         _simhash_col,
@@ -126,18 +127,22 @@ def test_signature_kernels_match_expression_folds(spark):
 
     docs = _docs(spark).select(
         F.col("doc_id").alias("id"),
-        F.split("text", r"\s+").alias("_w"),
+        F.split("text", r"\s+").alias("_words"),
     )
     edge = spark.createDataFrame(
-        [Row(id=-1, _w=[]), Row(id=-2, _w=None)], docs.schema
+        [Row(id=-1, _words=[]), Row(id=-2, _words=None)], docs.schema
     )
-    dg = docs.union(edge).select("id", gram_array("_w", 3).alias("grams"))
+    dg = docs.union(edge).select(
+        "id",
+        gram_array("_words", 3).alias("grams"),
+        _gram_hash_col(3).alias("ghashes"),
+    )
     both = dg.select(
         "id",
         _signature_col(F.col("grams"), 16, 42).alias("sig_e"),
-        _minhash_kernel(16, 42)(_hashed_grams("grams")).alias("sig_k"),
+        _minhash_kernel(16, 42)(F.col("ghashes")).alias("sig_k"),
         _simhash_col(F.col("grams")).alias("sh_e"),
-        _simhash_kernel(64)(_hashed_grams("grams")).alias("sh_k"),
+        _simhash_kernel(64)(F.col("ghashes")).alias("sh_k"),
     ).collect()
     assert both  # fixture non-empty
     for r in both:
@@ -152,7 +157,7 @@ def _brute_simhash_pairs(spark, docs, max_hamming: int, n: int = 3):
     """All a<b pairs with hamming(simhash) <= max_hamming, by full scan
     over the per-doc fingerprints (shingle-less docs excluded, matching
     simhash_pairs)."""
-    dg = doc_grams(docs, n=n).where(F.size("grams") > 0)
+    dg = doc_gram_hashes(docs, n=n).where(F.size("ghashes") > 0)
     sigs = {
         r.id: r.simhash
         for r in dg.join(simhash(docs, n=n), "id").select("id", "simhash").collect()
@@ -224,26 +229,54 @@ def _brute_jaccard_pairs(texts: dict, threshold: float, max_df=None):
     return out
 
 
+def _max_df_by_sizes_join(spark, docs, threshold: float, max_df: int):
+    """``ngram_jaccard_pairs(max_df=...)`` as {(a, b): jac}, keyed by
+    the join its per-doc sizes took: a BroadcastHashJoin at the default
+    ``spark.sql.autoBroadcastJoinThreshold``, a SortMergeJoin at -1.
+    Each plan is checked to hold that join and no other.  ``docs``
+    must come from a scan: an RDD of Python rows has no size estimate,
+    so the planner would sort-merge it at any threshold."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    out = {}
+    try:
+        for thr, join in ((old, "BroadcastHashJoin"), ("-1", "SortMergeJoin")):
+            spark.conf.set(key, thr)
+            df = ngram_jaccard_pairs(docs, threshold=threshold, max_df=max_df)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert plan.count("Join ") == plan.count(join) == 1, plan
+            out[join] = {(r.a, r.b): float(r.jac) for r in df.collect()}
+    finally:
+        spark.conf.set(key, old)
+    return out
+
+
 @pytest.mark.parametrize("max_df", [None, 3])
 def test_ngram_jaccard_matches_bruteforce(spark, max_df):
     """The default path posts only each doc's threshold prefix of
     sorted gram hashes, so it is checked across thresholds — prefix
-    lengths from most of a set (0.2) down to a single gram (1.0)."""
+    lengths from most of a set (0.2) down to a single gram (1.0).  On
+    this slice ``max_df`` drops real stop-shingles, and that path is
+    checked with its sizes join both broadcast and sort-merged."""
     docs = _docs(spark).limit(120)
     texts = {r.doc_id: r.text for r in docs.select("doc_id", "text").collect()}
-    for t in (0.2, 0.5, 0.8, 0.9, 1.0) if max_df is None else (0.2,):
-        got = {
-            (r.a, r.b): float(r.jac)
-            for r in ngram_jaccard_pairs(
-                docs, threshold=t, max_df=max_df
-            ).collect()
-        }
+    for t in (0.2, 0.5, 0.8, 0.9, 1.0) if max_df is None else (0.2, 0.5):
+        if max_df is None:
+            runs = [
+                {
+                    (r.a, r.b): float(r.jac)
+                    for r in ngram_jaccard_pairs(docs, threshold=t).collect()
+                }
+            ]
+        else:
+            runs = list(_max_df_by_sizes_join(spark, docs, t, max_df).values())
         brute = {
             (a, b): j for a, b, j in _brute_jaccard_pairs(texts, t, max_df)
         }
-        assert set(got) == set(brute), t
-        for pair, j in got.items():
-            assert j == pytest.approx(brute[pair], abs=1e-6)
+        for got in runs:
+            assert set(got) == set(brute), t
+            for pair, j in got.items():
+                assert j == pytest.approx(brute[pair], abs=1e-6)
 
 
 def test_ngram_jaccard_prefix_keeps_boundary_pair(spark):
@@ -383,16 +416,16 @@ def test_ngram_jaccard_string_ids(spark):
     assert got == want, (got, want)
 
 
-def test_ngram_jaccard_size_band_prune_exact(spark):
-    """r16 fused broadcast shape: the pair emitter drops pairs whose
-    post-drop set sizes make the threshold unreachable
-    (jac <= min/max), BEFORE the pair exchange.  Pins: (a) a pair the
-    band provably excludes (|A|=10 vs |B|=40, jac <= 0.25 < 0.5) never
-    changes the result; (b) a pair sitting EXACTLY on the boundary
-    (A subset of B, |A|=10, |B|=20, jac = 10/20 = 0.5 = t) is kept —
-    the -1 integer slack in the prune inequality protects it; (c) the
-    broadcast shape equals the shuffle-join shape and the brute-force
-    oracle on the same fixture."""
+def test_ngram_jaccard_size_band_prune_exact(spark, tmp_path):
+    """The max_df path's pair emitter drops pairs whose post-drop set
+    sizes make the threshold unreachable (jac <= min/max), BEFORE the
+    pair exchange.  Pins: (a) a pair the band provably excludes
+    (|A|=10 vs |B|=40, jac <= 0.25 < 0.5) never changes the result;
+    (b) a pair sitting EXACTLY on the boundary (A subset of B,
+    |A|=10, |B|=20, jac = 10/20 = 0.5 = t) is kept — the -1 integer
+    slack in the prune inequality protects it; (c) the broadcast sizes
+    join equals the sort-merge one and the brute-force oracle on the
+    same fixture."""
     toks = [f"w{i}" for i in range(60)]
 
     def text(idx):  # distinct 3-gram per consecutive token triple
@@ -408,31 +441,23 @@ def test_ngram_jaccard_size_band_prune_exact(spark):
         # jac(A, D) = 10 / (10 + 20 - 10) = 0.5 == threshold exactly
         Row(doc_id=4, text=text(range(22))),
     ]
-    docs = spark.createDataFrame(rows)
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(rows).write.parquet(path)
+    docs = spark.read.parquet(path)
     texts = {r.doc_id: r.text for r in rows}
     want = _brute_jaccard_pairs(texts, 0.5, max_df=50)
-    got_b = {
-        (r.a, r.b, float(r.jac))
-        for r in ngram_jaccard_pairs(
-            docs, threshold=0.5, max_df=50, sizes_broadcast=True
-        ).collect()
-    }
-    got_s = {
-        (r.a, r.b, float(r.jac))
-        for r in ngram_jaccard_pairs(
-            docs, threshold=0.5, max_df=50, sizes_broadcast=False
-        ).collect()
-    }
-    assert got_b == got_s
-    assert {(a, b) for a, b, _ in got_b} == {(a, b) for a, b, _ in want}
+    shapes = _max_df_by_sizes_join(spark, docs, 0.5, 50)
+    got = shapes["BroadcastHashJoin"]
+    assert shapes["SortMergeJoin"] == got
+    assert set(got) == {(a, b) for a, b, _ in want}
     brute = {(a, b): j for a, b, j in want}
-    for a, b, j in got_b:
-        assert j == pytest.approx(brute[(a, b)], abs=1e-6)
+    for pair, j in got.items():
+        assert j == pytest.approx(brute[pair], abs=1e-6)
     # the boundary pair and the exact-dup pair are present, the banded
     # pair is not
-    keys = {(a, b) for a, b, _ in got_b}
-    assert (1, 4) in keys and (1, 3) in keys
-    assert (1, 2) not in keys and (2, 3) not in keys
+    assert (1, 4) in got and (1, 3) in got
+    assert (1, 2) not in got and (2, 3) not in got
+
 
 
 def test_minhash_verify_broadcast_streams_one_gram_pass(spark):

@@ -535,39 +535,25 @@ def test_graph_operators_aqe_invariant_and_conf_untouched(spark, monkeypatch):
             spark.conf.set(key, old)
 
 
-def test_connected_components_hops_per_job_variants(spark):
-    """r16 (VERDICT r15 #5): the hop-composition depth is a pure
-    job-count/plan-size trade — every ``hops_per_job`` must yield the
-    identical labeling, and ``max_iter`` keeps counting SINGLE hops
-    regardless of composition."""
+def test_connected_components_composed_hops_label_and_count(spark):
+    """The Spark tier composes two hops per round: the labels are the
+    oracle's on chains, a triangle and an island pair, and ``max_iter``
+    keeps counting SINGLE hops — a diameter-9 chain needs ~10 hops to
+    settle its convergence signal, so max_iter=4 (two rounds) raises."""
     from mandoline_spark.operators.graph import connected_components
 
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(9)]
-        + [(20, 21), (21, 22), (20, 22), (30, 31)],
-        "a long, b long",
-    )
+    pairs = [(i, i + 1) for i in range(9)] + [
+        (20, 21), (21, 22), (20, 22), (30, 31)
+    ]
+    edges = spark.createDataFrame(pairs, "a long, b long")
     with _spark_tier(spark):
-        ref = sorted(
-            (r.id, r.cluster)
-            for r in connected_components(edges, hops_per_job=2).collect()
-        )
-        for k in (1, 3, 4):
-            got = sorted(
-                (r.id, r.cluster)
-                for r in connected_components(edges, hops_per_job=k).collect()
-            )
-            assert got == ref, k
-        # max_iter counts hops, not jobs: a diameter-9 chain needs ~10
-        # hops to settle its convergence signal; max_iter=4 must raise
-        # even when one composed job covers 4 hops
-        import pytest as _pytest
-
+        got = {(r.id, r.cluster) for r in connected_components(edges).collect()}
+        assert got == _cc_oracle(pairs)
         chain = spark.createDataFrame(
             [(i, i + 1) for i in range(9)], "a long, b long"
         )
-        with _pytest.raises(RuntimeError, match="did not converge"):
-            connected_components(chain, max_iter=4, hops_per_job=4)
+        with pytest.raises(RuntimeError, match="did not converge"):
+            connected_components(chain, max_iter=4)
 
 
 @pytest.mark.parametrize("aqe", ["false", "true"])
@@ -631,30 +617,29 @@ def test_connected_components_tiers_agree(spark, aqe):
 
 
 def test_connected_components_max_iter_raise_parity(spark):
-    """Both tiers count hops the same way: for every ``hops_per_job``
-    the smallest ``max_iter`` that converges on the driver tier is the
-    smallest that converges on the Spark tier."""
+    """Both tiers count hops the same way: the smallest ``max_iter``
+    that converges on the driver tier is the smallest that converges on
+    the Spark tier."""
     from mandoline_spark.operators.graph import connected_components
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(5)], "a long, b long"
     )
 
-    def raises(k: int, m: int) -> bool:
+    def raises(m: int) -> bool:
         try:
-            connected_components(chain, max_iter=m, hops_per_job=k)
+            connected_components(chain, max_iter=m)
         except RuntimeError as e:
             assert "did not converge" in str(e)
             return True
         return False
 
-    for k in (1, 2, 3, 4):
-        m = 1
-        while raises(k, m):
-            m += 1
-        assert m > 1, k
-        with _spark_tier(spark):
-            assert raises(k, m - 1) and not raises(k, m), k
+    m = 1
+    while raises(m):
+        m += 1
+    assert m > 1
+    with _spark_tier(spark):
+        assert raises(m - 1) and not raises(m)
 
 
 def test_connected_components_raise_frees_its_blocks(spark, monkeypatch):

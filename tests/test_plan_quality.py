@@ -81,9 +81,9 @@ def _is_corpus_exchange(node) -> bool:
 
 def _only_rebalance_exchanges(df) -> bool:
     """True when the plan's one Exchange is the deliberate per-doc
-    rebalance fed straight by the corpus scan — doc_grams' round-robin
-    or doc_gram_hashes' partitioning by the unique document id
-    (CPU-parallelism for per-doc work) — and no other exchange runs."""
+    rebalance fed straight by the corpus scan — doc_gram_hashes'
+    partitioning by the unique document id (CPU-parallelism for per-doc
+    work) — and no other exchange runs."""
     plan = df._jdf.queryExecution().executedPlan()
     exchanges = [
         n
@@ -93,10 +93,7 @@ def _only_rebalance_exchanges(df) -> bool:
     if len(exchanges) != 1 or not _is_corpus_exchange(exchanges[0]):
         return False
     part = exchanges[0].outputPartitioning().toString()
-    return bool(
-        re.fullmatch(r"roundrobinpartitioning\(\d+\)", part.lower())
-        or re.fullmatch(r"hashpartitioning\(doc_id#\d+L?, \d+\)", part)
-    )
+    return bool(re.fullmatch(r"hashpartitioning\(doc_id#\d+L?, \d+\)", part))
 
 
 def test_minhash_signatures_have_no_key_shuffle(spark):
@@ -131,12 +128,17 @@ def test_banding_computes_signature_once(spark):
     from mandoline_spark.functions.dedup import (
         _banded,
         _signature_col,
-        doc_grams,
+        gram_array,
     )
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    sig = doc_grams(docs).select(
-        "id", _signature_col(F.col("grams"), 64, 42).alias("sig")
+    sig = (
+        docs.select(
+            F.col("doc_id").alias("id"),
+            F.split("text", r"\s+").alias("_words"),
+        )
+        .select("id", gram_array("_words").alias("grams"))
+        .select("id", _signature_col(F.col("grams"), 64, 42).alias("sig"))
     )
     plan = _optimized_plan(_banded(sig, 64, 16))
     assert plan.count("aggregate(") == 1, plan
@@ -212,6 +214,34 @@ def test_bucket_caps_filter_before_collect(spark):
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
     assert plan2.count("hashpartitioning(band") == 1, plan2
+
+
+@pytest.mark.parametrize("fn_name", ["ngram_jaccard_pairs", "minhash_lsh_pairs"])
+def test_exact_jaccard_intersects_each_pair_once(spark, fn_name):
+    """Each exact-Jaccard emitter evaluates one ``array_intersect``
+    per candidate pair: the verify aggregate computes common/na/nb as
+    its result expressions, which the threshold filter reads as
+    attributes.  From a projection above the aggregate instead, Catalyst
+    substitutes ``common`` into the filter twice and the projection
+    computes it again (three intersections per pair).  The formatted
+    explain lists every operator's expressions, the aggregate's
+    results included."""
+    from mandoline_spark.functions import dedup
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    text = explain_str(getattr(dedup, fn_name)(docs, threshold=0.8))
+    assert text.count("array_intersect(") == 1, text
+
+
+def test_q37_sizes_join_broadcasts(spark):
+    """q37 (the max_df path) attaches its per-doc sizes to the posting
+    rows through its plan's one join, which the planner broadcasts at
+    this scale with no hint; no join runs on the pair stream."""
+    q = QUERIES["q37_ngram_jaccard"](spark, SF)
+    assert "strategy=broadcast" not in _optimized_plan(q)
+    plan = q._jdf.queryExecution().executedPlan()
+    joins = [n.nodeName() for n in _nodes(plan) if "Join" in n.nodeName()]
+    assert joins == ["BroadcastHashJoin"], plan.toString()
 
 
 def _below(node) -> list:

@@ -168,12 +168,14 @@ def test_ann_top1_prefers_self_over_exact_duplicate(emb, spark):
 
 
 def test_vectorized_cosine_parity_with_jvm_fold(spark, emb):
-    """r14 (r13 advice): the vectorized=True einsum path must agree
-    with the default JVM aggregate-fold — same (qid, id) rank sets,
-    sims bit-approximate (einsum's summation order differs from the
-    sequential fold, so agreement is to FP association, not bits; the
-    operator docstring says so).  NULL and zero-norm rows are part of
-    the contract: both paths yield sim 0.0 for them."""
+    """The einsum kernel, reached with a pair-count hint at the
+    crossover, must agree with the JVM aggregate-fold below it — same
+    (qid, id) rank sets, sims bit-approximate (einsum's summation order
+    differs from the sequential fold, so agreement is to FP
+    association, not bits; the operator docstring says so).  NULL and
+    zero-norm rows are part of the contract: both paths yield sim 0.0
+    for them."""
+    from mandoline_spark.functions.similarity import VEC_CROSSOVER_PAIRS
     from pyspark.sql.types import (
         ArrayType,
         FloatType,
@@ -207,7 +209,7 @@ def test_vectorized_cosine_parity_with_jvm_fold(spark, emb):
     # of betting a rounded value never straddles a boundary
     jvm = cosine_topk(q, corpus, k=5, round_to=None).collect()
     vec = cosine_topk(
-        q, corpus, k=5, round_to=None, vectorized=True
+        q, corpus, k=5, round_to=None, pair_count_hint=VEC_CROSSOVER_PAIRS
     ).collect()
     assert [(r.qid, r.vec_id) for r in jvm] == [
         (r.qid, r.vec_id) for r in vec
@@ -222,13 +224,12 @@ def test_vectorized_cosine_parity_with_jvm_fold(spark, emb):
 
 
 def test_vectorized_auto_gate_from_pair_count_hint(spark, emb):
-    """r15 (VERDICT r14 #9): cosine_topk's kernel choice is automatic
-    when a catalog-stats pair-count hint is supplied — JVM fold below
-    the measured crossover (where the Arrow round-trip's fixed cost
-    regressed sf0.1), einsum at/above it (where it won at sf1); an
-    explicit ``vectorized=`` always overrides the hint.  Pinned by
-    plan inspection: the vectorized path contains an Arrow Python UDF
-    eval node, the JVM path none."""
+    """cosine_topk's kernel choice follows a catalog-stats pair-count
+    hint — JVM fold below the measured crossover (where the Arrow
+    round-trip's fixed cost regressed sf0.1) and with no hint, einsum
+    at/above it (where it won at sf1).  Pinned by plan inspection: the
+    einsum path contains an Arrow Python UDF eval node, the JVM path
+    none."""
     from mandoline_spark.functions.similarity import (
         VEC_CROSSOVER_PAIRS,
         cosine_topk,
@@ -245,16 +246,9 @@ def test_vectorized_auto_gate_from_pair_count_hint(spark, emb):
     below = cosine_topk(q, emb, k=3, pair_count_hint=VEC_CROSSOVER_PAIRS - 1)
     at = cosine_topk(q, emb, k=3, pair_count_hint=VEC_CROSSOVER_PAIRS)
     none = cosine_topk(q, emb, k=3)  # no hint -> JVM fold
-    forced_off = cosine_topk(
-        q, emb, k=3, pair_count_hint=10 * VEC_CROSSOVER_PAIRS,
-        vectorized=False,
-    )
-    forced_on = cosine_topk(q, emb, k=3, vectorized=True)
     assert not has_python_udf(below)
     assert has_python_udf(at)
     assert not has_python_udf(none)
-    assert not has_python_udf(forced_off)
-    assert has_python_udf(forced_on)
     # and the gated kernels agree on the fixture (rank-set equality —
     # the deeper parity contract is the dedicated test above)
     assert [(r.qid, r.vec_id) for r in at.collect()] == [
@@ -330,99 +324,39 @@ def test_ivf_vectorized_default_and_override(spark, emb):
     assert all(r.sim == 0.0 for r in b if r.qid > 10_000)
 
 
-def test_lsh_vectorized_gate_outcomes(spark, emb):
-    """r16 (VERDICT r15 #6): cosine_topk_lsh gets cosine_topk's
-    pair-count-hint gate — JVM fold below the crossover (no hint, or a
-    hint under VEC_CROSSOVER_PAIRS), einsum at/above it, explicit
-    vectorized= always winning — and the two kernels agree on ranks
-    and (crucially) on the NULL-propagating zero-norm semantics: the
-    guard expression is shared, so a zero-norm corpus row keeps sim
-    NULL and loses every rank on BOTH paths."""
-    from mandoline_spark.functions.similarity import (
-        VEC_CROSSOVER_PAIRS,
-        cosine_topk_lsh,
-    )
+def test_cosine_pairs_unblocked_matches_numpy(spark, emb):
+    """The unblocked cosine_pairs (the JVM expression join) against a
+    numpy reference over the same rows: every a < b pair of non-NULL,
+    non-zero-norm vectors with cosine ≥ threshold, with its sim.  A NULL
+    or zero-norm row pairs with nothing: its sim is NULL, and NULL ≥ t
+    is not true even at t = -1."""
+    import itertools
 
-    corpus = _crafted_corpus(spark, emb)
-    q = corpus.filter(F.col("vec_id") < 3)
-    kw = dict(k=5, n_planes=4)
-    none = cosine_topk_lsh(q, corpus, **kw)
-    below = cosine_topk_lsh(
-        q, corpus, pair_count_hint=VEC_CROSSOVER_PAIRS - 1, **kw
-    )
-    at = cosine_topk_lsh(
-        q, corpus, pair_count_hint=VEC_CROSSOVER_PAIRS, **kw
-    )
-    forced_off = cosine_topk_lsh(
-        q, corpus, pair_count_hint=10 * VEC_CROSSOVER_PAIRS,
-        vectorized=False, **kw
-    )
-    forced_on = cosine_topk_lsh(q, corpus, vectorized=True, **kw)
-    assert _has_jvm_fold(none)
-    assert _has_jvm_fold(below)
-    assert not _has_jvm_fold(at)
-    assert _has_jvm_fold(forced_off)
-    assert not _has_jvm_fold(forced_on)
-    a, b = at.collect(), below.collect()
-    assert a and [(r.qid, r.vec_id) for r in a] == [
-        (r.qid, r.vec_id) for r in b
-    ]
-    for ra, rb in zip(a, b):
-        assert abs(ra.sim - rb.sim) <= 1e-6, (ra, rb)  # round_to=6
-    # zero-norm corpus row 10_002 shares every bucket expression with
-    # real rows only via its own bucket; if it collides into a probed
-    # bucket its sim must be NULL (guard) on both kernels — i.e. it
-    # never appears with a non-null sim
-    for rows in (a, b):
-        assert all(
-            r.sim is not None for r in rows if r.vec_id == 10_002
-        ) in (True,)  # vacuous if never ranked; NULL sims never rank
-        assert all(
-            not (r.vec_id == 10_002 and r.sim is None) for r in rows
-        )
+    import numpy as np
 
-
-def test_cosine_pairs_unblocked_gate(spark, emb):
-    """r16 (VERDICT r15 #6): the unblocked cosine_pairs expression
-    join gets the same kernel gate; pair sets and sims agree across
-    kernels, and the zero-norm row pairs with nothing on either (NULL
-    sim fails the threshold on both)."""
-    from mandoline_spark.functions.similarity import (
-        VEC_CROSSOVER_PAIRS,
-        cosine_pairs,
-    )
+    from mandoline_spark.functions.similarity import cosine_pairs
 
     corpus = _crafted_corpus(spark, emb).filter(
         (F.col("vec_id") < 40) | (F.col("vec_id") > 10_000)
     )
-    # threshold -1 keeps every real pair (the fixture has none ≥ 0.4
-    # in this id range) while still DROPPING the degenerate rows: a
-    # zero-norm pair's sim is NULL under the shared guard, and
-    # NULL >= -1 is not true — the exact semantic the gate must not
-    # change
-    kw = dict(threshold=-1.0, round_to=None)
-    none = cosine_pairs(corpus, **kw)
-    below = cosine_pairs(
-        corpus, pair_count_hint=VEC_CROSSOVER_PAIRS - 1, **kw
-    )
-    at = cosine_pairs(
-        corpus, pair_count_hint=VEC_CROSSOVER_PAIRS, **kw
-    )
-    forced_off = cosine_pairs(
-        corpus, pair_count_hint=10 * VEC_CROSSOVER_PAIRS,
-        vectorized=False, **kw
-    )
-    forced_on = cosine_pairs(corpus, vectorized=True, **kw)
-    assert _has_jvm_fold(none)
-    assert _has_jvm_fold(below)
-    assert not _has_jvm_fold(at)
-    assert _has_jvm_fold(forced_off)
-    assert not _has_jvm_fold(forced_on)
-    a, b = at.collect(), below.collect()
-    assert a and [(r.a, r.b) for r in a] == [(r.a, r.b) for r in b]
-    for ra, rb in zip(a, b):
-        assert abs(ra.sim - rb.sim) <= 1e-12, (ra, rb)
-    assert all(
-        r.a not in (10_001, 10_002) and r.b not in (10_001, 10_002)
-        for r in a
-    )
+    rows = corpus.collect()
+    vecs = {
+        r.vec_id: np.asarray(r.embedding, dtype=np.float64)
+        for r in rows
+        if r.embedding is not None and np.linalg.norm(r.embedding) > 0
+    }
+    assert len(vecs) == len(rows) - 2
+    for t in (-1.0, 0.1):
+        want = {}
+        for a, b in itertools.combinations(sorted(vecs), 2):
+            va, vb = vecs[a], vecs[b]
+            sim = va @ vb / (np.linalg.norm(va) * np.linalg.norm(vb))
+            if sim >= t:
+                want[(a, b)] = sim
+        got = {
+            (r.a, r.b): r.sim
+            for r in cosine_pairs(corpus, threshold=t, round_to=None).collect()
+        }
+        assert want and set(got) == set(want), t
+        for pair, sim in got.items():
+            assert abs(sim - want[pair]) <= 1e-12, (pair, sim, want[pair])

@@ -47,9 +47,7 @@ def main() -> None:
         df.select("*")._jdf.queryExecution().toRdd().count()
 
     def fused():
-        return ngram_jaccard_pairs(
-            d, threshold=THRESHOLD, n=N, max_df=MAX_DF, sizes_broadcast=True
-        )
+        return ngram_jaccard_pairs(d, threshold=THRESHOLD, n=N, max_df=MAX_DF)
 
     def prefusion():
         # verbatim pre-fusion broadcast shape (7436905^)

@@ -23,14 +23,10 @@ per-query constant story bench.py's AQE-off loop isolates.
 Round-8 findings (local[32], best-of-3, time_x10 / time_x1 — ideal
 linear = 10, smaller is better): minhash_lsh 1.5-1.9x, simhash
 1.6-1.7x, cc_clusters 1.5-2.1x, entropy 1.8-2.9x; jaccard 1.3x
-(2.45s -> 3.14s) with sizes_broadcast=True vs 4.0x (1.86s -> 7.36s)
-without — at 10x the two shuffle joins that attach per-doc set sizes
-to the 12.5M-row pair stream dominate everything else, while the
-broadcast variant keeps the pair stream in place and is safe whenever
-|docs| x 16 bytes fits the driver (the knob and its scale semantics
-are documented on ngram_jaccard_pairs).  The shuffle variant is
-slightly CHEAPER at x1 (no broadcast build job) — the crossover is
-exactly the constants-vs-marginal-cost story.
+(2.45s -> 3.14s) with the per-doc set sizes broadcast onto the posting
+rows, against 4.0x (1.86s -> 7.36s) for the former shape that joined
+them onto the 12.5M-row pair stream at 10x (ngram_jaccard_pairs now
+always attaches them below the posting collection).
 
 Usage: PYTHONPATH=<repo> python tools/scale_check.py
 """
@@ -105,11 +101,7 @@ def main() -> None:
         return b
 
     ops = {
-        "jaccard_bcast": lambda d: ngram_jaccard_pairs(
-            d, threshold=0.5, n=3, max_df=20, ordered=False,
-            sizes_broadcast=True,
-        ).count(),
-        "jaccard_shuffle": lambda d: ngram_jaccard_pairs(
+        "jaccard": lambda d: ngram_jaccard_pairs(
             d, threshold=0.5, n=3, max_df=20, ordered=False
         ).count(),
         "minhash_lsh": lambda d: minhash_lsh_pairs(
