@@ -3,7 +3,10 @@
 Near-dup pair emitters (minhash/simhash/jaccard) produce EDGES; turning
 them into "keep one document per duplicate cluster" requires the
 connected components of that graph, with a deterministic cluster label
-(the minimum member id).
+(the minimum member id).  :func:`dedup_clusters` then groups every
+document under its label and picks the one to keep; its rows come back
+unordered, since at corpus scale they are written out, not presented
+(a caller that presents them sorts them itself, as q83 does).
 
 Two tiers, one contract.  Both run min-label propagation over the same
 self-looped undirected edge cache (``und``) with the same hop counting
@@ -345,7 +348,10 @@ def dedup_clusters(
     near-dup pair graph (singletons cluster with themselves), keep =
     the member with the largest ``size_col`` (ties to the smallest id)
     — "keep the longest copy" is the standard curation rule.  Returns
-    (cluster, keep_id, n_docs).  ``checkpoint_dir``: see
+    (cluster, keep_id, n_docs), one row per cluster, in no particular
+    order: the output is one row per document at worst, and a range
+    sort of it would add a sampling job and a range exchange that a
+    write does not need.  ``checkpoint_dir``: see
     :func:`connected_components` (pass on clusters)."""
     cc = connected_components(
         pairs, max_iter=max_iter, checkpoint_dir=checkpoint_dir
@@ -374,5 +380,4 @@ def dedup_clusters(
             )["id"].alias("keep_id"),
             F.count("*").alias("n_docs"),
         )
-        .orderBy("cluster")
     )

@@ -310,10 +310,10 @@ def test_dedup_clusters_keep_longest(spark):
         "doc_id long, n_chars long",
     )
     pairs = spark.createDataFrame([(1, 2), (2, 3)], "a long, b long")
-    got = [
+    got = sorted(
         (r.cluster, r.keep_id, r.n_docs)
         for r in dedup_clusters(docs, pairs).collect()
-    ]
+    )  # the rows come back unordered
     # cluster 1 = {1,2,3}: longest are 2 and 3 (30 chars), tie -> id 2;
     # doc 4 is a singleton cluster of itself
     assert got == [(1, 2, 3), (4, 4, 1)]
@@ -499,10 +499,10 @@ def test_graph_operators_aqe_invariant_and_conf_untouched(spark, monkeypatch):
 
     def run_all():
         cc = {(r.id, r.cluster) for r in connected_components(edges).collect()}
-        dc = [
+        dc = sorted(
             (r.cluster, r.keep_id, r.n_docs)
             for r in dedup_clusters(docs, edges).collect()
-        ]
+        )
         return cc, dc
 
     assert old == "false"
@@ -682,7 +682,8 @@ def test_connected_components_raise_frees_its_blocks(spark, monkeypatch):
 def test_dedup_clusters_curation_graph_jobs(spark):
     """On a curation-sized pair graph (~170 edges in near-cliques)
     dedup_clusters runs its components on the driver: one edge collect,
-    the label broadcast and the cluster sort's two jobs."""
+    the label broadcast and the action.  Its rows are unordered, so no
+    range sort adds a sampling job."""
     from mandoline_spark.operators.graph import dedup_clusters
 
     rng = np.random.default_rng(8)
@@ -699,11 +700,11 @@ def test_dedup_clusters_curation_graph_jobs(spark):
     edges = spark.createDataFrame(pairs, "a long, b long")
     jobs = spark.sparkContext._jsc.sc().statusTracker()
     ids0 = set(jobs.getJobIdsForGroup(None))
-    got = [
+    got = sorted(
         (r.cluster, r.keep_id, r.n_docs)
         for r in dedup_clusters(docs, edges).collect()
-    ]
-    assert len(set(jobs.getJobIdsForGroup(None)) - ids0) <= 4
+    )
+    assert len(set(jobs.getJobIdsForGroup(None)) - ids0) <= 3
     label = dict(_cc_oracle(pairs))
     members: dict = {}
     for i in sizes:

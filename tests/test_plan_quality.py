@@ -932,6 +932,27 @@ def test_constant_job_counts(spark):
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
 
+def test_cold_catalog_job_budget(spark):
+    """A first run on an empty resolved-relation cache pays no job to
+    resolve its tables (their schemas come from driver-side footer
+    reads): q04 launches the nation broadcast and the action, as a
+    warm run does."""
+    from mandoline_spark import queries
+
+    jsc = spark.sparkContext._jsc.sc()
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        queries._LOAD_CACHE.clear()
+        ids0 = set(jsc.statusTracker().getJobIdsForGroup(None))
+        df = QUERIES["q04_join_inner"](spark, SF)
+        df.select("*")._jdf.queryExecution().toRdd().count()
+        got = len(set(jsc.statusTracker().getJobIdsForGroup(None)) - ids0)
+        assert got <= 2, f"q04 on a cold cache: {got} jobs > budget 2"
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+
 def test_rare_token_screen_single_word_exchange(spark):
     """q94's df guard is a count-over-window riding the ONE word-keyed
     exchange (r8: the aggregate-then-semi-join-back shape evaluated the

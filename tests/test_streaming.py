@@ -23,9 +23,8 @@ def _write_events_file(path: str, rows: list[tuple], mtime: float) -> None:
     pdf = pd.DataFrame(
         rows, columns=["event_id", "ts", "user_id", "event_type", "value", "props"]
     )
-    # UTC micros — the fixture's TIMESTAMP(NANOS) needs a legacy read
-    # conf (see queries.load_events); synthetic files stay on the
-    # Spark-native precision instead
+    # UTC micros, Spark's native precision (the fixtures store
+    # TIMESTAMP(MICROS) as well)
     pdf["ts"] = pd.to_datetime(pdf["ts"]).dt.tz_localize("UTC").astype(
         "datetime64[us, UTC]"
     )
@@ -41,8 +40,8 @@ def test_streaming_tumbling_matches_batch(spark, tmp_path):
     """Complete-mode streaming aggregation over the fixture equals the
     batch groupBy of the same file."""
     src = tmp_path / "src"
-    # the fixture stores TIMESTAMP(NANOS); round it through Spark once so
-    # the streamed copy carries Spark-native microsecond timestamps
+    # copy the fixture (TIMESTAMP(MICROS)) into Spark-written part files
+    # for the stream source to replay
     from mandoline_spark.queries import load_events
 
     load_events(spark, "/root/testdata/sf0.001").write.parquet(str(src))
