@@ -2,12 +2,13 @@
 
 Tuned for the test environment (local[N]) but every setting is the one
 you'd want on a real cluster: Arrow for pandas UDFs, shuffle partition
-count sized to cores, and adaptive query execution (AQE) off.  The
-engine's plans are partitioned statically and its skew guards are
-explicit (``salted_join``, ``max_df``), so AQE's per-stage re-plan
-only adds about one job per query stage at the sizes benchmarked.  A
-user who wants AQE sets ``spark.sql.adaptive.enabled`` on their own
-session; no operator reads or writes it.
+count sized to cores, zstd on every exchange and spill, and adaptive
+query execution (AQE) off.  The engine's plans are partitioned
+statically and its skew guards are explicit (``salted_join``,
+``max_df``), so AQE's per-stage re-plan only adds about one job per
+query stage at the sizes benchmarked.  A user who wants AQE sets
+``spark.sql.adaptive.enabled`` on their own session; no operator reads
+or writes it, nor the exchange codec.
 """
 
 from __future__ import annotations
@@ -115,6 +116,18 @@ def get_spark(app_name: str = "mandoline_spark") -> SparkSession:
         # first session.
         .config("spark.sql.codegen.cache.maxEntries", "5000")
         .config("spark.sql.parquet.compression.codec", "zstd")
+        # Every byte Spark moves or spills (shuffle map output, broadcast
+        # blocks, shuffle and sort spill files, serialized RDD blocks) is
+        # zstd at Spark's default level 1, as the Parquet files are; lz4
+        # compresses this engine's text and row exchanges poorly.
+        # Measured against lz4: the curation benchmark's shuffle 5.23 ->
+        # 3.07 MiB (median of 12 runs each); at sf0.1, q36's
+        # id-partitioned corpus exchange 846,725 -> 397,704 B, q45's
+        # as-of exchange 1.11 -> 0.52 MB, q82's 150 -> 63 MB.  The cost
+        # is executor CPU: a bare 26 MB repartition spends ~30% more
+        # executor time, with shuffle files on local disk.  Static conf:
+        # must be set before the JVM's first session.
+        .config("spark.io.compression.codec", "zstd")
         .config("spark.sql.session.timeZone", "UTC")
         # local-mode heap serves driver AND all executor threads; sized
         # from the host (see _default_driver_mem), overridable via
